@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from .operators import global_rib as G
 from .session import empty_df
 from .operators import rollup as R
-from .state import ParquetStateStore
+from .state import ParquetStateStore, stage_concurrently
 
 
 class JobRunner:
@@ -37,23 +37,33 @@ class JobRunner:
     def run_chg_stats(self, now: dt.datetime | None = None,
                       window: dt.timedelta = dt.timedelta(minutes=5)) -> None:
         """update_chg_stats equivalent (2_aggregations.sql:87-133):
-        recompute the trailing window and merge-replace by bucket key."""
+        recompute the trailing window and merge-replace by bucket key.
+
+        The log is scanned once: the union of the 1-min and 2-min
+        windows is sliced and materialized, and the three stats
+        tables aggregate that slice (each re-applies its own window)
+        and stage concurrently."""
         now = now or dt.datetime.utcnow()
-        log = self.store.read("ip_rib_log")
+        log = self.store.read("ip_rib_log").filter(
+            R.window_pred(now, window, 60) | R.window_pred(now, window, 120)
+        ).localCheckpoint()
+        merged = []
+        for table, fresh, keys in (
+            ("stats_chg_bypeer", R.chg_stats_bypeer(log, now, window),
+             ["interval_time", "peer_hash_id"]),
+            ("stats_chg_byasn", R.chg_stats_byasn(log, now, window),
+             ["interval_time", "peer_hash_id", "origin_as"]),
+            ("stats_chg_byprefix", R.chg_stats_byprefix(log, now, window),
+             ["interval_time", "peer_hash_id", "prefix"]),
+        ):
+            cur = self.store.read(table, fresh.schema)
+            merged.append((table, R.merge_replace(cur, fresh, keys)))
         # one transaction for all three stats tables: a crash cannot
         # leave bypeer updated but byasn stale (the reference's
         # update_chg_stats is likewise one plpgsql transaction)
         with self.store.transaction() as txn:
-            for table, fresh, keys in (
-                ("stats_chg_bypeer", R.chg_stats_bypeer(log, now, window),
-                 ["interval_time", "peer_hash_id"]),
-                ("stats_chg_byasn", R.chg_stats_byasn(log, now, window),
-                 ["interval_time", "peer_hash_id", "origin_as"]),
-                ("stats_chg_byprefix", R.chg_stats_byprefix(log, now, window),
-                 ["interval_time", "peer_hash_id", "prefix"]),
-            ):
-                cur = self.store.read(table, fresh.schema)
-                txn.replace(table, R.merge_replace(cur, fresh, keys))
+            stage_concurrently(*(
+                lambda t=t, df=df: txn.replace(t, df) for t, df in merged))
 
     def _replace_keep_layout(self, txn, table: str, df) -> None:
         """Replace a table without silently de-bucketing it."""

@@ -2,12 +2,11 @@
 update_global_ip_rib 2_aggregations.sql:181-275, sync variant
 :280-353, purge :166-175; SURVEY A5/J7/J8/P10).
 
-Scale: the consolidation is one groupBy(prefix, origin_as) over the
-incremental slice of ip_rib (timestamp-pruned), with exact
-count-distinct over peers. At 100 TB the two-level aggregation
-(partial per partition, final per key) is what Spark already plans;
-for extreme peer cardinality swap ``countDistinct`` for
-``approx_count_distinct`` with documented tolerance (SURVEY §7).
+Scale: the consolidation is a groupBy(prefix, origin_as, peer) then
+groupBy(prefix, origin_as) over the incremental slice of ip_rib
+(timestamp-pruned), with exact distinct-peer counts and no Expand;
+for extreme peer cardinality swap in ``approx_count_distinct`` with
+documented tolerance (SURVEY §7).
 IRR is an equi-join (broadcast — info_route is small); RPKI is the
 bucketed containment join from operators.lpm with the ROA table
 broadcast.
@@ -29,29 +28,49 @@ def consolidate(ip_rib: DataFrame, start_time: dt.datetime | None,
     """A5 (2_aggregations.sql:210-233): GROUP BY (prefix, origin_as)
     over rows changed since start_time, excluding AS_TRANS.
 
-    ``approx_distinct`` swaps exact countDistinct for HyperLogLog++
-    (default rsd 5%) — SURVEY §7 known-hard #4: at 100 TB the exact
-    distinct peers per prefix needs an expand+two-phase shuffle; the
-    sketch aggregates in one pass with fixed memory per key. Keep
-    exact for the oracle gate; flip on for extreme peer cardinality
-    with the deviation documented."""
-    cd = F.approx_count_distinct if approx_distinct else F.countDistinct
+    The exact distinct-peer counts run as two plain aggregations, not
+    three ``countDistinct``s (which plan an Expand that replicates
+    every row once per distinct column): first per (prefix, origin,
+    peer), keeping the min/max of ``is_withdrawn``, then per (prefix,
+    origin), where a peer advertises iff its min is 0 and withdraws
+    iff its max is 1. Null peers and null ``is_withdrawn`` drop out of
+    the counts exactly as they do under ``countDistinct``.
+
+    ``approx_distinct`` swaps the exact counts for HyperLogLog++
+    (default rsd 5%) over the raw rows in one aggregation — SURVEY §7
+    known-hard #4: fixed memory per key at extreme peer cardinality.
+    Keep exact for the oracle gate; flip on with the deviation
+    documented."""
     rib = ip_rib.filter(F.col("origin_as") != 23456)  # P2
     if start_time is not None:
         rib = rib.filter((F.col("timestamp") >= F.lit(start_time))
                          | (F.col("first_added_timestamp") >= F.lit(start_time)))
+    withdrawn = F.col("is_withdrawn").cast("int")
+    maxed = ["prefix_len", "timestamp", "prefix_start", "prefix_end",
+             "prefix_base_hi", "prefix_base_lo"]
+    if approx_distinct:
+        count = F.approx_count_distinct
+        rows = rib.withColumn("__w_min", withdrawn) \
+            .withColumn("__w_max", withdrawn)
+    else:
+        count = F.count
+        rows = rib.groupBy("prefix", "origin_as", "peer_hash_id").agg(
+            *(F.max(c).alias(c) for c in maxed),
+            F.min("first_added_timestamp").alias("first_added_timestamp"),
+            F.min(withdrawn).alias("__w_min"),
+            F.max(withdrawn).alias("__w_max"))
+    peer = F.col("peer_hash_id")
     return (
-        rib.groupBy("prefix", F.col("origin_as").alias("recv_origin_as"))
+        rows.groupBy("prefix", F.col("origin_as").alias("recv_origin_as"))
         .agg(
             F.max("prefix_len").alias("prefix_len"),
-            F.min(F.col("is_withdrawn").cast("int")).cast("boolean")
-             .alias("is_withdrawn"),  # bool_and
+            F.min("__w_min").cast("boolean").alias("is_withdrawn"),  # bool_and
             F.max("timestamp").alias("timestamp"),
             F.min("first_added_timestamp").alias("first_added_timestamp"),
-            cd("peer_hash_id").alias("num_peers"),
-            cd(F.when(~F.col("is_withdrawn"), F.col("peer_hash_id")))
+            count(peer).alias("num_peers"),
+            count(F.when(F.col("__w_min") == 0, peer))
              .alias("advertising_peers"),
-            cd(F.when(F.col("is_withdrawn"), F.col("peer_hash_id")))
+            count(F.when(F.col("__w_max") == 1, peer))
              .alias("withdrawn_peers"),
             F.max("prefix_start").alias("prefix_start"),
             F.max("prefix_end").alias("prefix_end"),

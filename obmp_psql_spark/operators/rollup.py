@@ -30,14 +30,17 @@ def floor_ts(t: dt.datetime, seconds: int) -> dt.datetime:
     return dt.datetime.utcfromtimestamp(epoch // seconds * seconds)
 
 
-def _window_slice(log: DataFrame, now: dt.datetime, window: dt.timedelta,
-                  seconds: int) -> DataFrame:
-    """WHERE ts >= floor(now)-window AND ts < floor(now) — excludes
-    the in-progress bucket (2_aggregations.sql:98-99)."""
+def window_pred(now: dt.datetime, window: dt.timedelta, seconds: int):
+    """ts >= floor(now)-window AND ts < floor(now) — excludes the
+    in-progress bucket (2_aggregations.sql:98-99)."""
     hi = floor_ts(now, seconds)
     lo = hi - window
-    return log.filter((F.col("timestamp") >= F.lit(lo))
-                      & (F.col("timestamp") < F.lit(hi)))
+    return (F.col("timestamp") >= F.lit(lo)) & (F.col("timestamp") < F.lit(hi))
+
+
+def _window_slice(log: DataFrame, now: dt.datetime, window: dt.timedelta,
+                  seconds: int) -> DataFrame:
+    return log.filter(window_pred(now, window, seconds))
 
 
 def chg_stats_bypeer(log: DataFrame, now: dt.datetime,

@@ -22,21 +22,6 @@ BNLJ_WHITELIST: dict[str, str] = {
     # k ≪ N centroid codebook broadcast to every vector partition —
     # the canonical IVF assignment join
     "q_ann_ivf": "broadcast-centroid IVF assignment (k centroids)",
-    # bounded probe set (guarded collect/limit) broadcast against the
-    # item scan — the brute-force exact-top-k baseline
-    "q_ann_topk": "broadcast bounded probe set vs item scan",
-    "q_multimodal_retrieval": "broadcast bounded probe set vs item scan",
-    # kNN classify reuses the exact-top-k shape: bounded query slice
-    # (vec_id % 40 == 0) broadcast against the item scan
-    "q_knn_classify": "broadcast bounded probe set vs item scan",
-    # the recall companions re-run their approximate operator AND the
-    # exact baseline: both sides inherit the bounded broadcast shapes
-    # above (probe sets are bounded by the dumped approximate result,
-    # which is itself probe-limited at construction)
-    "q_ann_pq_recall": "broadcast bounded probe set (<=50) vs item scan",
-    "q_ann_ivf_recall": "broadcast centroids + bounded probe set (<=200)",
-    "q_ann_arrow_recall": "broadcast bounded probe set (<=10) vs item scan",
-    "q_multimodal_recall": "broadcast bounded probe set (<=5) vs item scan",
     # 1-row fingerprint-count census broadcast into the occupancy-
     # adaptive cap expression (finding 31) — the scalar-subquery
     # pattern; the exact/fixed-cap sides of the same gates stay

@@ -919,14 +919,17 @@ def _knn_oracle() -> str:
                "label-propagation / weak-supervision pass for "
                "auto-labeling an unlabeled corpus slice from a "
                "labeled seed set",
-    doc=f"exact cosine top-{_KNN_K} per query (broadcast query side) "
-        "-> neighbor-label votes -> majority with (votes desc, label "
-        "asc) tie-break; integer votes keep the verdict hash-stable",
+    doc=f"exact cosine top-{_KNN_K} per query (collected query side, "
+        "exact Arrow kernel over the item scan) -> neighbor-label "
+        "votes -> majority with (votes desc, label asc) tie-break; "
+        "integer votes keep the verdict hash-stable",
 )
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scoring pass reuses cosine_topk's shape: broadcast the
-    bounded query side, scan the item partitions once, per-query
-    top-k via partial window trim — no all-pairs shuffle. The vote
+    """The scoring pass is ``cosine_topk_exact_arrow``: the bounded
+    query side is collected to the driver once, the item partitions
+    are scanned once by the Arrow kernel (bit-identical to the
+    interpreted cosine folds), and each query keeps its top-k via a
+    window trim — no all-pairs join, no shuffle of pairs. The vote
     agg is O(queries x k) rows. At 100 TB the same plan swaps the
     exact scan for the IVF/PQ candidate generator; the vote/verdict
     stages are unchanged (they only see (query, neighbor_label)

@@ -26,7 +26,10 @@ protocol directly on parquet + a JSON transaction log:
 * commit records can carry ``meta`` key/values (job watermarks), so
   "data + the watermark describing it" commit together — the
   reference gets this for free from Postgres transactional cron
-  functions (2_aggregations.sql:189-201).
+  functions (2_aggregations.sql:189-201);
+* every staging action records the schema it wrote (Delta's
+  ``metaData.schemaString``), so reads hand Spark the schema instead
+  of running a parquet footer-inference job per read root.
 
 Scale notes: at 100 TB the commit log stays tiny (one small JSON per
 micro-batch; checkpoint/compact periodically like Delta does), state
@@ -64,6 +67,26 @@ def _has_parquet(path: str) -> bool:
         if any(f.endswith(".parquet") for f in files):
             return True
     return False
+
+
+def _read_schema(dtype: T.DataType) -> T.DataType:
+    """The schema Spark's parquet reader infers for data written as
+    ``dtype``: the same types with every field, array element and map
+    value nullable (the file source's ``asNullable``)."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _read_schema(f.dataType), True, f.metadata)
+            for f in dtype.fields])
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_read_schema(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(_read_schema(dtype.keyType),
+                         _read_schema(dtype.valueType), True)
+    return dtype
+
+
+def _schema_string(df: DataFrame) -> str:
+    return _read_schema(df.schema).json()
 
 
 def bucket_of(key_cols: list[str], n_buckets: int):
@@ -135,7 +158,8 @@ class _Snapshot:
         self.version = -1
         # table -> {"replace": dir|None, "appends": [dir, ...],
         #           "history": [superseded dirs, newest last],
-        #           "n_buckets": int|None, "buckets": {bucket: dir}}
+        #           "n_buckets": int|None, "buckets": {bucket: dir},
+        #           "schemas": {live dir: recorded schema JSON}, ...}
         self.tables: dict[str, dict] = {}
         self.txns: dict[str, int] = {}   # app -> highest committed version
         self.meta: dict[str, str] = {}
@@ -145,7 +169,21 @@ class _Snapshot:
         return {"replace": None, "appends": [], "history": [],
                 "n_buckets": None, "buckets": {}, "key_cols": None,
                 "append_parts": {},  # append dir -> partition values
-                "partition_col": None}  # the recorded chunk column
+                "partition_col": None,  # the recorded chunk column
+                "schemas": {}}  # live dir -> schema JSON it was written with
+
+    @staticmethod
+    def _retire(tab: dict, dirs) -> None:
+        """Move superseded dirs to history; their schemas leave the
+        live map (time travel replays its own snapshot)."""
+        for d in dirs:
+            tab["history"].append(d)
+            tab["schemas"].pop(d, None)
+
+    @staticmethod
+    def _record_schema(tab: dict, act: dict, d: str) -> None:
+        if act.get("schema"):
+            tab["schemas"][d] = act["schema"]
 
     def apply(self, version: int, commit: dict) -> None:
         self.version = version
@@ -153,32 +191,36 @@ class _Snapshot:
             tab = self.tables.setdefault(act["table"], self._new_tab())
             if act["kind"] == "replace":
                 if tab["replace"] is not None:
-                    tab["history"].append(tab["replace"])
+                    self._retire(tab, [tab["replace"]])
                 # appends before a replace are superseded (the replace
                 # result was computed FROM them); keep for lazy readers
-                tab["history"].extend(tab["appends"])
-                tab["history"].extend(sorted(set(tab["buckets"].values())))
+                self._retire(tab, tab["appends"])
+                self._retire(tab, sorted(set(tab["buckets"].values())))
                 tab["appends"] = []
                 tab["append_parts"] = {}  # chunk metadata of superseded appends
                 tab["buckets"] = {}
                 tab["n_buckets"] = None
                 tab["replace"] = act["dir"] if act.get("has_files") else None
+                if tab["replace"]:
+                    self._record_schema(tab, act, tab["replace"])
                 # a checkpoint's folded replace carries the recorded
                 # chunk column so range-preserving compaction survives
                 # log folding even when no append action remains live
                 if act.get("partition_col"):
                     tab["partition_col"] = act["partition_col"]
             elif act["kind"] == "replace_bucketed":
-                tab["history"].extend(tab["appends"])
-                tab["history"].extend(sorted(set(tab["buckets"].values())))
+                self._retire(tab, tab["appends"])
+                self._retire(tab, sorted(set(tab["buckets"].values())))
                 if tab["replace"] is not None:
-                    tab["history"].append(tab["replace"])
+                    self._retire(tab, [tab["replace"]])
                 tab["appends"] = []
                 tab["append_parts"] = {}
                 tab["replace"] = None
                 tab["n_buckets"] = int(act["n_buckets"])
                 tab["key_cols"] = act.get("key_cols")
                 tab["buckets"] = {int(k): act["dir"] for k in act["present"]}
+                if tab["buckets"]:
+                    self._record_schema(tab, act, act["dir"])
             elif act["kind"] == "merge_buckets":
                 tab["n_buckets"] = int(act["n_buckets"])
                 tab["key_cols"] = act.get("key_cols") or tab["key_cols"]
@@ -191,16 +233,20 @@ class _Snapshot:
                         tab["buckets"].pop(k, None)  # bucket emptied
                 # dirs that no longer serve any bucket are superseded
                 after = set(tab["buckets"].values())
-                tab["history"].extend(sorted(before - after))
+                self._retire(tab, sorted(before - after))
+                if act["dir"] in after:
+                    self._record_schema(tab, act, act["dir"])
             elif act["kind"] == "checkpoint_buckets":
                 # emitted only by checkpoint_log: verbatim bucket map
                 tab["n_buckets"] = int(act["n_buckets"])
                 tab["key_cols"] = act.get("key_cols")
                 tab["buckets"] = {int(k): d
                                   for k, d in act["buckets"].items()}
+                tab["schemas"].update(act.get("schemas") or {})
             elif act["kind"] == "append":
                 if act.get("has_files"):
                     tab["appends"].append(act["dir"])
+                    self._record_schema(tab, act, act["dir"])
                     if act.get("partitions"):
                         tab["append_parts"][act["dir"]] = act["partitions"]
                     if act.get("partition_col"):
@@ -214,7 +260,7 @@ class _Snapshot:
                                   if a not in dropped]
                 for a in dropped:
                     tab["append_parts"].pop(a, None)
-                tab["history"].extend(sorted(dropped))
+                self._retire(tab, sorted(dropped))
         txn = commit.get("txn")
         if txn:
             prev = self.txns.get(txn["app"], -1)
@@ -268,7 +314,8 @@ class Transaction:
             self._staged_dirs.append(d)
             self.actions.append({"table": table, "kind": "replace",
                                  "dir": self.store._rel(d),
-                                 "has_files": _has_parquet(d)})
+                                 "has_files": _has_parquet(d),
+                                 "schema": _schema_string(df)})
 
     def append(self, table: str, df: DataFrame,
                partition_by: str | None = None) -> None:
@@ -289,7 +336,7 @@ class Transaction:
         never degenerates when chunks outnumber rows-per-chunk."""
         d = self.store._stage_dir(table, "a")
         act = {"table": table, "kind": "append",
-               "dir": self.store._rel(d)}
+               "dir": self.store._rel(d), "schema": _schema_string(df)}
         if partition_by:
             # the chunk column is table-level metadata (last writer
             # wins in the snapshot): a second writer appending with a
@@ -361,7 +408,8 @@ class Transaction:
                 "table": table, "kind": "replace_bucketed",
                 "dir": self.store._rel(d), "n_buckets": n_buckets,
                 "key_cols": list(key_cols),
-                "present": _present_buckets(d)})
+                "present": _present_buckets(d),
+                "schema": _schema_string(df)})
 
     def merge_buckets(self, table: str, df: DataFrame,
                       key_cols: list[str], n_buckets: int,
@@ -392,7 +440,8 @@ class Transaction:
                 "dir": self.store._rel(d), "n_buckets": n_buckets,
                 "key_cols": list(key_cols),
                 "touched": sorted(int(b) for b in touched),
-                "present": _present_buckets(d)})
+                "present": _present_buckets(d),
+                "schema": _schema_string(df)})
 
     def set_meta(self, key: str, value: str) -> None:
         """Commit-scoped metadata (e.g. a job watermark) — becomes
@@ -501,6 +550,24 @@ class TxnStateStore:
                 f"exceeded): {missing[:3]}")
         return self._read_tab(tab, table, schema)
 
+    def _parquet(self, tab: dict, dirs: list[str],
+                 paths: list[str]) -> DataFrame:
+        """Read ``paths`` (under the committed ``dirs``) with the
+        schema their commit actions recorded — no footer-inference
+        job. Several dirs with different recorded schemas (a column
+        added between bucket generations) read as the union of their
+        fields, as parquet schema merging would. A dir committed
+        without a recorded schema (an older log) is inferred."""
+        recorded = [tab["schemas"].get(d) for d in dict.fromkeys(dirs)]
+        if not all(recorded):
+            return self.spark.read.parquet(*paths)
+        fields: dict[str, T.StructField] = {}
+        for js in dict.fromkeys(recorded):
+            for f in T.StructType.fromJson(json.loads(js)).fields:
+                fields.setdefault(f.name, f)
+        return self.spark.read.schema(
+            T.StructType(list(fields.values()))).parquet(*paths)
+
     def _read_tab(self, tab: dict | None,
                   table: str, schema: T.StructType | None) -> DataFrame:
         """Assemble a snapshot DataFrame from a table's commit entry.
@@ -517,14 +584,12 @@ class TxnStateStore:
         groups: list[DataFrame] = []
         if tab:
             if tab["replace"]:
-                groups.append(
-                    self.spark.read.parquet(self._abs(tab["replace"])))
-            bucket_paths = [
-                os.path.join(self._abs(d), f"_bucket={k}")
-                for k, d in sorted(tab["buckets"].items())]
-            if bucket_paths:
-                groups.append(self.spark.read.parquet(*bucket_paths))
-            groups.extend(self.spark.read.parquet(self._abs(p))
+                groups.append(self._parquet(
+                    tab, [tab["replace"]], [self._abs(tab["replace"])]))
+            if tab["buckets"]:
+                groups.append(self._read_bucket_dirs(
+                    tab, sorted(tab["buckets"])))
+            groups.extend(self._parquet(tab, [p], [self._abs(p)])
                           for p in tab["appends"])
         if groups:
             out = groups[0]
@@ -540,14 +605,17 @@ class TxnStateStore:
         a partial merge (every other bucket's files are untouched, so
         the merge never scans them)."""
         tab = self.snapshot().tables.get(table)
-        paths = []
-        if tab:
-            paths = [os.path.join(self._abs(tab["buckets"][k]), f"_bucket={k}")
-                     for k in buckets if k in tab["buckets"]]
-        if paths:
-            return self.spark.read.parquet(*paths)
+        live = [k for k in buckets if k in tab["buckets"]] if tab else []
+        if live:
+            return self._read_bucket_dirs(tab, live)
         schema = schema or TABLE_SCHEMAS[table]
         return empty_df(self.spark, schema)
+
+    def _read_bucket_dirs(self, tab: dict, buckets: list[int]) -> DataFrame:
+        dirs = [tab["buckets"][k] for k in buckets]
+        return self._parquet(tab, dirs, [
+            os.path.join(self._abs(d), f"_bucket={k}")
+            for k, d in zip(buckets, dirs)])
 
     def bucket_map(self, table: str) -> dict[int, str]:
         """bucket id -> committed dir (relative); for tests/ops."""
@@ -888,9 +956,11 @@ class TxnStateStore:
                 base.apply(int(name[:-5]), json.load(f))
         actions = []
         for table, tab in base.tables.items():
+            schemas = tab["schemas"]
             if tab["replace"]:
                 act = {"table": table, "kind": "replace",
-                       "dir": tab["replace"], "has_files": True}
+                       "dir": tab["replace"], "has_files": True,
+                       "schema": schemas.get(tab["replace"])}
                 if tab["partition_col"]:
                     act["partition_col"] = tab["partition_col"]
                 actions.append(act)
@@ -899,10 +969,14 @@ class TxnStateStore:
                                 "n_buckets": tab["n_buckets"],
                                 "key_cols": tab["key_cols"],
                                 "buckets": {str(k): d for k, d
-                                            in tab["buckets"].items()}})
+                                            in tab["buckets"].items()},
+                                "schemas": {d: schemas[d] for d in
+                                            set(tab["buckets"].values())
+                                            if d in schemas}})
             for d in tab["appends"]:
                 act = {"table": table, "kind": "append",
-                       "dir": d, "has_files": True}
+                       "dir": d, "has_files": True,
+                       "schema": schemas.get(d)}
                 if d in tab["append_parts"]:
                     act["partitions"] = tab["append_parts"][d]
                 if tab["partition_col"]:

@@ -188,3 +188,72 @@ def test_views_layer(spark):
 
     vp = spark.sql("SELECT peer_name, router_state FROM v_peers").collect()
     assert len(vp) == 3
+
+
+def _consolidate_count_distinct(ip_rib, start_time):
+    """The single-aggregation reference: three exact countDistinct
+    columns over the raw rows."""
+    rib = ip_rib.filter(F.col("origin_as") != 23456)
+    if start_time is not None:
+        rib = rib.filter((F.col("timestamp") >= F.lit(start_time))
+                         | (F.col("first_added_timestamp") >= F.lit(start_time)))
+    cd, peer = F.countDistinct, F.col("peer_hash_id")
+    return rib.groupBy("prefix", F.col("origin_as").alias("recv_origin_as")) \
+        .agg(F.max("prefix_len").alias("prefix_len"),
+             F.min(F.col("is_withdrawn").cast("int")).cast("boolean")
+             .alias("is_withdrawn"),
+             F.max("timestamp").alias("timestamp"),
+             F.min("first_added_timestamp").alias("first_added_timestamp"),
+             cd(peer).alias("num_peers"),
+             cd(F.when(~F.col("is_withdrawn"), peer)).alias("advertising_peers"),
+             cd(F.when(F.col("is_withdrawn"), peer)).alias("withdrawn_peers"),
+             F.max("prefix_start").alias("prefix_start"),
+             F.max("prefix_end").alias("prefix_end"),
+             F.max("prefix_base_hi").alias("prefix_base_hi"),
+             F.max("prefix_base_lo").alias("prefix_base_lo"))
+
+
+def test_consolidate_two_level_equals_count_distinct(spark):
+    """The Expand-free consolidation equals three countDistincts on
+    add-path duplicates (one peer, two rows, one prefix), a null
+    peer, a null is_withdrawn, peers mixed withdrawn and advertised,
+    and with or without a start time."""
+    names = [f.name for f in TABLE_SCHEMAS["ip_rib"].fields]
+
+    def row(peer, prefix, origin, withdrawn, minute, path_id=0):
+        r = dict(hash_id=f"{peer}{prefix}{path_id}", peer_hash_id=peer,
+                 base_attr_hash_id="a", is_ipv4=True, origin_as=origin,
+                 prefix=prefix, prefix_len=16, timestamp=ts(minute),
+                 first_added_timestamp=ts(0), is_withdrawn=withdrawn,
+                 path_id=path_id, labels="", is_pre_policy=False,
+                 is_adj_rib_in=True, prefix_start=minute,
+                 prefix_end=minute + 1, prefix_base_hi=0,
+                 prefix_base_lo=minute)
+        return tuple(r[n] for n in names)
+
+    rib = spark.createDataFrame([
+        # add-path: p1 holds two paths, one withdrawn, one advertised
+        row("p1", "10.1.0.0", 1, False, 5, path_id=1),
+        row("p1", "10.1.0.0", 1, True, 6, path_id=2),
+        row("p2", "10.1.0.0", 1, True, 7),
+        row(None, "10.1.0.0", 1, False, 8),    # null peer
+        row("p3", "10.1.0.0", 1, None, 9),     # null is_withdrawn
+        row("p1", "10.2.0.0", 2, True, 2),     # all withdrawn
+        row("p2", "10.2.0.0", 2, True, 3, path_id=1),
+        row("p2", "10.2.0.0", 2, True, 4, path_id=2),
+        row("p4", "10.3.0.0", 3, None, 6),     # only a null flag
+        row(None, "10.3.0.0", 3, None, 7),
+        row("p1", "10.4.0.0", 23456, False, 5),  # AS_TRANS dropped
+    ], TABLE_SCHEMAS["ip_rib"])
+    for start in (None, ts(4)):
+        got = G.consolidate(rib, start)
+        want = _consolidate_count_distinct(rib, start)
+        assert got.columns == want.columns
+        assert sorted(map(repr, got.collect())) == \
+            sorted(map(repr, want.collect()))
+        assert "Expand" not in \
+            got._jdf.queryExecution().executedPlan().toString()
+    counts = {r.prefix: (r.num_peers, r.advertising_peers, r.withdrawn_peers)
+              for r in G.consolidate(rib, None).collect()}
+    assert counts == {"10.1.0.0": (3, 1, 2), "10.2.0.0": (2, 0, 2),
+                      "10.3.0.0": (1, 0, 0)}

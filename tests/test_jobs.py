@@ -424,3 +424,49 @@ def test_retention_default_policies_cover_all_log_tables(spark, tmp_path):
         assert store.read(table).count() == 1, table
         parts = store.append_partitions(table)
         assert len(parts) == 1, table  # expired chunk dropped whole
+
+
+def test_chg_stats_shared_slice_matches_full_log(spark, tmp_path):
+    """run_chg_stats aggregates one slice covering both the 1-min and
+    the 2-min windows; with ``now`` at 10:03:30 the two floors differ
+    (10:03 vs 10:02), and rows sit on every window edge. The three
+    committed tables must equal the rollup functions over the full,
+    unsliced log, merged onto the previous cycle's rows."""
+    from obmp_psql_spark.operators import rollup as R
+    from obmp_psql_spark.schemas import TABLE_SCHEMAS
+
+    def at(h, m, s=0):
+        return dt.datetime(2024, 1, 1, h, m, s)
+
+    edges = [at(9, 56, 59), at(9, 57), at(9, 57, 59), at(9, 58),
+             at(10, 1, 59), at(10, 2), at(10, 2, 59), at(10, 3),
+             at(10, 3, 29), at(10, 4, 0), at(10, 4, 30)]
+    rows = [(i % 3 == 0, f"10.{i % 4}.0.0", 16, f"a{i}", f"p{i % 2}",
+             65000 + i % 3, t)
+            for i, t in enumerate(edges) for _ in range(1 + i % 2)]
+    log = spark.createDataFrame(rows, TABLE_SCHEMAS["ip_rib_log"])
+    store = ParquetStateStore(spark, str(tmp_path))
+    store.append("ip_rib_log", log)
+    jr = JobRunner(store)
+    tables = (
+        ("stats_chg_bypeer", R.chg_stats_bypeer,
+         ["interval_time", "peer_hash_id"]),
+        ("stats_chg_byasn", R.chg_stats_byasn,
+         ["interval_time", "peer_hash_id", "origin_as"]),
+        ("stats_chg_byprefix", R.chg_stats_byprefix,
+         ["interval_time", "peer_hash_id", "prefix"]),
+    )
+    for now in (at(10, 3, 30), at(10, 5, 30)):
+        prev = {t: store.read(t, fn(log, now, dt.timedelta(minutes=5))
+                              .schema).collect() for t, fn, _ in tables}
+        version = store.snapshot().version
+        jr.run_chg_stats(now=now)
+        assert store.snapshot().version == version + 1  # one commit
+        for table, fn, keys in tables:
+            fresh = fn(log, now, dt.timedelta(minutes=5))
+            cur = spark.createDataFrame(prev[table], fresh.schema)
+            want = R.merge_replace(cur, fresh, keys)
+            got = store.read(table).select(*want.columns)
+            assert sorted(map(tuple, got.collect())) == \
+                sorted(map(tuple, want.collect())), (table, now)
+            assert want.count() > 0

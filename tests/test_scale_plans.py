@@ -128,7 +128,10 @@ def test_registry_has_no_unplanned_cross_joins(spark):
         assert violations == []
         # the whitelist must not outlive its plans: every entry still
         # produces a BNLJ, or it should be removed
-        assert set(BNLJ_WHITELIST) <= seen_bnlj
+        stale = sorted(set(BNLJ_WHITELIST) - seen_bnlj)
+        assert not stale, (
+            f"BNLJ_WHITELIST entries whose plans no longer produce a "
+            f"BroadcastNestedLoopJoin (remove them): {stale}")
     finally:
         qb.PLAN_AUDIT = False
         spark.conf.set("spark.sql.adaptive.enabled", "true")

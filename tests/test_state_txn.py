@@ -883,3 +883,122 @@ def test_concurrent_staging_commits_atomically(spark, tmp_path):
             (lambda i=i: txn.append("t3", df(spark, [(f"k{i}", i)])))
             for i in range(6)])
     assert as_dict(store, "t3") == {f"k{i}": i for i in range(6)}
+
+
+def _schema_probe_df(spark):
+    """Non-nullable columns, nested struct/array/map, decimal and
+    timestamp — everything the reader's nullable form rewrites."""
+    return spark.range(8).select(
+        F.col("id"),
+        (F.col("id") % 3).cast("short").alias("k"),
+        F.col("id").cast("string").alias("s"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+        F.array(F.col("id").cast("double")).alias("v"),
+        F.create_map(F.lit("a"), F.col("id")).alias("m"),
+        F.struct(F.col("id").alias("x")).alias("st"),
+        F.lit(1.5).cast("decimal(10,2)").alias("d"))
+
+
+def _stage_every_kind(spark, store):
+    df = _schema_probe_df(spark)
+    store.overwrite("flat", df)
+    store.append("log", df)
+    store.append("chunked", df, partition_by="k")
+    with store.transaction() as txn:
+        txn.replace_bucketed("b", df, ["id"], 4)
+    touched = [min(store.bucket_map("b"))]
+    with store.transaction() as txn:
+        txn.merge_buckets("b", store.read_buckets("b", touched), ["id"], 4,
+                          touched)
+
+
+def _jobs_planned(spark, build) -> list[int]:
+    """Spark job ids started while ``build`` runs (status store)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("recorded-schema-read", "store reads under test")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup("recorded-schema-read"))
+
+
+def test_staged_schema_equals_parquet_inference(spark, tmp_path):
+    """Every staging kind records the schema it wrote in the nullable
+    form Spark's parquet reader infers for the staged files."""
+    from pyspark.sql import types as T
+
+    store = TxnStateStore(spark, str(tmp_path / "s"))
+    _stage_every_kind(spark, store)
+    kinds = set()
+    log_dir = tmp_path / "s" / _LOG_DIR
+    for name in sorted(os.listdir(log_dir)):
+        for act in json.loads((log_dir / name).read_text())["actions"]:
+            kinds.add(act["kind"])
+            path = os.path.join(store.root, act["dir"])
+            if "present" in act:  # bucketed: each bucket dir is a root
+                path = os.path.join(path, f"_bucket={act['present'][0]}")
+            recorded = T.StructType.fromJson(json.loads(act["schema"]))
+            assert recorded == spark.read.parquet(path).schema, act["kind"]
+    assert kinds == {"replace", "append", "replace_bucketed",
+                     "merge_buckets"}
+
+
+def test_recorded_schema_reads_plan_no_job(spark, tmp_path):
+    """Reads of recorded dirs (flat, appends, bucket maps, pruned
+    buckets) start no Spark job, before and after the log is folded
+    into a checkpoint; the rows read back unchanged."""
+    store = TxnStateStore(spark, str(tmp_path / "s"))
+    _stage_every_kind(spark, store)
+    tables = ("flat", "log", "chunked", "b")
+    before = {t: sorted(map(repr, store.read(t).collect())) for t in tables}
+    for _ in range(2):
+        assert _jobs_planned(spark, lambda: [
+            store.read(t) for t in tables]) == []
+        assert _jobs_planned(spark, lambda: store.read_buckets(
+            "b", sorted(store.bucket_map("b")))) == []
+        assert {t: sorted(map(repr, store.read(t).collect()))
+                for t in tables} == before
+        store.checkpoint_log(keep=1)
+        store = TxnStateStore(spark, store.root)  # replay the checkpoint
+    live = {d for t in tables for d in (
+        [store.table_layout(t)["replace"]] + store.table_layout(t)["appends"]
+        + list(store.bucket_map(t).values())) if d}
+    snap = store.snapshot()
+    assert live == {d for t in tables for d in snap.tables[t]["schemas"]}
+
+
+def test_commit_without_schema_still_reads(spark, tmp_path):
+    """A commit record written before actions carried a schema (no
+    ``schema`` field) still reads — the reader infers the footer."""
+    root = tmp_path / "old"
+    spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string") \
+        .write.parquet(str(root / "t" / "v_old"))
+    (root / _LOG_DIR).mkdir(parents=True)
+    (root / _LOG_DIR / f"{0:020d}.json").write_text(json.dumps({
+        "actions": [{"table": "t", "kind": "replace", "dir": "t/v_old",
+                     "has_files": True}], "meta": {}, "ts": 0}))
+    store = TxnStateStore(spark, str(root))
+    assert sorted(tuple(r) for r in store.read("t").collect()) == \
+        [(1, "a"), (2, "b")]
+    store.append("t", spark.createDataFrame([(3, "c")], "id long, s string"))
+    assert store.read("t").count() == 3
+
+
+def test_bucket_generations_with_added_column_read_as_union(spark, tmp_path):
+    """A merge that adds a column leaves bucket dirs with different
+    recorded schemas; the table reads as the union of their fields,
+    with NULL for the new column in untouched buckets."""
+    store = TxnStateStore(spark, str(tmp_path / "s"))
+    df = spark.range(16).selectExpr("id", "CAST(id AS STRING) AS s")
+    with store.transaction() as txn:
+        txn.replace_bucketed("b", df, ["id"], 4)
+    touched = [min(store.bucket_map("b"))]
+    with store.transaction() as txn:
+        txn.merge_buckets("b", store.read_buckets("b", touched)
+                          .withColumn("score", F.col("id") * 2.0),
+                          ["id"], 4, touched)
+    got = {r["id"]: r["score"] for r in store.read("b").collect()}
+    fresh = {r["id"] for r in store.read_buckets("b", touched).collect()}
+    assert set(got) == set(range(16)) and fresh
+    assert all(got[i] == (i * 2.0 if i in fresh else None) for i in got)
