@@ -424,7 +424,10 @@ def extract_image_features(df: DataFrame, dim: int = 16,
     produces. The kernel is a deterministic fake — md5-seeded byte
     histogram projection — so the output feeds the ANN/similarity
     operators (cosine_topk, lsh_topk, ivf_topk) for end-to-end
-    multimodal-retrieval pipelines without an ML runtime."""
+    multimodal-retrieval pipelines without an ML runtime. The exact
+    ``cosine_topk`` collects its query vectors (max_queries·D·8 bytes
+    on the driver and in the broadcast) and scores items within a
+    fixed cell budget per task."""
     import hashlib
 
     import numpy as np

@@ -1,17 +1,19 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-- ``cosine_topk``: brute-force exact top-k — the O(N·M) baseline;
-  fine for probe sets, the oracle for recall measurements.
-- ``lsh_topk``: random-hyperplane LSH — bucket vectors by sign
-  pattern, search only bucket collisions; the 100 TB path where the
-  full cross product is impossible. Hyperplanes are deterministic
-  (seeded from index), so results are reproducible.
+- ``cosine_topk``: exact brute-force top-k, the O(N·M) baseline for
+  bounded probe sets and the exact side of every recall gate. One
+  Arrow kernel: a BLAS prefilter per item batch, then an exact rescore
+  that reproduces the ``dot``/``l2norm`` folds bit for bit. Memory
+  ceiling: max_queries·D·8 bytes collected to the driver and
+  broadcast, plus _TOPK_CELLS query x item doubles per task.
+- ``lsh_topk``, ``ivf_topk``, ``pq_topk``: the approximate scale paths
+  for when the full cross product is impossible. LSH buckets vectors
+  by sign pattern and searches only bucket collisions; its hyperplanes
+  are deterministic (seeded from index), so results are reproducible.
 
-All arithmetic is built-in column expressions (zip_with/aggregate
-over array<double>), JVM-side; dot products never cross into Python.
-For very wide vectors a Pandas-UDF BLAS path can be swapped in, but
-the expression form keeps plans fusable and is plenty at 64-1024 dims.
+The approximate operators are built-in column expressions
+(zip_with/aggregate over array<double>), JVM-side; the expression form
+keeps plans fusable and is plenty at 64-1024 dims.
 """
 
 from __future__ import annotations
@@ -78,40 +80,168 @@ def _unrolled_d2(a: str, b: str, dims: int) -> Column:
     return acc
 
 
+# cosine_topk scores each item batch in chunks of at most this many
+# query x item cells (8 MB per float64 matrix), so a task's working
+# set is a few such matrices whatever the batch and query-set sizes.
+_TOPK_CELLS = 1 << 20
+# Prefilter slack per vector dim, in float64 eps. The BLAS cosine of
+# unit vectors and the exact fold each sit within about 2·D·eps of the
+# true cosine, so 1e3·D·eps is far above the gap between them.
+_TOPK_SLACK = 1e3 * 2.0 ** -52
+# Norms inside this range keep every product, square and quotient of
+# both computations clear of overflow and underflow, which the slack
+# bound assumes; pairs outside it are never pruned.
+_TOPK_NORM_RANGE = (1e-150, 1e150)
+
+
+def _fold_norm(cols):
+    """``l2norm`` over a dims-major float64 matrix: acc = (0.0 + x0*x0)
+    + x1*x1 + ... in element order, then sqrt. Numpy's element-wise
+    ops round once per step and never fuse or regroup, so each vector
+    gets the fold's rounding chain."""
+    import numpy as np
+
+    acc = np.zeros(cols.shape[1])
+    for x in cols:
+        acc = acc + x * x
+    return np.sqrt(acc)
+
+
+def _check_vector(vid, width, expected) -> None:
+    if width is None or width != expected:
+        got = "null" if width is None else f"{width} wide"
+        raise ValueError(f"cosine_topk: the vector of id {vid} is {got}; "
+                         f"expected width {expected}")
+
+
+def _topk_chunks(q_ids, q_cols, q_norm, ids, i_cols, k: int,
+                 cells: int = _TOPK_CELLS):
+    """Yield (query_id, neighbor_id, cos) arrays holding every pair of
+    one item batch that can be in its query's exact top-k, one chunk
+    of at most ``cells`` query x item cells at a time. ``q_cols`` and
+    ``i_cols`` are dims-major float64 matrices, ``q_norm`` the query
+    norms from :func:`_fold_norm`. Self-matches (equal ids) are
+    dropped. Per chunk:
+
+    1. approximate cosines: one BLAS matmul of unit vectors;
+    2. per query, t = the k-th best approximate value among its
+       screened pairs; keep the screened pairs >= t - slack and every
+       unscreened pair;
+    3. rescore the kept pairs with the ``dot`` fold, in element order,
+       and emit cos = dot / (qn * in), the doubles the SQL folds give.
+
+    A pair is screened when its approximate value is finite and both
+    norms lie in _TOPK_NORM_RANGE. Why pruning is exact: let delta be
+    the largest gap between a screened pair's approximate and exact
+    values. At least k screened pairs reach t, so the exact k-th best
+    screened value is >= t - delta, and every screened member of the
+    exact top-k, ties included, has approximate value >= t - 2·delta,
+    which is >= t - slack. Unscreened pairs, such as a zero vector's
+    NaN that Spark's DESC order puts first, are always emitted."""
+    import numpy as np
+
+    width, n_items = i_cols.shape
+    i_norm = _fold_norm(i_cols)
+    lo_norm, hi_norm = _TOPK_NORM_RANGE
+    q_ok = (q_norm > lo_norm) & (q_norm < hi_norm)
+    i_ok = (i_norm > lo_norm) & (i_norm < hi_norm)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        q_unit = (q_cols / q_norm).T
+        i_unit = i_cols / i_norm
+    slack = _TOPK_SLACK * max(width, 1)
+    step = max(1, cells // max(n_items, 1))
+    for lo in range(0, len(q_ids), step):
+        rows = slice(lo, lo + step)
+        with np.errstate(invalid="ignore"):
+            approx = q_unit[rows] @ i_unit
+        screened = np.isfinite(approx) & q_ok[rows, None] & i_ok
+        other = q_ids[rows, None] != ids
+        approx[~(screened & other)] = -np.inf
+        if 1 <= k <= n_items:
+            t = np.partition(approx, n_items - k, axis=1)[:, n_items - k]
+            keep = (approx >= (t - slack)[:, None]) | ~screened
+        else:
+            keep = np.ones_like(other)
+        qi, ii = np.nonzero(keep & other)
+        qi += lo
+        dot = np.zeros(len(qi))
+        for qd, xd in zip(q_cols, i_cols):
+            dot = dot + qd[qi] * xd[ii]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = dot / (q_norm[qi] * i_norm[ii])
+        yield q_ids[qi], ids[ii], cos
+
+
 def cosine_topk(
     queries: DataFrame, items: DataFrame,
     query_id: str = "vec_id", item_id: str = "vec_id",
     query_vec: str = "embedding", item_vec: str = "embedding",
-    k: int = 5,
+    k: int = 5, max_queries: int = 10_000,
 ) -> DataFrame:
-    """Exact top-k by cosine per query vector (excludes self-match on
-    equal ids). Output: (query_id, neighbor_id, cos, rank).
+    """Exact top-k by cosine per query vector, self-matches (equal ids)
+    excluded. Output: (query_id, neighbor_id, cos, rank), ranked by
+    cos DESC (NaN first, Spark's order) then neighbor_id ASC.
 
-    Scale: broadcast the (small) query side; each executor scans its
-    item partitions once — no shuffle until the final per-query top-k,
-    which is a partial top-k then windowed trim."""
-    # norms precomputed per vector: cosine-per-pair would otherwise
-    # re-aggregate both norms for every pair (3x the flops)
-    q = F.broadcast(queries.select(
-        F.col(query_id).alias("query_id"),
-        as_double(F.col(query_vec)).alias("__qv"),
-    ).withColumn("__qn", l2norm(F.col("__qv"))))
-    it = items.select(
-        F.col(item_id).alias("neighbor_id"),
-        as_double(F.col(item_vec)).alias("__iv"),
-    ).withColumn("__in", l2norm(F.col("__iv")))
-    scored = (
-        q.crossJoin(it)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                (dot(F.col("__qv"), F.col("__iv"))
-                 / (F.col("__qn") * F.col("__in"))).alias("cos"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    ``cos`` is computed as the SQL folds compute it: ``l2norm`` of each
+    vector, ``dot`` summed in element order, ``dot / (qn * in)``. The
+    doubles therefore equal the interpreted expression's, and the
+    DuckDB oracles hash-match.
+
+    The query side is collected once, at most ``max_queries`` rows:
+    max_queries·D·8 bytes on the driver and in the broadcast. It is for
+    bounded probe sets; use ivf_topk/lsh_topk for corpus-vs-corpus
+    search. Each Arrow batch of items goes through
+    :func:`_topk_chunks`: a BLAS prefilter keeps about k pairs per
+    query, which are rescored exactly. The window trim's Exchange thus
+    carries about queries·k rows per batch, and a task's working set
+    is bounded by _TOPK_CELLS. A null vector, or one whose width
+    differs from the first query vector's, raises ValueError naming
+    its id (on the driver for queries, in the task for items)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = (queries.select(F.col(query_id).alias("__qid"),
+                           as_double(F.col(query_vec)).alias("__qv"))
+            .limit(max_queries + 1).collect())
+    if len(rows) > max_queries:
+        raise ValueError(
+            f"cosine_topk collects the query set; got more than "
+            f"max_queries={max_queries} rows — bounded probe sets only.")
+    spark = queries.sparkSession
+    schema = "query_id long, neighbor_id long, cos double"
+    if not rows:
+        return empty_df(spark, schema + ", rank int")
+    widths = [None if r["__qv"] is None else len(r["__qv"]) for r in rows]
+    dims = next((n for n in widths if n is not None), None)
+    for r, n in zip(rows, widths):
+        _check_vector(r["__qid"], n, dims)
+    q_ids = np.array([r["__qid"] for r in rows], dtype=np.int64)
+    q_cols = np.array([r["__qv"] for r in rows],
+                      dtype=np.float64).reshape(len(rows), dims).T.copy()
+    bc = spark.sparkContext.broadcast((q_ids, q_cols, _fold_norm(q_cols)))
+    out = pa.schema([("query_id", pa.int64()), ("neighbor_id", pa.int64()),
+                     ("cos", pa.float64())])
+
+    def score(batches):
+        q_ids, q_cols, q_norm = bc.value
+        for b in batches:
+            ids = b.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            vecs = b.column(1)
+            lens = pc.fill_null(pc.list_value_length(vecs), -1).to_numpy()
+            for j in np.flatnonzero(lens != dims)[:1]:  # first bad one
+                _check_vector(ids[j], None if lens[j] < 0 else lens[j], dims)
+            i_cols = (vecs.flatten().to_numpy(zero_copy_only=False)
+                      .astype(np.float64).reshape(len(ids), dims).T.copy())
+            for cols in _topk_chunks(q_ids, q_cols, q_norm, ids, i_cols, k):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c) for c in cols], schema=out)
+
+    scored = items.select(item_id, item_vec).mapInArrow(score, schema)
+    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(),
+                                          F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
 
 
 def hyperplane_bucket(vec: Column, dims: int, n_planes: int = 8) -> Column:
@@ -269,164 +399,6 @@ def embedding_neardup_pairs(
     )
 
 
-def cosine_topk_arrow(
-    queries: DataFrame, items: DataFrame,
-    query_id: str = "vec_id", item_id: str = "vec_id",
-    query_vec: str = "embedding", item_vec: str = "embedding",
-    k: int = 5, max_queries: int = 100_000,
-) -> DataFrame:
-    """Arrow/numpy brute-force top-k: the wide-vector scale path.
-
-    The expression-based ``cosine_topk`` keeps bit-exact parity with
-    the SQL oracle but evaluates higher-order functions interpreted
-    (no codegen); this variant ships the query matrix to every
-    partition and runs one BLAS matmul per Arrow batch — 10-100x
-    faster at high dims/large k, with float summation order differing
-    in the last ulp (hence rows-only verification, not hash parity).
-
-    The query side is ``collect()``ed to the driver and broadcast:
-    bounded-probe-set-only by design. ``max_queries`` guards against
-    accidentally feeding the full corpus as queries (use ``ivf_topk``
-    or ``lsh_topk`` for corpus-vs-corpus search).
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.limit(max_queries + 1).select(query_id, query_vec).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_arrow collects the query set to the driver; got "
-            f"more than max_queries={max_queries} rows — this path is for "
-            f"bounded probe sets. Use ivf_topk/lsh_topk for large query sides "
-            f"or raise max_queries deliberately.")
-    spark0 = queries.sparkSession
-    if not q_rows:  # empty probe set: empty result, not a numpy axis error
-        return empty_df(
-            spark0, "query_id long, neighbor_id long, cos double, rank int")
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def score(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:  # empty Arrow batch: nothing to score
-                continue
-            iv = np.array(list(pdf[item_vec]), dtype=np.float64)
-            iv /= np.linalg.norm(iv, axis=1, keepdims=True)
-            sims = iv @ mat.T  # (batch, n_queries)
-            out = pd.DataFrame({
-                "query_id": np.repeat(ids, len(pdf)),
-                "neighbor_id": np.tile(pdf[item_id].values, len(ids)),
-                "cos": sims.T.ravel(),
-            })
-            yield out[out.query_id != out.neighbor_id]
-
-    scored = items.select(item_id, item_vec).mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos double")
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def cosine_topk_exact_arrow(
-    queries: DataFrame, items: DataFrame,
-    query_id: str = "vec_id", item_id: str = "vec_id",
-    query_vec: str = "embedding", item_vec: str = "embedding",
-    k: int = 5, max_queries: int = 10_000,
-) -> DataFrame:
-    """Bit-identical Arrow twin of :func:`cosine_topk` — same rows,
-    same ``cos`` doubles, ~20x less compute time.
-
-    ``cosine_topk`` evaluates the dot/norm folds as interpreted
-    higher-order functions: measured ~100 ns per element-multiply at
-    sf0.1 (200 probes x 2000 items x 64 dims = 2.4 s). This kernel
-    reproduces the EXACT floating-point operation sequence of those
-    folds, just vectorized across rows instead of across dims:
-
-    - norms: ``acc = (((0.0 + x0*x0) + x1*x1) + ...)`` then sqrt —
-      the kernel accumulates dim-sequentially over numpy element-wise
-      ops (one IEEE mul + one IEEE add rounding per dim per row, no
-      FMA, no pairwise regrouping), which performs the identical
-      rounding chain per element;
-    - dot: same dim-sequential fold of ``q_d * i_d``;
-    - ``cos = dot / (qn * in)`` in the same association.
-
-    Vectorizing across ROWS changes which element is computed when,
-    never how any single element rounds — so the emitted doubles are
-    equal, the (cos DESC, neighbor_id ASC) order is equal, and the
-    top-k SET is equal. (Contrast ``cosine_topk_arrow``, which
-    normalizes then matmuls — BLAS pairwise summation, last-ulp
-    divergence, rows-only verification.)
-
-    The query side is collected and broadcast (bounded probe sets
-    only, same contract as ``cosine_topk_arrow``)."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = (queries.select(F.col(query_id).alias("__qid"),
-                             as_double(F.col(query_vec)).alias("__qv"))
-              .limit(max_queries + 1).collect())
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_exact_arrow collects the query set; got more "
-            f"than max_queries={max_queries} rows — bounded probe sets "
-            f"only.")
-    spark0 = queries.sparkSession
-    if not q_rows:
-        return empty_df(
-            spark0, "query_id long, neighbor_id long, cos double, rank int")
-    q_ids = [r["__qid"] for r in q_rows]
-    q_mat = np.array([r["__qv"] for r in q_rows], dtype=np.float64)
-    # query norms: plain-Python floats ARE IEEE doubles; this is the
-    # same ((0.0 + x*x) + ...) chain l2norm folds
-    import math
-    q_norm = []
-    for v in q_mat:
-        acc = 0.0
-        for x in v:
-            acc = acc + float(x) * float(x)
-        q_norm.append(math.sqrt(acc))
-    bc = spark0.sparkContext.broadcast(
-        (q_ids, q_mat, np.array(q_norm, dtype=np.float64)))
-
-    def score(batches):
-        ids, qmat, qn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            iv = np.array(list(pdf[item_vec]), dtype=np.float64)
-            # item norms, dim-sequential (see docstring)
-            acc = np.zeros(len(iv))
-            for d in range(iv.shape[1]):
-                x = iv[:, d]
-                acc = acc + x * x
-            inorm = np.sqrt(acc)
-            nid = pdf[item_id].values
-            out = []
-            for qi, qid in enumerate(ids):
-                q = qmat[qi]
-                dotv = np.zeros(len(iv))
-                for d in range(iv.shape[1]):
-                    dotv = dotv + q[d] * iv[:, d]
-                out.append(pd.DataFrame({
-                    "query_id": qid,
-                    "neighbor_id": nid,
-                    "cos": dotv / (qn[qi] * inorm)}))
-            yield pd.concat(out, ignore_index=True)
-
-    scored = (items.select(item_id, item_vec)
-              .mapInPandas(score,
-                           schema="query_id long, neighbor_id long, "
-                                  "cos double")
-              .filter(F.col("query_id") != F.col("neighbor_id")))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                          F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
 def _probe_cosine(base: DataFrame, cand_rows, n: int) -> DataFrame:
     """(__id, __v, __n, __cid, __cr): per-row top-``n`` centroids by
     cosine in the (csim DESC, cid ASC) order of the previous window
@@ -537,7 +509,7 @@ def ivf_topk(
     Output: (query_id, neighbor_id, cos, rank) per probed pair.
 
     ``max_queries`` bounds the PROBE side to the lowest-id vectors
-    (same convention as ``pq_topk``/``cosine_topk_arrow``); the index
+    (same convention as ``pq_topk``); the index
     side stays the full corpus. The distinction matters for scaling:
     per-QUERY cost is ~nprobe x N/C (sub-linear in N with C ~
     sqrt(N) — the serving-path claim), but querying the WHOLE corpus
@@ -644,7 +616,7 @@ def pq_topk(
       one shuffle, map-side combinable.
 
     ``max_queries`` bounds the probe set (lowest ids, like
-    cosine_topk_arrow): the scan side stays the full corpus. Output:
+    ``ivf_topk``): the scan side stays the full corpus. Output:
     (query_id, neighbor_id, adc, rank) — ``adc`` approximates the
     cosine of unit-normalized vectors; a unit test pins recall@k
     against exact cosine_topk.
@@ -880,7 +852,7 @@ def _nearest_centroid_udf(cents: list):
     array allocation each — 89M allocations at 200k x 447, ~27 s
     however the top-1 is taken, window or max_by). The BLAS form is
     one ``X @ C.T`` matmul per Arrow batch with NO N x C rows ever
-    existing JVM-side (~2 s; same reasoning as ``cosine_topk_arrow``).
+    existing JVM-side (~2 s; ``cosine_topk`` prefilters the same way).
     Centroids ride the closure (k x d doubles, ~230 KB at 447 x 64)."""
     import numpy as np
     import pandas as pd

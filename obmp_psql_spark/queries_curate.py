@@ -920,16 +920,17 @@ def _knn_oracle() -> str:
                "auto-labeling an unlabeled corpus slice from a "
                "labeled seed set",
     doc=f"exact cosine top-{_KNN_K} per query (collected query side, "
-        "exact Arrow kernel over the item scan) -> neighbor-label "
-        "votes -> majority with (votes desc, label asc) tie-break; "
-        "integer votes keep the verdict hash-stable",
+        "BLAS prefilter + exact rescore over the item scan) -> "
+        "neighbor-label votes -> majority with (votes desc, label "
+        "asc) tie-break; integer votes keep the verdict hash-stable",
 )
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scoring pass is ``cosine_topk_exact_arrow``: the bounded
+    """The scoring pass is ``similarity.cosine_topk``: the bounded
     query side is collected to the driver once, the item partitions
-    are scanned once by the Arrow kernel (bit-identical to the
-    interpreted cosine folds), and each query keeps its top-k via a
-    window trim — no all-pairs join, no shuffle of pairs. The vote
+    are scanned once by its Arrow kernel (a BLAS prefilter, then an
+    exact rescore with the SQL cosine folds' doubles), each batch
+    emits about k pairs per query, and a window trim keeps each
+    query's top-k — no all-pairs join, no shuffle of pairs. The vote
     agg is O(queries x k) rows. At 100 TB the same plan swaps the
     exact scan for the IVF/PQ candidate generator; the vote/verdict
     stages are unchanged (they only see (query, neighbor_label)
@@ -941,11 +942,10 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fan_out(load_tables(spark, sf_dir, ("embeddings",))["embeddings"],
                 spark)
     q = e.filter(F.col("vec_id") % _KNN_MOD == 0)
-    # bit-identical Arrow twin of cosine_topk; the collected query side
-    # has the same driver ceiling the former broadcast had (N/40 rows
-    # of 64 doubles — 25 MB at sf100), raised max_queries documents it
-    topk = similarity.cosine_topk_exact_arrow(q, e, k=_KNN_K,
-                                              max_queries=1_000_000)
+    # the collected query side has the driver ceiling the former
+    # broadcast had (N/40 rows of 64 doubles — 25 MB at sf100); the
+    # raised max_queries documents it
+    topk = similarity.cosine_topk(q, e, k=_KNN_K, max_queries=1_000_000)
     labels = e.select(F.col("vec_id").alias("neighbor_id"),
                       F.col("label").alias("nlabel"))
     qlabels = e.select(F.col("vec_id").alias("query_id"),
@@ -1314,8 +1314,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fan_out(load_tables(spark, sf_dir, ("embeddings",))["embeddings"],
                 spark)
     q = e.filter(F.col("vec_id") < 5)
-    # bit-identical Arrow twin (same cos doubles -> same rel_ppm)
-    topk = similarity.cosine_topk_exact_arrow(q, e, k=_MMR_POOL)
+    # exact cos doubles (the SQL folds') -> hash-stable rel_ppm
+    topk = similarity.cosine_topk(q, e, k=_MMR_POOL)
     cand = (topk.select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("neighbor_id").cast("long").alias("cand_id"),

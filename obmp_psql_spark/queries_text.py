@@ -483,8 +483,7 @@ _COS_SQL = ("list_sum(list_transform(list_zip({a}, {b}), x -> x[1]*x[2])) "
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     q = e.filter(F.col("vec_id") < 10)
-    # bit-identical Arrow twin (same cos doubles/ranks, hash-gated)
-    return similarity.cosine_topk_exact_arrow(q, e, k=5) \
+    return similarity.cosine_topk(q, e, k=5) \
         .select("query_id", "neighbor_id", "cos", "rank")
 
 
@@ -619,22 +618,6 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_ann_topk_arrow",
-    oracle=None,  # numpy matmul sum order differs in the last ulp ->
-                  # rows-only check; recall vs the exact path is
-                  # asserted in tests
-    survey_ref="training-data similarity: Arrow/BLAS brute-force top-k (scale path)",
-    doc="mapInPandas + numpy matmul kNN; rank-compatible with q_ann_topk",
-    rotate=False,  # evidence: q_ann_arrow_recall (hash-gated)
-)
-def q_ann_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    q = e.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk_arrow(q, e, k=5) \
-        .select("query_id", "neighbor_id", "cos", "rank")
-
-
-@register(
     "q_ann_ivf",
     oracle=None,  # approximate by design; recall vs the exact path is
                   # asserted in tests (rows-only driver check)
@@ -686,8 +669,7 @@ def q_multimodal_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = feats.filter(F.col("doc_id") < 5) \
         .withColumnRenamed("doc_id", "vec_id")
     items = feats.withColumnRenamed("doc_id", "vec_id")
-    # bit-identical Arrow twin (same cos doubles/ranks, hash-gated)
-    return similarity.cosine_topk_exact_arrow(q, items, k=5) \
+    return similarity.cosine_topk(q, items, k=5) \
         .select("query_id", "neighbor_id", "cos", "rank")
 
 
@@ -1549,11 +1531,7 @@ def _recall_vs_exact(spark: SparkSession, approx: DataFrame,
     probes = items.join(
         ap.select(F.col("query_id").alias(id_col)).distinct(), id_col) \
         .select(id_col, vec_col)
-    # bit-identical Arrow twin of cosine_topk (same cos doubles, same
-    # top-k set — dim-sequential fold, see the operator docstring):
-    # the interpreted HOF comparator was ~60% of each recall gate's
-    # wall (2.4 s for 200 probes x 2000 items x 64 dims at sf0.1)
-    exact = similarity.cosine_topk_exact_arrow(
+    exact = similarity.cosine_topk(
         probes, items, query_id=id_col, item_id=id_col,
         query_vec=vec_col, item_vec=vec_col, k=k) \
         .select(F.col("query_id").cast("long").alias("query_id"),
@@ -1651,25 +1629,6 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         approx = approx.filter(F.col("query_id") < 200)
         return _recall_vs_exact(spark, approx, e, "q_ann_ivf_recall",
                                 sf_dir, k=5)
-
-
-@register(
-    "q_ann_arrow_recall",
-    oracle=lambda sf: _recall_oracle("q_ann_arrow_recall", 5,
-                                     _EMB_CTE, sf),
-    survey_ref="training-data similarity: hash-gated recall oracle for the "
-               "Arrow/BLAS brute-force path (upgrades q_ann_topk_arrow's "
-               "rows-only driver check)",
-    doc="cosine_topk_arrow -> parquet handoff -> integer recall-ppm vs "
-        "exact top-k (1e6 everywhere unless a last-ulp rank flip occurs, "
-        "in which case both engines see the same dip)",
-)
-def q_ann_arrow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    q = e.filter(F.col("vec_id") < 10)
-    approx = similarity.cosine_topk_arrow(q, e, k=5)
-    return _recall_vs_exact(spark, approx, e, "q_ann_arrow_recall",
-                            sf_dir, k=5)
 
 
 def _feats_cte(sf_dir: str) -> str:

@@ -3,7 +3,7 @@ ingest merge must return an empty result — never crash — on empty
 inputs. At scale, empty inputs are routine (empty micro-batches after
 a filter, empty partitions, a source with no new data); round 6 found
 two driver-side crashes here (pq_topk's dims head() and
-cosine_topk_arrow's numpy normalization on a 0-row probe set)."""
+the Arrow cosine top-k's numpy normalization on a 0-row probe set)."""
 
 from __future__ import annotations
 
@@ -36,7 +36,8 @@ def _pairs(spark):
                                     threshold=0.1),
     lambda s: D.connected_components(_pairs(s)),
     lambda s: S.cosine_topk(_vecs(s), _vecs(s)),
-    lambda s: S.cosine_topk_arrow(_vecs(s), _vecs(s), k=3),
+    lambda s: S.cosine_topk(_vecs(s), s.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"), k=3),
     lambda s: S.lsh_topk(_vecs(s), dims=4, n_planes=2),
     lambda s: S.lsh_topk(_vecs(s), dims=4, n_planes=2,
                          max_bucket_size="auto"),
@@ -70,7 +71,7 @@ def test_arrow_topk_empty_items_side(spark):
     q = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
         "vec_id long, embedding array<float>")
-    out = S.cosine_topk_arrow(q, _vecs(spark), k=3)
+    out = S.cosine_topk(q, _vecs(spark), k=3)
     assert out.count() == 0
 
 

@@ -195,18 +195,155 @@ def test_containment_join128_coarse_default_route(spark):
     assert "BroadcastHashJoin" in plan and "Union" not in plan
 
 
-def test_arrow_ann_matches_exact_ranks(spark):
-    """The numpy path must produce the same neighbor sets/ranks as
-    the bit-exact expression path (float noise < rank gaps here)."""
+def _fold_pairs(queries, items):
+    """Pure-Python reference of cosine_topk's scoring: the SQL folds
+    (sums in element order, cos = dot / (qn * in)) over every
+    (query, item) pair but self-matches. Rows: (query_id, neighbor_id,
+    cos)."""
+    import math
+
+    def norm(v):
+        acc = 0.0
+        for x in v:
+            acc = acc + x * x
+        return math.sqrt(acc)
+
+    out = []
+    for qid, qv in queries:
+        for nid, iv in items:
+            if nid != qid:
+                acc = 0.0
+                for x, y in zip(qv, iv):
+                    acc = acc + x * y
+                den = norm(qv) * norm(iv)
+                out.append((qid, nid, acc / den if den else math.nan))
+    return out
+
+
+def _trim(pairs, k):
+    """The window trim: each query's first k pairs by (cos DESC with
+    NaN first, neighbor_id ASC). Rows: (query_id, neighbor_id, cos
+    bits, rank)."""
+    import math
+
+    out = []
+    for qid in sorted({p[0] for p in pairs}):
+        mine = sorted((p for p in pairs if p[0] == qid),
+                      key=lambda p: (not math.isnan(p[2]),
+                                     0.0 if math.isnan(p[2]) else -p[2],
+                                     p[1]))
+        out += [(qid, nid, float(cos).hex(), rank)
+                for rank, (_, nid, cos) in enumerate(mine[:k], 1)]
+    return out
+
+
+def _topk_vectors():
+    """(queries, items) with the cases the prefilter must not break:
+    exact duplicates at the k boundary (ties broken by id), a zero
+    vector as item and as query (NaN cos, ranked first), and
+    near-parallel vectors whose cosines differ by < 1e-12."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    vecs = rng.standard_normal((40, 24))
+    vecs[5] = vecs[6] = vecs[4]            # query 4: ranks 2-3 tie
+    vecs[21] = vecs[22] = vecs[20]         # query 23: 20/21/22 tie at k
+    vecs[23] = vecs[20] + 0.01 * rng.standard_normal(24)
+    vecs[9] = 0.0                          # zero vector -> NaN
+    base = vecs[10].copy()                 # query 14: near-parallel at k,
+    for j in (10, 11, 12, 13, 15):         # BLAS and fold orders differ
+        vecs[j] = base + 2e-15 * rng.standard_normal(24)
+    vecs[14] = base + 0.3 * rng.standard_normal(24)
+    items = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    return [items[i] for i in (0, 4, 9, 14, 17, 23, 31, 38)], items
+
+
+def test_cosine_topk_bit_equal_to_fold_reference(spark):
+    """cosine_topk emits the fold's rows, ranks and cos bits: ties, a
+    zero vector, near-parallel vectors, several item partitions, and k
+    above the item count."""
     from obmp_psql_spark.operators import similarity
 
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.filter("vec_id < 10")
-    exact = {(r.query_id, r.rank): r.neighbor_id
-             for r in similarity.cosine_topk(q, e, k=5).collect()}
-    arrow = {(r.query_id, r.rank): r.neighbor_id
-             for r in similarity.cosine_topk_arrow(q, e, k=5).collect()}
-    assert exact == arrow
+    queries, items = _topk_vectors()
+    near = [c for _, n, c in _fold_pairs(queries[3:4], items)
+            if n in (10, 11, 12, 13, 15)]
+    assert 0 < max(near) - min(near) < 1e-12
+    schema = "vec_id long, embedding array<double>"
+    q = spark.createDataFrame(queries, schema)
+    e = spark.createDataFrame(spark.sparkContext.parallelize(items, 4),
+                              schema)
+    for k in (3, len(items) + 5):
+        got = [(r.query_id, r.neighbor_id, r.cos.hex(), r.rank)
+               for r in similarity.cosine_topk(q, e, k=k)
+               .orderBy("query_id", "rank").collect()]
+        assert got == _trim(_fold_pairs(queries, items), k)
+        assert any(cos == "nan" for _, _, cos, _ in got)
+
+
+def test_cosine_topk_chunks_cross_query_boundaries():
+    """The per-batch kernel, chunked two queries at a time, prunes to a
+    candidate set whose trim is the fold reference, bit for bit, for
+    several k, with and without the zero vector (its NaN takes one of
+    the k slots)."""
+    import math
+
+    import numpy as np
+
+    from obmp_psql_spark.operators.similarity import (_fold_norm,
+                                                      _topk_chunks)
+
+    all_queries, all_items = _topk_vectors()
+    for zero in (True, False):
+        queries = [q for q in all_queries if zero or q[0] != 9]
+        items = [it for it in all_items if zero or it[0] != 9]
+        q_ids = np.array([i for i, _ in queries], dtype=np.int64)
+        q_cols = np.array([v for _, v in queries]).T.copy()
+        ids = np.array([i for i, _ in items], dtype=np.int64)
+        i_cols = np.array([v for _, v in items]).T.copy()
+        want = _fold_pairs(queries, items)
+        for k in (1, 2, 3, 4):
+            chunks = list(_topk_chunks(q_ids, q_cols, _fold_norm(q_cols),
+                                       ids, i_cols, k, cells=2 * len(items)))
+            assert len(chunks) == math.ceil(len(queries) / 2)
+            cand = [(int(q), int(n), float(c))
+                    for qs, ns, cs in chunks for q, n, c in zip(qs, ns, cs)]
+            assert len(cand) < len(want) // 2  # pruned
+            assert _trim(cand, k) == _trim(want, k)
+
+
+def test_cosine_topk_rejects_bad_query_vectors(spark):
+    """A null or ragged query vector fails on the driver, naming its id
+    and the width of the first query vector."""
+    import pytest
+
+    from obmp_psql_spark.operators import similarity
+
+    e = spark.createDataFrame([(1, [1.0, 0.0, 0.0])],
+                              "vec_id long, embedding array<float>")
+    for bad, msg in ((None, "id 2 is null; expected width 3"),
+                     ([1.0, 2.0], "id 2 is 2 wide; expected width 3")):
+        q = spark.createDataFrame([(1, [0.0, 1.0, 0.0]), (2, bad)],
+                                  "vec_id long, embedding array<float>")
+        with pytest.raises(ValueError, match=msg):
+            similarity.cosine_topk(q, e, k=2)
+
+
+def test_cosine_topk_rejects_bad_item_vectors(spark):
+    """A null or ragged item vector fails the task with the same
+    ValueError, naming its id and the query width."""
+    import pytest
+
+    from obmp_psql_spark.operators import similarity
+
+    q = spark.createDataFrame([(1, [0.0, 1.0, 0.0])],
+                              "vec_id long, embedding array<float>")
+    for bad, msg in ((None, "id 7 is null; expected width 3"),
+                     ([1.0] * 4, "id 7 is 4 wide; expected width 3")):
+        e = spark.createDataFrame([(1, [1.0, 0.0, 0.0]), (7, bad)],
+                                  "vec_id long, embedding array<float>")
+        with pytest.raises(Exception, match="ValueError: cosine_topk: "
+                                            "the vector of " + msg):
+            similarity.cosine_topk(q, e, k=2).collect()
 
 
 def test_ivf_recall_vs_exact(spark):

@@ -309,4 +309,4 @@ def test_all_pairs_guards(spark):
     assert similarity.embedding_neardup_pairs(
         small, allow_full_cross=True, threshold=0.0).count() > 0
     with pytest.raises(ValueError, match="max_queries"):
-        similarity.cosine_topk_arrow(e, e, k=2, max_queries=10)
+        similarity.cosine_topk(e, e, k=2, max_queries=10)
