@@ -14,7 +14,7 @@ column expressions, evaluated JVM-side inside whole-stage codegen).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -71,24 +71,6 @@ def shingle(col: Column, n: int = 3) -> Column:
         zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]))
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as array<string> of length ``num_hashes``.
-
-    hash_i(s) = md5(i || ':' || s); the signature element is the
-    minimum digest per hash family. md5 keeps the oracle (DuckDB)
-    bit-compatible; on a pure-Spark deployment xxhash64 is ~4x
-    faster — swap via the ``hash_fn`` seam.
-    """
-    def family_min(i: int):
-        prefix = f"{i}:"
-        # NB: the lambda must stay single-argument — pyspark treats a
-        # two-arg lambda as (element, index) and would override i
-        return F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.concat(F.lit(prefix), s))))
-
-    return F.array(*[family_min(i) for i in range(num_hashes)])
-
-
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str,
     num_hashes: int = 16, shingle_n: int = 3,
@@ -103,10 +85,15 @@ def minhash_signatures(
         F.col(id_col).alias("__id"),
         F.explode(shingle(F.col(text_col), shingle_n)).alias("__s"),
     )
-    return sh.groupBy("__id").agg(*[
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("__s")))).alias(f"__h{i}")
-        for i in range(num_hashes)
-    ])
+    return sh.groupBy("__id").agg(*minhash_aggregates(num_hashes))
+
+
+def minhash_aggregates(num_hashes: int = 16) -> list[Column]:
+    """The ``__h{i}`` = min(md5(i:shingle)) aggregates over ``__s`` —
+    the aggregate list of ``minhash_signatures``, for a caller that
+    computes more per-document aggregates in the same groupBy."""
+    return [F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("__s")))).alias(f"__h{i}")
+            for i in range(num_hashes)]
 
 
 def minhash_bands(
@@ -406,8 +393,9 @@ def minhash_lsh_pairs(
 
     Scale: the self-join is an equi-join on the band bucket, so it
     hash-partitions instead of exploding into a cross product; bucket
-    skew (a viral duplicate cluster) is handled by AQE skew-join.
-    Returns columns (id_a, id_b).
+    skew (a viral duplicate cluster) is handled by AQE skew-join, but
+    a bucket of n documents still emits n(n-1)/2 pairs — clustering
+    wants ``bucket_star_edges`` instead. Returns columns (id_a, id_b).
     """
     banded = minhash_bands(df, id_col, text_col, num_hashes=num_hashes,
                            bands=bands, shingle_n=shingle_n,
@@ -426,6 +414,21 @@ def minhash_lsh_pairs(
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .dropDuplicates()
     )
+
+
+def bucket_star_edges(banded: DataFrame) -> DataFrame:
+    """Distinct (id_a, id_b) edges, id_a < id_b, joining every doc of a
+    ``minhash_bands`` (__id, band, bucket) table to the smallest id of
+    each bucket it is in: one window over (band, bucket), no self-join.
+    Each bucket's star spans the clique ``minhash_lsh_pairs`` emits for
+    it, so ``connected_components`` finds the same components, from
+    n - 1 edges per bucket of n instead of n(n-1)/2 (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond")."""
+    w = W.partitionBy("band", "bucket")
+    return (banded.select(F.min("__id").over(w).alias("id_a"),
+                          F.col("__id").alias("id_b"))
+            .filter(F.col("id_a") != F.col("id_b"))
+            .distinct())
 
 
 def simhash_fingerprints(
@@ -623,11 +626,16 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     both hash-partitioned on node id), with ``localCheckpoint`` per
     round to truncate lineage. Rounds needed = graph diameter; near-
     dup graphs are unions of near-cliques (diameter 2-3 even at
-    100 TB corpus scale), so this beats the alternating-star
-    algorithm's (Kiveris et al., "Connected Components in MapReduce
-    and Beyond") extra constant factors there. For adversarial long-
-    chain graphs prefer alternating-star; ``max_iter`` caps runaway
-    cases and raises rather than returning a wrong answer.
+    100 TB corpus scale; ``bucket_star_edges`` keeps them stars), so
+    this beats the alternating-star algorithm's (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond") extra constant
+    factors there. For adversarial long-chain graphs prefer
+    alternating-star; ``max_iter`` caps runaway cases and raises
+    rather than returning a wrong answer.
+
+    Convergence is observed, not counted: each round's number of
+    changed labels is a ``DataFrame.observe`` metric filled by the
+    round's own checkpoint, so no separate count job runs per round.
 
     Scale: state is one (id, label) row per node — O(nodes), not
     O(edges); the edge list is re-joined each round and never
@@ -639,26 +647,29 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                                  F.col("a").alias("b")))
     # edges feed every round: materialize once
     sym = sym.localCheckpoint()
+    # initial labels stay lazy: round 1's checkpoint computes them
     labels = (sym.groupBy("a")
               .agg(F.least(F.min("b"), F.first("a")).alias("lab"))
-              .select(F.col("a").alias("id"), "lab")
-              .localCheckpoint())
+              .select(F.col("a").alias("id"), "lab"))
     for _ in range(max_iter):
         # push each node's label to its neighbors, keep the min of
         # (own label, incoming labels). The previous label rides
         # through the aggregate in a second column (unique per id),
-        # so convergence is a cheap filter-count on the checkpointed
+        # so convergence is a count_if observed on the checkpointed
         # result instead of a join against the old labels.
         pushed = (sym.join(labels, sym["a"] == labels["id"])
                   .select(F.col("b").alias("id"), "lab",
                           F.lit(None).cast(labels.schema["lab"].dataType)
                           .alias("old")))
         own = labels.select("id", "lab", F.col("lab").alias("old"))
+        obs = Observation()
         new_labels = (own.unionByName(pushed)
                       .groupBy("id").agg(F.min("lab").alias("lab"),
                                          F.max("old").alias("old"))
+                      .observe(obs, F.count_if(F.col("lab") != F.col("old"))
+                               .alias("changed"))
                       .localCheckpoint())
-        changed = new_labels.filter(F.col("lab") != F.col("old")).count()
+        changed = obs.get["changed"]
         labels = new_labels.select("id", "lab")
         if changed == 0:
             return labels.select(F.col("id"), F.col("lab").alias("component"))

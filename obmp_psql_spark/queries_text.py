@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 
 from .operators import similarity
 from .operators.dedup import (
+    bucket_star_edges,
+    connected_components,
+    minhash_bands,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_fingerprints,
@@ -49,23 +52,25 @@ _NORM = "lower(trim(regexp_replace({col}, '\\s+', ' ', 'g')))"
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    # fan_out BEFORE the union: every consumer runs md5/shingle/
-    # signature map work over the text, and the fixture parquet is a
-    # single row group — without the exchange that work lands on the
-    # union-branch tasks (measured: q_dedup_apply's signature stage
-    # ran 8.9 s of task time on 3 tasks at sf0.1). Fanning the base
-    # first also means the parquet text is scanned ONCE and the three
-    # branches re-read the (smaller, already-decoded) exchange instead
-    # of re-decoding the scan per branch (r14, guide §6.1).
-    base = fan_out(d.select("doc_id", "text", "source"), spark)
-    clones = base.select((F.col("doc_id") + 10000).alias("doc_id"), "text", "source")
-    near = (
-        base.filter(F.col("doc_id") % 5 == 0)
-        .select((F.col("doc_id") + 20000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" extra trailing tokens appended")).alias("text"),
-                "source")
-    )
-    return base.unionByName(clones).unionByName(near)
+    # ONE scan and ONE round-robin exchange feed all three row
+    # variants: each document row explodes into (base, clone,
+    # near-or-null). A union of three branches would keep a scan and
+    # an exchange per branch (the branches prune differently, so no
+    # exchange is reused). fan_out: the fixture parquet is one row
+    # group, and without the exchange the shingle/md5 map work of
+    # every consumer lands on one task (measured: 8.9 s of task time
+    # on 3 tasks in q_dedup_apply's signature stage at sf0.1).
+    d = fan_out(d.select("doc_id", "text", "source"), spark)
+
+    def row(shift: int, text):
+        return F.struct((F.col("doc_id") + shift).alias("doc_id"),
+                        text.alias("text"), "source")
+
+    near = F.when(F.col("doc_id") % 5 == 0, row(20000, F.concat(
+        F.col("text"), F.lit(" extra trailing tokens appended"))))
+    rows = d.select(F.explode(F.array(
+        row(0, F.col("text")), row(10000, F.col("text")), near)).alias("r"))
+    return rows.filter(F.col("r").isNotNull()).select("r.*")
 
 
 # ---------------------------------------------------------------------------
@@ -199,23 +204,26 @@ FROM reach GROUP BY id
 """
 
 
+def _star_edges(c: DataFrame, text_col: str) -> DataFrame:
+    """Spanning edges of the oracles' minhash-LSH pair graph."""
+    return bucket_star_edges(minhash_bands(
+        c, "doc_id", text_col, num_hashes=_NUM_HASHES, bands=_BANDS,
+        shingle_n=_SHINGLE_N))
+
+
 @register(
     "q_dedup_cluster",
     oracle=_CLUSTER_ORACLE,
     survey_ref="training-data dedup: pair graph -> connected components "
                "(duplicate groups; transitive-closure oracle via "
                "recursive CTE)",
-    doc="min-label-propagation connected components over minhash-LSH "
-        "candidate pairs",
+    doc="min-label-propagation connected components over the minhash-"
+        "LSH bucket stars (each band bucket's members joined to its min "
+        "id: the components of the candidate-pair graph, linear edges)",
 )
 def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import connected_components
-
     c = _corpus(spark, sf_dir).withColumn("text", F.lower(F.col("text")))
-    pairs = minhash_lsh_pairs(c, "doc_id", "text",
-                              num_hashes=_NUM_HASHES, bands=_BANDS,
-                              shingle_n=_SHINGLE_N)
-    return connected_components(pairs).select(
+    return connected_components(_star_edges(c, "text")).select(
         F.col("id").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("component"))
 
@@ -1743,24 +1751,24 @@ WHERE comp.id IS NULL OR c.doc_id = comp.component OR c.doc_id = rep.rep_id
                "subsumes the former q_dedup_quality_rep): the min-id rule "
                "and the production quality rule (longest member, "
                "deterministic tie-break)",
-    doc="minhash pairs -> connected components -> anti-join out every "
-        "doc that is a representative under NEITHER policy; each "
-        "survivor carries group_size plus kept_minid / kept_quality "
-        "flags (singletons are 1/1), so both survivor identity sets "
-        "are hash-pinned",
+    doc="minhash bucket stars -> connected components -> one window per "
+        "component (size + quality representative) -> corpus left join "
+        "keeping every doc that is a representative under EITHER "
+        "policy; each survivor carries group_size plus kept_minid / "
+        "kept_quality flags (singletons are 1/1), so both survivor "
+        "identity sets are hash-pinned",
 )
 def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Completes the dedup story q_minhash_lsh/q_dedup_cluster start:
     the output IS the deduplicated corpus, under both representative
-    rules at once. Scale shape: components is O(docs-in-pairs) rows
-    (pairs only, never the whole corpus); the quality window ranks
-    component MEMBERS only; the removal is a broadcast-eligible
-    left_anti against the full scan — the 100 TB side is touched
-    once, and the flag joins add bounded hash joins on doc_id/
-    component."""
+    rules at once. Scale shape: the component graph is the bucket-star
+    edge list (linear in a viral bucket, see ``bucket_star_edges``);
+    components are O(docs in multi-doc buckets) rows, never the whole
+    corpus; ONE window over the component members gives the group
+    size and the quality representative; the corpus — the 100 TB
+    side — is touched once, by a left join on doc_id filtered to the
+    survivors of either policy."""
     from pyspark.sql.window import Window as W
-
-    from .operators.dedup import connected_components
 
     # lower() only feeds the shingles — n_chars and the quality-rep
     # length rank must measure the RAW text, matching the oracle's
@@ -1768,29 +1776,23 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Unicode code points, a latent cross-engine mismatch and possibly
     # a different quality representative)
     c = _corpus(spark, sf_dir)
-    pairs = minhash_lsh_pairs(
-        c.withColumn("__lt", F.lower(F.col("text"))), "doc_id", "__lt",
-        num_hashes=_NUM_HASHES, bands=_BANDS, shingle_n=_SHINGLE_N)
-    comp = connected_components(pairs)  # (id, component=min id)
-    mem = comp.join(
-        c.select(F.col("doc_id").alias("id"),
-                 F.length("text").alias("__len")), "id")
-    w = W.partitionBy("component").orderBy(F.col("__len").desc(),
-                                           F.col("id").asc())
-    rep = (mem.withColumn("__r", F.row_number().over(w))
-           .filter(F.col("__r") == 1)
-           .select("component", F.col("id").alias("rep_id")))
-    gs = comp.groupBy("component").agg(F.count(F.lit(1)).alias("group_size"))
+    comp = connected_components(_star_edges(
+        c.withColumn("__lt", F.lower(F.col("text"))), "__lt"))
+    w = (W.partitionBy("component")
+         .orderBy(F.col("__len").desc(), F.col("doc_id").asc())
+         .rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+    members = (comp.withColumnRenamed("id", "doc_id")
+               .join(c.select("doc_id", F.length("text").alias("__len")),
+                     "doc_id")
+               .select("doc_id", "component",
+                       F.count(F.lit(1)).over(w).alias("group_size"),
+                       F.first("doc_id").over(w).alias("rep_id")))
     # a doc that represents its component under NEITHER policy is a
-    # true duplicate: anti-joined out of the corpus (J9)
-    removal = (comp.join(rep, "component")
-               .filter((F.col("id") != F.col("component"))
-                       & (F.col("id") != F.col("rep_id")))
-               .select(F.col("id").alias("doc_id")))
-    return (c.join(removal, "doc_id", "left_anti")
-            .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-            .join(rep, "component", "left")
-            .join(gs, "component", "left")
+    # true duplicate and filtered out (J9)
+    return (c.join(members, "doc_id", "left")
+            .filter(F.col("component").isNull()
+                    | (F.col("doc_id") == F.col("component"))
+                    | (F.col("doc_id") == F.col("rep_id")))
             .select(F.col("doc_id").cast("long").alias("doc_id"), "source",
                     F.length("text").cast("long").alias("n_chars"),
                     F.coalesce("group_size", F.lit(1)).cast("long")
@@ -2542,69 +2544,54 @@ JOIN ssz sb ON sb.doc_id = e.id_b
                "ppm (the recall-handshake idea applied to the sketch "
                "itself, like q_approx_distinct_gate does for HLL++)",
     doc="16-component signature agreement -> est_ppm; exact distinct-"
-        "shingle intersection/union -> true_ppm; both engines must land "
-        "on identical (est, true, err) rows — proving the sketch's "
-        "deviation every driver run instead of citing the textbook bound",
+        "shingle intersection/union of the per-doc shingle sets -> "
+        "true_ppm; both engines must land on identical (est, true, err) "
+        "rows — proving the sketch's deviation every driver run instead "
+        "of citing the textbook bound",
 )
 def q_minhash_est_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: signatures are one explode + one 16-aggregate
-    groupBy (the minhash_lsh_pairs build, shared); the estimate join
-    touches only CANDIDATE pairs (banding-bounded, never all pairs);
-    the exact-Jaccard side joins candidate pairs against the distinct
-    (doc, shingle) posting table — per-pair cost proportional to the
-    two documents' shingle counts, the same bounded unit the
-    n-gram-Jaccard operator pays. Integer-ppm arithmetic throughout."""
+    """Scale shape: ONE explode + groupBy(doc) computes the 16 min-md5
+    signature columns and the doc's distinct shingle set together,
+    persisted once; it feeds the LSH band table and both sides of the
+    pair join. The join touches only CANDIDATE pairs (banding-bounded,
+    never all pairs) and reads est_ppm and true_ppm off the same two
+    signature rows: per-pair cost proportional to the two documents'
+    shingle counts, the same bounded unit the n-gram-Jaccard operator
+    pays. Integer-ppm arithmetic throughout."""
     from .operators.cache import owned_persist
-    from .operators.dedup import minhash_signatures
+    from .operators.dedup import minhash_aggregates
     from .operators.dedup import shingle as mk_shingle
 
     c = _corpus(spark, sf_dir).withColumn("text", F.lower(F.col("text")))
     # ONE signature build feeds the LSH band table AND both sides of
-    # the estimate self-join; un-persisted/duplicated, the full
-    # shingle explode + 16-way min-md5 aggregate ran three times
-    # (r14, guide §7.2 duplicated subtrees)
-    sig = owned_persist(minhash_signatures(
-        c, "doc_id", "text", num_hashes=_NUM_HASHES, shingle_n=_SHINGLE_N))
-    pairs = minhash_lsh_pairs(c, "doc_id", "text",
-                              num_hashes=_NUM_HASHES, bands=_BANDS,
-                              shingle_n=_SHINGLE_N, signatures=sig)
+    # the pair join; un-persisted, the full shingle explode + 16-way
+    # min-md5 aggregate ran three times (r14, guide §7.2 duplicated
+    # subtrees). collect_set keeps the distinct-shingle semantics of
+    # the oracle's shd.
     sh = c.select(F.col("doc_id").alias("__id"),
                   F.explode(mk_shingle(F.col("text"), _SHINGLE_N))
                    .alias("__s"))
+    sig = owned_persist(sh.groupBy("__id").agg(
+        *minhash_aggregates(_NUM_HASHES), F.collect_set("__s").alias("__set")))
+    pairs = minhash_lsh_pairs(c, "doc_id", "text",
+                              num_hashes=_NUM_HASHES, bands=_BANDS,
+                              shingle_n=_SHINGLE_N, signatures=sig)
     agree = sum(
         F.when(F.col(f"a.__h{i}") == F.col(f"b.__h{i}"), 1).otherwise(0)
         for i in range(_NUM_HASHES))
-    est = (pairs
-           .join(sig.alias("a"), F.col("id_a") == F.col("a.__id"))
-           .join(sig.alias("b"), F.col("id_b") == F.col("b.__id"))
-           .select("id_a", "id_b",
-                   (agree * F.lit(1_000_000) / F.lit(_NUM_HASHES))
-                   .cast("long").alias("est_ppm")))
-    # the distinct posting table has three consumers (ssz + both
-    # sides of the exact-intersection join) — persist it or each
-    # re-runs the explode + distinct shuffle
-    shd = owned_persist(sh.distinct())
-    ssz = shd.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    inter = (pairs
-             .join(shd.alias("x"), F.col("id_a") == F.col("x.__id"))
-             .join(shd.alias("y"), (F.col("id_b") == F.col("y.__id"))
-                   & (F.col("x.__s") == F.col("y.__s")))
-             .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("__i")))
-    return (est
-            .join(inter, ["id_a", "id_b"], "left")
-            .join(ssz.select(F.col("__id").alias("id_a"),
-                             F.col("__n").alias("__na")), "id_a")
-            .join(ssz.select(F.col("__id").alias("id_b"),
-                             F.col("__n").alias("__nb")), "id_b")
+    return (pairs
+            .join(sig.alias("a"), F.col("id_a") == F.col("a.__id"))
+            .join(sig.alias("b"), F.col("id_b") == F.col("b.__id"))
             .select(F.col("id_a").cast("long").alias("id_a"),
                     F.col("id_b").cast("long").alias("id_b"),
-                    "est_ppm",
-                    F.expr("coalesce(__i, 0L) * 1000000L "
-                           "div (__na + __nb - coalesce(__i, 0L))")
-                     .alias("true_ppm"),
-                    F.expr("abs(est_ppm - coalesce(__i, 0L) * 1000000L "
-                           "div (__na + __nb - coalesce(__i, 0L)))")
-                     .alias("err_ppm")))
+                    (agree * F.lit(1_000_000) / F.lit(_NUM_HASHES))
+                    .cast("long").alias("est_ppm"),
+                    F.size(F.array_intersect("a.__set", "b.__set"))
+                     .alias("__i"),
+                    (F.size("a.__set") + F.size("b.__set")).alias("__n"))
+            .withColumn("true_ppm", F.expr("__i * 1000000L div (__n - __i)"))
+            .select("id_a", "id_b", "est_ppm", "true_ppm",
+                    F.abs(F.col("est_ppm") - F.col("true_ppm")).alias("err_ppm")))
 
 
 # ---------------------------------------------------------------------------

@@ -198,6 +198,96 @@ def test_connected_components_path_graph(spark):
                    **{i: 10 for i in (10, 11, 12)}, 20: 20, 21: 20}
 
 
+def test_bucket_star_edges_match_pair_components(spark):
+    """CC over bucket-star edges equals CC over the LSH candidate
+    pairs, on a viral bucket of identical docs plus a near-dup chain
+    whose end docs share no bucket; the viral cluster costs n - 1
+    star edges against n(n-1)/2 pairs."""
+    import pandas as pd
+
+    from obmp_psql_spark.operators.dedup import (
+        bucket_star_edges, connected_components, minhash_bands,
+        minhash_lsh_pairs)
+
+    n = 30
+    viral = " ".join(f"v{j}" for j in range(20))
+    chain = {k: " ".join(f"w{j}" for j in range(2 * k, 2 * k + 20))
+             for k in range(8)}
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": list(range(100, 100 + n)) + list(chain),
+        "text": [viral] * n + list(chain.values())}))
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text").collect()
+    star = bucket_star_edges(minhash_bands(docs, "doc_id", "text")).collect()
+
+    def comps(edges):
+        e = spark.createDataFrame([(r.id_a, r.id_b) for r in edges],
+                                  "id_a long, id_b long")
+        return {(r.id, r.component)
+                for r in connected_components(e).collect()}
+
+    got = comps(star)
+    assert got == comps(pairs)
+    assert all(r.id_a < r.id_b for r in star)
+    assert len({(r.id_a, r.id_b) for r in star}) == len(star)
+    # the chain spans buckets: some component is not a pair clique
+    members: dict[int, set[int]] = {}
+    for i, c in got:
+        members.setdefault(c, set()).add(i)
+    chain_comps = [m for m in members.values() if max(m) < 100]
+    assert any(len([p for p in pairs if p.id_a in m])
+               < len(m) * (len(m) - 1) // 2 for m in chain_comps)
+    assert set(range(100, 100 + n)) in members.values()
+    assert len([r for r in star if r.id_a >= 100]) == n - 1
+    assert len([p for p in pairs if p.id_a >= 100]) == n * (n - 1) // 2
+
+
+def test_minhash_est_gate_true_ppm_counts_distinct_shingles(spark, tmp_path):
+    """true_ppm is the Jaccard of DISTINCT shingle sets. Doc 1 repeats
+    its trigrams ("a b c" x3, "b c a" x2, "c a b" x2); doc 2 shares two
+    of them: 2 / 4 -> 500000 ppm. Multiset sizes (7 and 3) read
+    250000 with a set intersection, 1000000 with an occurrence join."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from obmp_psql_spark.registry import all_specs
+
+    pq.write_table(pa.table({
+        "doc_id": pa.array([1, 2], pa.int64()),
+        "text": ["a b c a b c a b c", "a b c a d"],
+        "source": ["s", "s"]}), str(tmp_path / "documents.parquet"))
+    got = {(r.id_a, r.id_b): r for r in
+           all_specs()["q_minhash_est_gate"].fn(spark, str(tmp_path)).collect()}
+    assert got[(1, 2)].true_ppm == 500_000
+    assert got[(1, 10001)].true_ppm == 1_000_000  # the exact clone
+    assert all(r.err_ppm == abs(r.est_ppm - r.true_ppm) for r in got.values())
+
+
+def test_dedup_queries_job_ceiling(spark):
+    """Job-count pin for the curation dedup pair at sf0.001 (host
+    independent). Measured 9 jobs for q_minhash_est_gate and 15 for
+    q_dedup_apply (the single-scan corpus, shingle-set Jaccard, star
+    edges and observed CC convergence); the ceilings add 3 each. The
+    pair-graph plans they replaced ran 29 and 40."""
+    from obmp_psql_spark.operators.cache import release_build_artifacts
+    from obmp_psql_spark.registry import all_specs
+    from obmp_psql_spark.session import load_tables
+
+    from .conftest import SF_SMALL
+
+    sc = spark.sparkContext
+    load_tables(spark, SF_SMALL, ("documents",))  # schema read: not counted
+    for name, ceiling in (("q_minhash_est_gate", 12), ("q_dedup_apply", 18)):
+        group = f"job-ceiling-{name}"
+        sc.setJobGroup(group, "dedup job-count pin")
+        try:
+            all_specs()[name].fn(spark, SF_SMALL).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            release_build_artifacts()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= ceiling, f"{name}: {jobs} jobs > {ceiling}"
+
+
 def test_connected_components_iteration_cap(spark):
     from obmp_psql_spark.operators.dedup import connected_components
     import pytest
