@@ -62,15 +62,18 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on 3 tasks in q_dedup_apply's signature stage at sf0.1).
     d = fan_out(d.select("doc_id", "text", "source"), spark)
 
-    def row(shift: int, text):
-        return F.struct((F.col("doc_id") + shift).alias("doc_id"),
-                        text.alias("text"), "source")
+    # one parsed projection: as Column algebra the three structs cost
+    # ~100 py4j calls per query
+    def row(shift: int, text: str) -> str:
+        return (f"named_struct('doc_id', doc_id + {shift}, 'text', {text}, "
+                "'source', source)")
 
-    near = F.when(F.col("doc_id") % 5 == 0, row(20000, F.concat(
-        F.col("text"), F.lit(" extra trailing tokens appended"))))
-    rows = d.select(F.explode(F.array(
-        row(0, F.col("text")), row(10000, F.col("text")), near)).alias("r"))
-    return rows.filter(F.col("r").isNotNull()).select("r.*")
+    near = ("CASE WHEN doc_id % 5 = 0 THEN "
+            + row(20000, "concat(text, ' extra trailing tokens appended')")
+            + " END")
+    rows = d.selectExpr(
+        f"explode(array({row(0, 'text')}, {row(10000, 'text')}, {near})) AS r")
+    return rows.filter("r IS NOT NULL").select("r.*")
 
 
 # ---------------------------------------------------------------------------
@@ -1413,7 +1416,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     grams = d.select(
         "source", F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(F.array_distinct(shingle(F.col("text"), 3))).alias("gram"))
+        F.explode(F.array_distinct(shingle("text", 3))).alias("gram"))
     train = grams.filter(F.col("source") != "src0").select("gram").distinct()
     ev = grams.filter(F.col("source") == "src0").select("doc_id", "gram")
     hit = train.withColumn("__hit", F.lit(1))
@@ -1768,8 +1771,6 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     size and the quality representative; the corpus — the 100 TB
     side — is touched once, by a left join on doc_id filtered to the
     survivors of either policy."""
-    from pyspark.sql.window import Window as W
-
     # lower() only feeds the shingles — n_chars and the quality-rep
     # length rank must measure the RAW text, matching the oracle's
     # length(c.text) (lower() can change string length for some
@@ -1778,32 +1779,28 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _corpus(spark, sf_dir)
     comp = connected_components(_star_edges(
         c.withColumn("__lt", F.lower(F.col("text"))), "__lt"))
-    w = (W.partitionBy("component")
-         .orderBy(F.col("__len").desc(), F.col("doc_id").asc())
-         .rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+    # parsed projections from here on (see _corpus)
+    w = ("OVER (PARTITION BY component ORDER BY __len DESC, doc_id ASC "
+         "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)")
     members = (comp.withColumnRenamed("id", "doc_id")
-               .join(c.select("doc_id", F.length("text").alias("__len")),
+               .join(c.selectExpr("doc_id", "length(text) AS __len"),
                      "doc_id")
-               .select("doc_id", "component",
-                       F.count(F.lit(1)).over(w).alias("group_size"),
-                       F.first("doc_id").over(w).alias("rep_id")))
+               .selectExpr("doc_id", "component",
+                           f"count(1) {w} AS group_size",
+                           f"first(doc_id) {w} AS rep_id"))
     # a doc that represents its component under NEITHER policy is a
     # true duplicate and filtered out (J9)
+    minid = "(component IS NULL OR doc_id = component)"
+    quality = "(component IS NULL OR doc_id = rep_id)"
     return (c.join(members, "doc_id", "left")
-            .filter(F.col("component").isNull()
-                    | (F.col("doc_id") == F.col("component"))
-                    | (F.col("doc_id") == F.col("rep_id")))
-            .select(F.col("doc_id").cast("long").alias("doc_id"), "source",
-                    F.length("text").cast("long").alias("n_chars"),
-                    F.coalesce("group_size", F.lit(1)).cast("long")
-                     .alias("group_size"),
-                    F.when(F.col("component").isNull()
-                           | (F.col("doc_id") == F.col("component")),
-                           1).otherwise(0).cast("int").alias("kept_minid"),
-                    F.when(F.col("component").isNull()
-                           | (F.col("doc_id") == F.col("rep_id")),
-                           1).otherwise(0).cast("int")
-                     .alias("kept_quality")))
+            .filter(f"{minid} OR {quality}")
+            .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "source",
+                        "CAST(length(text) AS BIGINT) AS n_chars",
+                        "CAST(coalesce(group_size, 1) AS BIGINT) AS group_size",
+                        f"CAST(CASE WHEN {minid} THEN 1 ELSE 0 END AS INT)"
+                        " AS kept_minid",
+                        f"CAST(CASE WHEN {quality} THEN 1 ELSE 0 END AS INT)"
+                        " AS kept_quality"))
 
 
 # ---------------------------------------------------------------------------
@@ -2569,29 +2566,30 @@ def q_minhash_est_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees). collect_set keeps the distinct-shingle semantics of
     # the oracle's shd.
     sh = c.select(F.col("doc_id").alias("__id"),
-                  F.explode(mk_shingle(F.col("text"), _SHINGLE_N))
+                  F.explode(mk_shingle("text", _SHINGLE_N))
                    .alias("__s"))
     sig = owned_persist(sh.groupBy("__id").agg(
         *minhash_aggregates(_NUM_HASHES), F.collect_set("__s").alias("__set")))
     pairs = minhash_lsh_pairs(c, "doc_id", "text",
                               num_hashes=_NUM_HASHES, bands=_BANDS,
                               shingle_n=_SHINGLE_N, signatures=sig)
-    agree = sum(
-        F.when(F.col(f"a.__h{i}") == F.col(f"b.__h{i}"), 1).otherwise(0)
-        for i in range(_NUM_HASHES))
+    # parsed projections: the 16-term agreement sum alone is ~180 py4j
+    # calls as Column algebra, one as SQL text
+    agree = " + ".join(f"CASE WHEN a.__h{i} = b.__h{i} THEN 1 ELSE 0 END"
+                       for i in range(_NUM_HASHES))
     return (pairs
             .join(sig.alias("a"), F.col("id_a") == F.col("a.__id"))
             .join(sig.alias("b"), F.col("id_b") == F.col("b.__id"))
-            .select(F.col("id_a").cast("long").alias("id_a"),
-                    F.col("id_b").cast("long").alias("id_b"),
-                    (agree * F.lit(1_000_000) / F.lit(_NUM_HASHES))
-                    .cast("long").alias("est_ppm"),
-                    F.size(F.array_intersect("a.__set", "b.__set"))
-                     .alias("__i"),
-                    (F.size("a.__set") + F.size("b.__set")).alias("__n"))
-            .withColumn("true_ppm", F.expr("__i * 1000000L div (__n - __i)"))
-            .select("id_a", "id_b", "est_ppm", "true_ppm",
-                    F.abs(F.col("est_ppm") - F.col("true_ppm")).alias("err_ppm")))
+            .selectExpr("CAST(id_a AS BIGINT) AS id_a",
+                        "CAST(id_b AS BIGINT) AS id_b",
+                        f"CAST(({agree}) * 1000000 / {_NUM_HASHES} AS BIGINT)"
+                        " AS est_ppm",
+                        "size(array_intersect(a.__set, b.__set)) AS __i",
+                        "size(a.__set) + size(b.__set) AS __n")
+            .selectExpr("id_a", "id_b", "est_ppm",
+                        "__i * 1000000L div (__n - __i) AS true_ppm")
+            .selectExpr("id_a", "id_b", "est_ppm", "true_ppm",
+                        "abs(est_ppm - true_ppm) AS err_ppm"))
 
 
 # ---------------------------------------------------------------------------

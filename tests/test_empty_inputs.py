@@ -65,6 +65,16 @@ def test_operator_empty_input_returns_empty(spark, build):
         assert build(spark).count() == 0
 
 
+def test_connected_components_empty_edges_distributed_rounds(
+        spark, monkeypatch):
+    """The ``cc`` case above runs the driver-side rounds (0 pairs is
+    under the bound); with the bound at -1 it runs the distributed
+    rounds."""
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_PAIRS", -1)
+    test_operator_empty_input_returns_empty(
+        spark, lambda s: D.connected_components(_pairs(s)))
+
+
 def test_arrow_topk_empty_items_side(spark):
     """Probe set non-empty but item side empty: per-batch guard must
     skip empty Arrow batches instead of feeding numpy a 0-row frame."""

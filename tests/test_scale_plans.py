@@ -3,6 +3,7 @@ shuffle; salted aggregation matches direct aggregation."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from obmp_psql_spark.operators.skew import salted_agg
@@ -264,10 +265,12 @@ def test_minhash_est_gate_true_ppm_counts_distinct_shingles(spark, tmp_path):
 
 def test_dedup_queries_job_ceiling(spark):
     """Job-count pin for the curation dedup pair at sf0.001 (host
-    independent). Measured 9 jobs for q_minhash_est_gate and 15 for
+    independent). Measured 9 jobs for q_minhash_est_gate and 12 for
     q_dedup_apply (the single-scan corpus, shingle-set Jaccard, star
-    edges and observed CC convergence); the ceilings add 3 each. The
-    pair-graph plans they replaced ran 29 and 40."""
+    edges, and connected components on the driver below its bound,
+    which drops the convergence round's checkpoint); the ceilings add
+    3 each. The distributed rounds ran 15 jobs in q_dedup_apply; the
+    pair-graph plans before them ran 29 and 40."""
     from obmp_psql_spark.operators.cache import release_build_artifacts
     from obmp_psql_spark.registry import all_specs
     from obmp_psql_spark.session import load_tables
@@ -276,7 +279,7 @@ def test_dedup_queries_job_ceiling(spark):
 
     sc = spark.sparkContext
     load_tables(spark, SF_SMALL, ("documents",))  # schema read: not counted
-    for name, ceiling in (("q_minhash_est_gate", 12), ("q_dedup_apply", 18)):
+    for name, ceiling in (("q_minhash_est_gate", 12), ("q_dedup_apply", 15)):
         group = f"job-ceiling-{name}"
         sc.setJobGroup(group, "dedup job-count pin")
         try:
@@ -296,6 +299,93 @@ def test_connected_components_iteration_cap(spark):
                                   "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="fixpoint"):
         connected_components(pairs, max_iter=1)
+
+
+def test_dedup_queries_py4j_round_trip_ceiling(spark, monkeypatch):
+    """Driver plan-building pin for the curation dedup pair at sf0.001:
+    py4j round trips made by this thread over one cold run (pipeline
+    memo and build artifacts released) after a warm-up; the py4j
+    client's own garbage-collection thread is not counted. Measured
+    264 for q_minhash_est_gate and 330 for q_dedup_apply (the session
+    without Python call-site capture; the MinHash, shingle, corpus and
+    survivor projections as parsed SQL; connected components on the
+    driver); the ceilings add about 20 %. With call-site capture on
+    and Column-API projections the same runs made 3,274 and 2,947."""
+    import threading
+
+    import py4j.clientserver as cs
+
+    from obmp_psql_spark.operators.cache import release_build_artifacts
+    from obmp_psql_spark.queries_bmp import _PIPELINE_CACHE
+    from obmp_psql_spark.registry import all_specs
+
+    from .conftest import SF_SMALL
+
+    me, calls = threading.get_ident(), [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counted(conn, command):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return send(conn, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    for name, ceiling in (("q_minhash_est_gate", 320), ("q_dedup_apply", 400)):
+        fn = all_specs()[name].fn
+        fn(spark, SF_SMALL).collect()  # warm-up: table memo, schema read
+        release_build_artifacts()
+        _PIPELINE_CACHE.clear()
+        before = calls[0]
+        try:
+            fn(spark, SF_SMALL).collect()
+        finally:
+            release_build_artifacts()
+        trips = calls[0] - before
+        assert trips <= ceiling, f"{name}: {trips} round trips > {ceiling}"
+
+
+@pytest.mark.parametrize("case", [
+    test_connected_components_path_graph,
+    test_bucket_star_edges_match_pair_components,
+    test_connected_components_iteration_cap,
+], ids=["path_graph", "star_vs_pairs", "iteration_cap"])
+def test_connected_components_distributed_rounds(spark, monkeypatch, case):
+    """The cases above have graphs under ``CC_DRIVER_MAX_PAIRS`` and so
+    run the driver-side rounds; here the same cases run the
+    distributed rounds. The bound is -1, not 0, so that an empty edge
+    list (0 pairs, at the bound 0) leaves the driver path too."""
+    from obmp_psql_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_PAIRS", -1)
+    case(spark)
+
+
+def test_connected_components_path_follows_observed_edge_count(
+        spark, monkeypatch):
+    """At the bound the rounds run on the driver; one pair over it they
+    run distributed, with the same components."""
+    from obmp_psql_spark.operators import dedup
+
+    driver_runs = []
+    rounds = dedup._cc_rounds
+
+    def counted_rounds(sym, max_iter):
+        driver_runs.append(sym)
+        return rounds(sym, max_iter)
+
+    monkeypatch.setattr(dedup, "_cc_rounds", counted_rounds)
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_PAIRS", 3)
+
+    def comps(n):
+        pairs = spark.createDataFrame([(i, i + 1) for i in range(n)],
+                                      "id_a long, id_b long")
+        return {(r.id, r.component)
+                for r in dedup.connected_components(pairs).collect()}
+
+    assert comps(3) == {(i, 0) for i in range(4)}
+    assert len(driver_runs) == 1
+    assert comps(4) == {(i, 0) for i in range(5)}
+    assert len(driver_runs) == 1  # over the bound: distributed rounds
 
 
 def test_asof_join_tolerance_and_inner(spark):
@@ -689,6 +779,18 @@ def test_aqe_min_partition_floor_preserves_parallelism(spark):
         spark.conf.set(key, "64k")
     assert without_floor == 1    # the default-config failure mode
     assert with_floor > 1        # the floor keeps the stage parallel
+
+
+def test_get_spark_turns_off_python_call_site_capture(spark):
+    """``get_spark`` turns off pyspark's per-call Python call-site
+    capture (``_with_origin``), which costs about six py4j round trips
+    per ``functions.*`` call and ``Column`` method; the round-trip
+    ceiling of the dedup pair rests on it."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
 
 
 def test_pii_redact_zero_shuffle_and_masking(spark, tmp_path):
