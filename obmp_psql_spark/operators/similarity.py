@@ -624,11 +624,9 @@ def pq_topk(
     spark = df.sparkSession
     # training/encode shuffles are small (codebook-sized after map-side
     # partial agg); AQE's coalescePartitions (64KB floor, session.py)
-    # right-sizes their reducer counts. An earlier revision toggled the
-    # session-global spark.sql.shuffle.partitions to 8 around training —
-    # removed: re-measured at parity post-AQE-floor, and a session-conf
-    # mutation silently re-plans any CONCURRENT query on the session
-    # (advisor flag, round 6).
+    # right-sizes their reducer counts. No partition count is set on
+    # the session: a session-conf change re-plans any query planning
+    # on it concurrently.
     return _pq_topk_impl(spark, df, id_col, vec_col, m, n_codes, k,
                          train_iters, max_queries)
 

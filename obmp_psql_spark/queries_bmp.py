@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from .ingest import apply_unicast_prefix
 from .registry import register
 from .schemas import TABLE_SCHEMAS
-from .session import empty_df, fan_out, load_tables, tiny_df
+from .session import empty_df, fan_out, load_tables, sized_session, tiny_df
 
 # deterministic message synthesis from events (ts made unique by
 # adding event_id µs — dedup-latest tiebreaks must not matter)
@@ -85,14 +85,13 @@ def _materialize_join(df: DataFrame) -> DataFrame:
 
 def _cached_pipeline(tag: str, spark: SparkSession, sf_dir: str, build):
     """Gate queries share expensive pipelines; materialize once per
-    (tag, session, sf). The .schema probe detects a dead session."""
+    (tag, session, sf). ``build(spark)`` makes every frame from
+    ``sized_session(spark, sf_dir)``, so no gate sets the shared
+    session's conf; its frames belong to that clone. The .schema probe
+    detects a dead session."""
+    spark = sized_session(spark, sf_dir)
     if PLAN_AUDIT:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            return tuple(build())
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        return tuple(build(spark))
     key = (tag, id(spark), sf_dir)
     if key in _PIPELINE_CACHE:
         try:
@@ -101,44 +100,13 @@ def _cached_pipeline(tag: str, spark: SparkSession, sf_dir: str, build):
             return dfs
         except Exception:
             _PIPELINE_CACHE.pop(key, None)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(_gate_shuffle_partitions(sf_dir)))
-    try:
-        dfs = tuple(df.localCheckpoint() for df in build())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    dfs = tuple(df.localCheckpoint() for df in build(spark))
     _PIPELINE_CACHE[key] = dfs
     return dfs
 
 
-# Size post-shuffle partitions to the INPUT VOLUME, not a constant.
-# At gate scale (<=100k-row micro-batches) 8 partitions beat 32 by a
-# consistent ~10% (fewer task launches and state/checkpoint files;
-# AQE still coalesces below this). But the knob is a scale bug when
-# fixed: the sf100 decade probe (finding 40) measured the two-batch
-# merge at alpha 1.34 in its THIRD decade because 100M rows / 8
-# partitions = 12.5M-row sort-merge partitions that spill every pass.
-# ~32 MB of source parquet per post-shuffle partition keeps sorts
-# in-memory across every measured decade; the floor preserves the
-# gate-scale win and the cap bounds small-file explosion.
-GATE_PARTITION_BYTES = 32 << 20
-GATE_PARTITION_FLOOR = 8
-GATE_PARTITION_CAP = 256
-
-
-def _gate_shuffle_partitions(sf_dir: str) -> int:
-    import os
-    try:
-        size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        return GATE_PARTITION_FLOOR
-    return max(GATE_PARTITION_FLOOR,
-               min(GATE_PARTITION_CAP, -(-size // GATE_PARTITION_BYTES)))
-
-
 def _run_pipeline(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    def build():
+    def build(spark):
         msgs = _messages(spark, sf_dir)
         b1 = msgs.filter(F.col("event_id") % 2 == 0).drop("event_id")
         b2 = msgs.filter(F.col("event_id") % 2 == 1).drop("event_id")
@@ -239,7 +207,7 @@ def _run_txn_pipeline(spark: SparkSession, sf_dir: str):
     checkpoints the old snapshot in its OWN cache entry — the timed
     cold build of the ingest headline only materializes the final
     state, exactly as before round 8."""
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
@@ -262,7 +230,7 @@ def _run_txn_pipeline(spark: SparkSession, sf_dir: str):
 def _run_txn_v1_read(spark: SparkSession, sf_dir: str):
     """Time-travel read of ip_rib as of the post-batch-1 commit,
     cached separately so only q_store_time_diff pays for it."""
-    def build():
+    def build(spark):
         _run_txn_pipeline(spark, sf_dir)  # ensure store exists
         store, v1 = _TXN_STORE_HANDLES[spark][sf_dir]
         return (store.read_at("ip_rib", v1),)
@@ -282,7 +250,7 @@ def q_bmp_txn_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     touch — the O(batch) merge path that survives a 100 TB state
     table. Verified against the identical oracle as the monolithic
     sink."""
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
@@ -450,7 +418,7 @@ def q_bmp_stat_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-only sink gate: both batches land once each even though
     batch 1 is delivered twice — double-counted rows would fail the
     row-count/value compare against the oracle's plain projection."""
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
@@ -775,7 +743,7 @@ def q_bmp_view_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state, _ = _run_pipeline(spark, sf_dir)
     peers, routers, attrs = _cached_pipeline(
-        "dims", spark, sf_dir, lambda: _dimension_state(spark))
+        "dims", spark, sf_dir, _dimension_state)
     view = v_ip_routes(state, peers, attrs, routers)
     return view.select(
         "router_name", "peer_name", "prefix", "origin_as",
@@ -805,7 +773,7 @@ def _l3vpn_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _run_l3vpn_pipeline(spark: SparkSession, sf_dir: str):
     from .ingest_ls import apply_l3vpn
 
-    def build():
+    def build(spark):
         msgs = _l3vpn_messages(spark, sf_dir)
         b1 = msgs.filter(F.col("event_id") % 2 == 0).drop("event_id")
         b2 = msgs.filter(F.col("event_id") % 2 == 1).drop("event_id")
@@ -886,7 +854,7 @@ def q_bmp_l3vpn_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state, _log = _run_l3vpn_pipeline(spark, sf_dir)
     peers, routers, attrs = _cached_pipeline(
-        "dims", spark, sf_dir, lambda: _dimension_state(spark))
+        "dims", spark, sf_dir, _dimension_state)
     view = v_l3vpn_routes(state, peers, attrs, routers)
     return view.select(
         "router_name", "peer_name", "rd", "prefix", "origin_as", "med",
@@ -945,7 +913,7 @@ def _run_peer_pipeline(spark: SparkSession, sf_dir: str):
     from .ingest import apply_peer, apply_router
     from .schemas import MESSAGE_SCHEMAS
 
-    def build():
+    def build(spark):
         import datetime as dt
         rschema = MESSAGE_SCHEMAS["router"]
         routers, _ = apply_router(
@@ -1146,7 +1114,7 @@ def _ls_messages(spark: SparkSession, sf_dir: str):
 def _run_ls_pipeline(spark: SparkSession, sf_dir: str):
     from .ingest_ls import apply_ls_link, apply_ls_node
 
-    def build():
+    def build(spark):
         node_msgs, link_msgs = _ls_messages(spark, sf_dir)
         nodes = empty_df(spark, TABLE_SCHEMAS["ls_nodes"])
         lnks = empty_df(spark, TABLE_SCHEMAS["ls_links"])
@@ -1327,7 +1295,7 @@ FROM l1 FULL OUTER JOIN l2 ON l1.h = l2.h
 def q_bmp_ls_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ingest_ls import apply_ls_prefix
 
-    def build():
+    def build(spark):
         msgs = _ls_prefix_messages(spark, sf_dir)
         b1 = msgs.filter(F.col("event_id") % 2 == 0).drop("event_id")
         b2 = msgs.filter(F.col("event_id") % 2 == 1).drop("event_id")
@@ -1470,7 +1438,7 @@ FROM l1 FULL OUTER JOIN l2 ON l1.h = l2.h
 def q_bmp_collector(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ingest import apply_collector
 
-    def build():
+    def build(spark):
         ev = load_tables(spark, sf_dir, ("events",))["events"]
         msgs = ev.select(
             F.when(F.col("value") < 5, "stopped").otherwise("heartbeat")
@@ -1565,7 +1533,7 @@ def q_store_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .session import normalize_ts
     from .state import TxnStateStore
 
-    def build():
+    def build(spark):
         ev = normalize_ts(load_tables(spark, sf_dir, ("events",))["events"])
         ev = ev.select("event_id", "user_id",
                        F.hour("ts").cast("string").alias("hr"))
@@ -1654,7 +1622,7 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     file and scans one range slice, NULL keys owned by slice 0. At
     100 TB the same fan-out pattern reads any numeric-keyed dim/state
     table back out of Postgres without a driver jar."""
-    def build():
+    def build(spark):
         import tempfile
 
         import duckdb

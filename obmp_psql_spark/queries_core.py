@@ -796,7 +796,7 @@ def q_stream_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("seq", T.LongType()),
     ])
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore

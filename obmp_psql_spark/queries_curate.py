@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .session import fan_out, load_tables, normalize_ts, tiny_df
+from .session import fan_out, load_tables, normalize_ts, sized_session, tiny_df
 
 _NORM = "lower(trim(regexp_replace({col}, '\\s+', ' ', 'g')))"
 _EV = "ev AS (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events)"
@@ -1427,35 +1427,31 @@ def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding the DQ dashboard."""
     import uuid as _uuid
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        name = f"stream_quality_{_uuid.uuid4().hex[:8]}"
-        batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        src = (spark.readStream.schema(batch_schema)
-               .option("pathGlobFilter", "documents.parquet").parquet(sf_dir))
-        toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")),
-                       " ")
-        f = src.select(
-            "source",
-            F.size(toks).cast("long").alias("n_tokens"),
-            F.length("text").cast("long").alias("n_chars"))
-        v = f.select(
-            "source",
-            F.when(F.col("n_tokens").between(10, 400)
-                   & ((F.col("n_chars") - (F.col("n_tokens") - 1)) * 10
-                      >= F.col("n_tokens") * 25), "pass")
-            .otherwise("reject").alias("verdict"))
-        agg = (v.groupBy("source", "verdict")
-               .agg(F.count(F.lit(1)).alias("n_docs")))
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    spark = sized_session(spark, sf_dir)
+    name = f"stream_quality_{_uuid.uuid4().hex[:8]}"
+    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    src = (spark.readStream.schema(batch_schema)
+           .option("pathGlobFilter", "documents.parquet").parquet(sf_dir))
+    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")),
+                   " ")
+    f = src.select(
+        "source",
+        F.size(toks).cast("long").alias("n_tokens"),
+        F.length("text").cast("long").alias("n_chars"))
+    v = f.select(
+        "source",
+        F.when(F.col("n_tokens").between(10, 400)
+               & ((F.col("n_chars") - (F.col("n_tokens") - 1)) * 10
+                  >= F.col("n_tokens") * 25), "pass")
+        .otherwise("reject").alias("verdict"))
+    agg = (v.groupBy("source", "verdict")
+           .agg(F.count(F.lit(1)).alias("n_docs")))
+    q = (agg.writeStream.outputMode("complete")
+         .format("memory").queryName(name)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -2272,7 +2268,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketch import incremental_mg_update, mg_from_store
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
@@ -2436,7 +2432,7 @@ def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    quantile_estimates)
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
@@ -2641,7 +2637,7 @@ def q_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore

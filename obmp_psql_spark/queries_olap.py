@@ -1456,7 +1456,7 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifts every later ewma_prev and turns the driver row red."""
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore

@@ -5,6 +5,11 @@ tumbling-window aggregation -> memory sink, availableNow trigger)
 to completion and returns the materialized result; the oracle is the
 equivalent batch SQL. This is T9 (tumbling windows) on the actual
 streaming engine, not a batch stand-in.
+
+Every gate runs on ``sized_session(spark, sf_dir)``: the partition
+count fixes the state-store instances per stateful operator for the
+life of a checkpoint, and 32 costs 4x-32x in per-batch commit overhead
+at gate scale (the stream-stream join: ~9 s at 32, ~2.4 s at 8).
 """
 
 from __future__ import annotations
@@ -15,40 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .session import normalize_ts
-
-
-def _with_stream_partitions(fn, n: int | None = None):
-    """Run a streaming gate query with a volume-derived state-partition
-    count. `spark.sql.shuffle.partitions` fixes the number of state
-    store instances per stateful operator for the LIFETIME of a
-    checkpoint; the default 32 costs 4x-32x in per-batch state-store
-    commit overhead at gate scale (measured: the stream-stream join
-    fell from ~9s to ~2.4s at 8 partitions, identical results). Each
-    gate run creates a FRESH checkpoint, so deriving per run is safe.
-
-    The count comes from the SAME sizing law as the batch gates
-    (`_gate_shuffle_partitions`: clamp(source bytes / 32 MB, 8, 256))
-    — finding 40 applied to streaming state: a fixed 8 is the
-    measured best at gate scale (≤2 MB source → the floor, so gate
-    behavior is unchanged), but at a 100× tier it would funnel all
-    state commits through 8 instances; a production deployment sizes
-    this to expected key cardinality up front for the same reason.
-    Pass ``n`` to pin explicitly."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark, sf_dir):
-        from .queries_bmp import _gate_shuffle_partitions
-        parts = n if n is not None else _gate_shuffle_partitions(sf_dir)
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-    return wrapped
-
+from .session import normalize_ts, sized_session
 
 
 @register(
@@ -65,8 +37,8 @@ def _with_stream_partitions(fn, n: int | None = None):
     survey_ref="T9/A1 via Structured Streaming (2_aggregations.sql:91-130; S1 shape)",
     doc="real streaming query: file source -> 5-min tumbling windows -> memory sink",
 )
-@_with_stream_partitions
 def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = sized_session(spark, sf_dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     # the file source needs a directory; select just events.parquet
@@ -103,12 +75,12 @@ def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="real streaming dedup: file source -> watermark + dropDuplicates "
         "state -> memory sink (availableNow)",
 )
-@_with_stream_partitions
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exactly-once key dedup through the HDFS-backed
     state store. Only key columns are emitted, so the result is
     deterministic regardless of which physical row wins the race
     inside a partition."""
+    spark = sized_session(spark, sf_dir)
     name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = (spark.readStream.schema(batch_schema)
@@ -151,8 +123,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reproduces Spark's exact finalization cut (window_end <= "
         "max_event_time - delay); unfinalized tail windows stay in state",
 )
-@_with_stream_partitions
 def q_stream_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = sized_session(spark, sf_dir)
     name = f"stream_append_{uuid.uuid4().hex[:8]}"
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = (spark.readStream.schema(batch_schema)
@@ -191,10 +163,10 @@ def q_stream_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="REAL applyInPandasWithState keyed counters on the streaming "
         "engine; final cumulative state vs batch SQL oracle",
 )
-@_with_stream_partitions
 def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.stateful import peer_activity_counter
 
+    spark = sized_session(spark, sf_dir)
     name = f"stream_state_{uuid.uuid4().hex[:8]}"
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = (spark.readStream.schema(batch_schema)
@@ -242,8 +214,8 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="streaming events joined to static customer+nation dims, "
         "aggregated per nation in complete mode",
 )
-@_with_stream_partitions
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = sized_session(spark, sf_dir)
     name = f"stream_dim_{uuid.uuid4().hex[:8]}"
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = (spark.readStream.schema(batch_schema)
@@ -305,7 +277,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "within 10 min) on the streaming engine, append mode, both "
         "sides watermarked; vs the batch interval-join oracle",
 )
-@_with_stream_partitions
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two live streams joined on (key, time-range). Scale design:
     the event-time bound + watermarks let the symmetric-hash-join
@@ -313,6 +284,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides, so state is O(window x rate), not O(stream). An inner
     join emits each match exactly once regardless of watermark lag,
     which is why the availableNow run equals the batch oracle."""
+    spark = sized_session(spark, sf_dir)
     name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
@@ -379,13 +351,13 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "last_ts + gap <= max_ts - watermark delay); unfinalized tail "
         "sessions stay in state",
 )
-@_with_stream_partitions
 def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-gap session state: unlike tumbling windows, session
     ranges GROW and MERGE as events arrive, so the state store keys
     are (user, open-session) and the engine merges overlapping
     candidates per batch — semantics no batch window can emulate
     incrementally without rescanning the key's history."""
+    spark = sized_session(spark, sf_dir)
     name = f"stream_sess_{uuid.uuid4().hex[:8]}"
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = (spark.readStream.schema(batch_schema)
@@ -438,7 +410,6 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(unmatched left rows emit null-extended only once their join "
         "window is fully below the watermark; later rows stay in state)",
 )
-@_with_stream_partitions
 def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unlike the inner join (match-driven emission), the left join
     must PROVE a left row can never match before emitting it
@@ -446,6 +417,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-window end, so the engine emits it on state eviction. The
     oracle's finalization cut (click_ts + 10 min <= max_ts - delay)
     is exactly that eviction condition."""
+    spark = sized_session(spark, sf_dir)
     name = f"stream_sslj_{uuid.uuid4().hex[:8]}"
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
@@ -516,8 +488,8 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "once purchase_ts itself does (their candidate window is "
         "[purchase_ts - 10 min, purchase_ts], so eviction is earlier)",
 )
-@_with_stream_partitions
 def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = sized_session(spark, sf_dir)
     name = f"stream_ssfj_{uuid.uuid4().hex[:8]}"
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 

@@ -1237,7 +1237,7 @@ def q_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import incremental_minhash_pairs
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
@@ -2168,7 +2168,7 @@ def q_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import incremental_ivf_assignments
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
@@ -2303,7 +2303,7 @@ def _bpe_train_run(spark: SparkSession, sf_dir: str):
     300-row single-partition table)."""
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         d = load_tables(spark, sf_dir, ("documents",))["documents"]
         norm = F.lower(F.trim(F.regexp_replace(F.col("text"),
                                                r"\s+", " ")))
@@ -2948,13 +2948,12 @@ def q_stream_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import pca
     from .queries_bmp import _cached_pipeline
 
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
 
+        e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
         store = TxnStateStore(spark, tempfile.mkdtemp(prefix="pcagram_"))
         for b in range(3):
             pca.incremental_gram_update(
@@ -3407,16 +3406,15 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import incremental_semantic_dedup
     from .queries_bmp import _cached_pipeline
 
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    aug = e.unionByName(
-        e.filter(F.col("vec_id") % 3 == 0)
-         .withColumn("vec_id", F.col("vec_id") + 10000))
-
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
 
+        e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+        aug = e.unionByName(
+            e.filter(F.col("vec_id") % 3 == 0)
+             .withColumn("vec_id", F.col("vec_id") + 10000))
         store = TxnStateStore(spark, tempfile.mkdtemp(prefix="semdd_"))
         for b in range(3):
             incremental_semantic_dedup(
@@ -3729,7 +3727,7 @@ def _image_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import dhash63, generate_noise_ppm
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         d = load_tables(spark, sf_dir, ("documents",))["documents"] \
             .select(F.col("doc_id").cast("long").alias("doc_id"))
         base = d.select(F.col("doc_id").alias("img_id"),
@@ -3850,7 +3848,7 @@ def q_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import incremental_fingerprint_pairs
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore
@@ -3941,7 +3939,7 @@ def _audio_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import audio_fingerprint63, generate_noise_wav
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         d = load_tables(spark, sf_dir, ("documents",))["documents"] \
             .select(F.col("doc_id").cast("long").alias("doc_id"))
         base = d.select(F.col("doc_id").alias("aud_id"),
@@ -4060,7 +4058,7 @@ def _video_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         # every 2nd doc: the 4-frame generate->split->dhash chain is
         # the gate's dominant cost (build 11.6 s vs join 3.1 s at
         # sf0.1) and is synthetic-corpus work a real deployment never
@@ -4162,7 +4160,7 @@ def q_stream_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import incremental_frameset_pairs
     from .queries_bmp import _cached_pipeline
 
-    def build():
+    def build(spark):
         import tempfile
 
         from .state import TxnStateStore

@@ -28,6 +28,18 @@ Driver-side plan building:
   fragment (file and line of the ``functions.*`` call) in its query
   context; the JVM-side message and stack are unchanged, and no test
   or package code reads that fragment.
+
+Partition sizing: one law, ``gate_shuffle_partitions``, sizes the
+gate pipelines' and stream gates' partitions from the source volume
+(stateful streaming fixes its state partitioning for the life of a
+checkpoint). ``sized_session`` applies it on a clone of the caller's
+session, as Spark's ``StreamExecution`` clones for every stream: a conf
+change on the shared session re-plans whatever is planning on it
+concurrently. ``cloneSession`` keeps the caller's runtime confs and
+temp views; ``newSession`` drops both (AQE turned off for a plan audit
+would read on). A DataFrame plans with its owning session's conf, so a
+sized build makes every frame from the clone; a memory-sink table
+exists only in the session that started the stream.
 """
 
 from __future__ import annotations
@@ -132,15 +144,71 @@ def empty_df(spark: SparkSession, schema):
 
 def tiny_df(spark: SparkSession, rows, schema):
     """Single-partition DataFrame for driver-scale literal row sets
-    (seeds, published estimate lists, collected codebook re-pins).
-    ``spark.createDataFrame(rows, schema)`` parallelizes even a
-    1-row list into ``defaultParallelism`` Python partitions, and
-    every downstream action then pays one Python-worker round-trip
-    per partition (measured 0.32 s/action at local[32] for one row,
-    1.29 s cold, vs 0.20 s at one partition). One partition also
-    broadcasts/joins identically — these frames are dims by nature."""
+    (seeds, estimate lists, codebook re-pins, component labels). Built
+    from a pyarrow table, so Spark holds the rows JVM-side: pickled
+    rows cost every action one more job with a Python-worker task (an
+    aggregate over 2 rows, 4 cores: 2 jobs, 0.29-0.44 s; here 1 job,
+    0.11-0.14 s). One partition keeps a stored dim one file. ``schema``
+    is a ``StructType`` or DDL; rows are tuples in its field order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
     return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
+        pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)],
+            schema=arrow),
+        schema).coalesce(1)
+
+
+# Post-shuffle partitions follow the INPUT VOLUME: ~32 MB of source
+# parquet each, floor 8 (at gate scale 8 beat 32 by ~10%: fewer tasks
+# and state files), cap 256 (small files). A fixed 8 was a scale bug:
+# the sf100 probe (finding 40) ran 12.5M-row spilling sorts per
+# partition. Every local scale (27 KB to 2 MB) sits at the floor.
+GATE_PARTITION_BYTES = 32 << 20
+GATE_PARTITION_FLOOR = 8
+GATE_PARTITION_CAP = 256
+
+
+def gate_shuffle_partitions(sf_dir: str) -> int:
+    try:
+        size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+    except OSError:
+        return GATE_PARTITION_FLOOR
+    return max(GATE_PARTITION_FLOOR,
+               min(GATE_PARTITION_CAP, -(-size // GATE_PARTITION_BYTES)))
+
+
+# (id(caller), count, caller conf hash) -> (caller, clone). Holding the
+# caller pins its id; the hash remakes the clone when the caller's conf
+# changes, since a clone copies that conf only when it is made. One clone
+# per key keeps the session-keyed load_tables and pipeline memos warm.
+_SIZED: dict = {}
+# id(clone) -> count: a sized build reaching another gets itself back
+_CLONE_PARTS: dict = {}
+
+
+def sized_session(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """The caller's session with ``spark.sql.shuffle.partitions`` set
+    by ``gate_shuffle_partitions(sf_dir)``, as a clone made once per
+    caller, count and caller conf (module docstring)."""
+    n = gate_shuffle_partitions(sf_dir)
+    if _CLONE_PARTS.get(id(spark)) == n:
+        return spark
+    key = (id(spark), n, spark.conf._jconf.getAll().hashCode())
+    hit = _SIZED.get(key)
+    if hit is None:
+        jclone = spark._jsparkSession.cloneSession()
+        jclone.conf().set("spark.sql.shuffle.partitions", str(n))
+        hit = _SIZED.setdefault(
+            key, (spark, SparkSession(spark.sparkContext, jclone)))
+        _CLONE_PARTS[id(hit[1])] = n
+    return hit[1]
 
 
 def fan_out(df, spark: SparkSession):

@@ -793,6 +793,33 @@ def test_get_spark_turns_off_python_call_site_capture(spark):
     assert is_debugging_enabled() is False
 
 
+def test_tiny_df_is_one_jvm_side_partition(spark):
+    """``tiny_df`` holds its rows JVM-side (a local relation, no
+    Python-worker job per action) in one partition, with the same
+    schema and rows as pickled construction, for a DDL string and a
+    ``StructType`` carrying a microsecond timestamp."""
+    import datetime as dt
+
+    from obmp_psql_spark import schemas
+    from obmp_psql_spark.session import tiny_df
+
+    ts = dt.datetime(2024, 1, 1, 12, 30, 0, 123456)
+    routers = tuple(
+        {"hash_id": "h", "name": "n", "timestamp": ts, "conn_count": 1}
+        .get(f.name) for f in schemas.ROUTERS.fields)
+    for rows, schema in (([(1, 0.5), (2, None)], "q_ppm long, est double"),
+                         ([routers], schemas.ROUTERS),
+                         ([], "q_ppm long, est double")):
+        got = tiny_df(spark, rows, schema)
+        want = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 1), schema)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert got.rdd.getNumPartitions() == 1
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
 def test_pii_redact_zero_shuffle_and_masking(spark, tmp_path):
     """q_pii_redact must stay a pure scan-stage projection (zero
     Exchanges) and actually scrub: no email/phone pattern survives in
@@ -1027,14 +1054,14 @@ def test_gate_shuffle_partitions_scale_with_input(tmp_path):
     volume (finding 40: a fixed 8 gave 12.5M-row spilling sorts at
     sf100). Floor preserves the measured gate-scale win; cap bounds
     small-file explosion; a missing file degrades to the floor."""
-    from obmp_psql_spark.queries_bmp import (
+    from obmp_psql_spark.session import (
         GATE_PARTITION_BYTES,
         GATE_PARTITION_CAP,
         GATE_PARTITION_FLOOR,
-        _gate_shuffle_partitions,
+        gate_shuffle_partitions,
     )
 
-    assert _gate_shuffle_partitions(str(tmp_path / "nope")) \
+    assert gate_shuffle_partitions(str(tmp_path / "nope")) \
         == GATE_PARTITION_FLOOR
 
     def fake(nbytes):
@@ -1044,24 +1071,18 @@ def test_gate_shuffle_partitions_scale_with_input(tmp_path):
             fh.truncate(nbytes)
         return str(d)
 
-    assert _gate_shuffle_partitions(fake(1 << 20)) == GATE_PARTITION_FLOOR
-    assert _gate_shuffle_partitions(fake(80 * GATE_PARTITION_BYTES)) == 80
-    assert _gate_shuffle_partitions(fake(10_000 * GATE_PARTITION_BYTES)) \
+    assert gate_shuffle_partitions(fake(1 << 20)) == GATE_PARTITION_FLOOR
+    assert gate_shuffle_partitions(fake(80 * GATE_PARTITION_BYTES)) == 80
+    assert gate_shuffle_partitions(fake(10_000 * GATE_PARTITION_BYTES)) \
         == GATE_PARTITION_CAP
 
 
 def test_stream_partitions_derive_from_volume(spark, tmp_path):
-    """The streaming gates' state-partition count follows the same
-    sizing law as the batch gates (finding 40 applied to streaming
-    state): floor 8 at gate scale (unchanged behavior), growing with
-    source bytes; an explicit n pins it."""
-    from obmp_psql_spark.queries_bmp import GATE_PARTITION_BYTES
-    from obmp_psql_spark.queries_stream import _with_stream_partitions
-
-    seen = {}
-
-    def probe(spark_, sf_dir):
-        seen["parts"] = spark_.conf.get("spark.sql.shuffle.partitions")
+    """The sized session the streaming gates start from follows the
+    sizing law (finding 40 applied to streaming state): floor 8 at
+    gate scale, growing with source bytes. The caller's conf never
+    changes, and the same caller and count get the same clone."""
+    from obmp_psql_spark.session import GATE_PARTITION_BYTES, sized_session
 
     def fake(nbytes):
         d = tmp_path / f"sf_{nbytes}"
@@ -1070,15 +1091,69 @@ def test_stream_partitions_derive_from_volume(spark, tmp_path):
             fh.truncate(nbytes)
         return str(d)
 
-    _with_stream_partitions(probe)(spark, fake(1 << 20))
-    assert seen["parts"] == "8"
-    big = fake(40 * GATE_PARTITION_BYTES)
-    _with_stream_partitions(probe)(spark, big)
-    assert seen["parts"] == "40"
-    _with_stream_partitions(probe, n=8)(spark, big)
-    assert seen["parts"] == "8"
-    # the wrapper restored the session conf
-    assert spark.conf.get("spark.sql.shuffle.partitions") != "40"
+    parent = spark.conf.get("spark.sql.shuffle.partitions")
+    small = sized_session(spark, fake(1 << 20))
+    assert small.conf.get("spark.sql.shuffle.partitions") == "8"
+    big = sized_session(spark, fake(40 * GATE_PARTITION_BYTES))
+    assert big.conf.get("spark.sql.shuffle.partitions") == "40"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parent
+    assert sized_session(spark, fake(1 << 20)) is small
+    # a sized session asked again for its own count is itself
+    assert sized_session(small, fake(1 << 20)) is small
+
+
+def test_gates_never_set_the_shared_session_partitions(spark, monkeypatch):
+    """No gate sets ``spark.sql.shuffle.partitions`` on the session it
+    is handed: a conf change there re-plans any query planning on the
+    same session at that moment. Covers the two stream-gate shapes
+    and one shared gate pipeline, each still equal to its oracle, and
+    the clone the law runs on keeps the caller's runtime conf and temp
+    views."""
+    import obmp_psql_spark.queries_bmp as qb
+    from obmp_psql_spark.registry import all_specs
+    from pyspark.sql.conf import RuntimeConfig
+
+    from .conftest import SF_SMALL
+    from .oracle_util import compare
+
+    key = "spark.sql.shuffle.partitions"
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, k, v):
+        if self is spark.conf:
+            sets.append((k, v))
+        return real_set(self, k, v)
+
+    specs = all_specs()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    try:
+        for name in ("q_stream_window", "q_stream_quality_filter",
+                     "q_stream_doc_dedup"):
+            qb._PIPELINE_CACHE.clear()
+            ok, msg = compare(specs[name].fn(spark, SF_SMALL),
+                              specs[name].oracle_for(SF_SMALL), SF_SMALL)
+            assert ok, f"{name}: {msg}"
+            assert spark.conf.get(key) == "5"
+        assert [k for k, _ in sets if k == key] == []
+
+        monkeypatch.undo()
+        from obmp_psql_spark.session import sized_session
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.range(3).createOrReplaceTempView("sized_probe")
+        clone = sized_session(spark, SF_SMALL)
+        assert clone is not spark
+        assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert clone.table("sized_probe").count() == 3
+        assert clone.conf.get(key) == "8"
+        assert spark.conf.get(key) == "5"
+    finally:
+        monkeypatch.undo()
+        spark.catalog.dropTempView("sized_probe")
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set(key, old)
 
 
 def test_enrich_rpki_matched_join_is_size_gated(spark):

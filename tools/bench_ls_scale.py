@@ -142,34 +142,31 @@ def main() -> None:
         apply_ls_link,
         apply_ls_node,
     )
-    from obmp_psql_spark.queries_bmp import (
-        _gate_shuffle_partitions,
-        _l3vpn_messages,
-    )
+    from obmp_psql_spark.queries_bmp import _l3vpn_messages
     from obmp_psql_spark.schemas import TABLE_SCHEMAS
-    from obmp_psql_spark.session import get_spark
+    from obmp_psql_spark.session import get_spark, sized_session
 
     spark = get_spark("bench-ls-scale")
     spark.range(10000).selectExpr("id % 7 k").groupBy("k").count() \
         .write.format("noop").mode("overwrite").save()
 
-    def probe_ls_link(sf_dir):
-        _, links = _scaled_ls_messages(spark, sf_dir)
+    def probe_ls_link(s, sf_dir):
+        _, links = _scaled_ls_messages(s, sf_dir)
         return _two_batch(apply_ls_link,
-                          spark.createDataFrame([], TABLE_SCHEMAS["ls_links"]),
+                          s.createDataFrame([], TABLE_SCHEMAS["ls_links"]),
                           links)
 
-    def probe_ls_node(sf_dir):
-        nodes, _ = _scaled_ls_messages(spark, sf_dir)
+    def probe_ls_node(s, sf_dir):
+        nodes, _ = _scaled_ls_messages(s, sf_dir)
         return _two_batch(apply_ls_node,
-                          spark.createDataFrame([], TABLE_SCHEMAS["ls_nodes"]),
+                          s.createDataFrame([], TABLE_SCHEMAS["ls_nodes"]),
                           nodes)
 
-    def probe_l3vpn(sf_dir):
+    def probe_l3vpn(s, sf_dir):
         return _two_batch(
             apply_l3vpn,
-            spark.createDataFrame([], TABLE_SCHEMAS["l3vpn_rib"]),
-            _l3vpn_messages(spark, sf_dir))
+            s.createDataFrame([], TABLE_SCHEMAS["l3vpn_rib"]),
+            _l3vpn_messages(s, sf_dir))
 
     probes = {"ls_link_merge_cdc": probe_ls_link,
               "ls_node_merge_cdc": probe_ls_node,
@@ -179,20 +176,15 @@ def main() -> None:
     for name, fn in probes.items():
         results[name] = {}
         for tag, sf_dir in tiers:
-            old = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(_gate_shuffle_partitions(sf_dir)))
-            try:
-                best = None
-                for _ in range(2):  # min-of-2 cold builds, bench.py law
-                    t0 = time.perf_counter()
-                    state, log = fn(sf_dir)
-                    state.write.format("noop").mode("overwrite").save()
-                    log.write.format("noop").mode("overwrite").save()
-                    dt_ = time.perf_counter() - t0
-                    best = dt_ if best is None else min(best, dt_)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", old)
+            s = sized_session(spark, sf_dir)
+            best = None
+            for _ in range(2):  # min-of-2 cold builds, bench.py law
+                t0 = time.perf_counter()
+                state, log = fn(s, sf_dir)
+                state.write.format("noop").mode("overwrite").save()
+                log.write.format("noop").mode("overwrite").save()
+                dt_ = time.perf_counter() - t0
+                best = dt_ if best is None else min(best, dt_)
             results[name][tag] = round(best, 3)
             print(f"{name} {tag}: {best:.3f}s", flush=True)
         r = results[name]

@@ -169,17 +169,17 @@ def main() -> None:
              ("sf100", sys.argv[3] if len(sys.argv) > 3 else "/tmp/sf100")]
 
     from obmp_psql_spark.plans.views import v_ip_routes
-    from obmp_psql_spark.queries_bmp import _gate_shuffle_partitions
-    from obmp_psql_spark.session import get_spark
+    from obmp_psql_spark.session import get_spark, sized_session
 
     spark = get_spark("bench-views-scale")
     spark.range(10000).selectExpr("id % 7 k").groupBy("k").count() \
         .write.format("noop").mode("overwrite").save()
-    peers, routers = _dims(spark)
 
     def build_view(sf_dir):
-        return v_ip_routes(_facts(spark, sf_dir), peers,
-                           _attrs(spark, sf_dir), routers)
+        s = sized_session(spark, sf_dir)
+        peers, routers = _dims(s)
+        return v_ip_routes(_facts(s, sf_dir), peers,
+                           _attrs(s, sf_dir), routers)
 
     consumers = {
         "view_project": lambda v: v,
@@ -194,24 +194,17 @@ def main() -> None:
         if not os.path.exists(os.path.join(sf_dir, "events.parquet")):
             print(f"skip {tag}: {sf_dir} missing", flush=True)
             continue
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(_gate_shuffle_partitions(sf_dir)))
-        try:
-            plans[tag] = _plan_audit(consumers["view_agg"](
-                build_view(sf_dir)))
-            for cname, consume in consumers.items():
-                best = None
-                for _ in range(2):  # min-of-2 cold builds, bench.py law
-                    t0 = time.perf_counter()
-                    consume(build_view(sf_dir)) \
-                        .write.format("noop").mode("overwrite").save()
-                    dt_ = time.perf_counter() - t0
-                    best = dt_ if best is None else min(best, dt_)
-                results.setdefault(cname, {})[tag] = round(best, 3)
-                print(f"{cname} {tag}: {best:.3f}s", flush=True)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        plans[tag] = _plan_audit(consumers["view_agg"](build_view(sf_dir)))
+        for cname, consume in consumers.items():
+            best = None
+            for _ in range(2):  # min-of-2 cold builds, bench.py law
+                t0 = time.perf_counter()
+                consume(build_view(sf_dir)) \
+                    .write.format("noop").mode("overwrite").save()
+                dt_ = time.perf_counter() - t0
+                best = dt_ if best is None else min(best, dt_)
+            results.setdefault(cname, {})[tag] = round(best, 3)
+            print(f"{cname} {tag}: {best:.3f}s", flush=True)
 
     for cname, r in results.items():
         if "sf1" in r and "sf10" in r:
