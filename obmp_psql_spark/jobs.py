@@ -75,52 +75,17 @@ class JobRunner:
 
     GLOBAL_KEY = ["prefix", "recv_origin_as"]
 
-    # Auto sink-shape: measured, and the measurement OVERRULED the
-    # plan. The r12 extrapolation (incremental meets full at churn ≈
-    # 21.6M rows = 10.8% of a 200M-row rib, BENCH_churn_r12.json)
-    # fitted its per-churn-row slope on CONCENTRATED churn, where
-    # each extra key drags a whole 50k-row bucket through read+write
-    # — a per-KEY cost that SATURATES once every bucket is touched,
-    # not an unbounded per-row cost. Direct arm measurement
-    # (BENCH_churn_auto.json: 2M and 20M rib, churn 0.5%→100% of the
-    # key space, uniform and concentrated) found NO crossover:
-    # incremental won every probed point (e.g. 20M rib / 4M uniform
-    # churn touching all 400 buckets: 16.5 s vs 35.5 s full),
-    # because the full rebuild re-consolidates the base rib that the
-    # watermark slice-scan skips and re-enriches every row where the
-    # incremental path enriches the slice — measured even at TOTAL
-    # key-space replay (churn == rib rows, every bucket):
-    # incremental 27.6 s vs full 54.5 s.
-    # So "auto" resolves to the incremental merge on cost grounds at
-    # every batch shape, recording the census in commit metadata;
-    # full_sync=True stays the EXPLICIT semantic resync (the
-    # slice-only aggregate drifts per-prefix counts until a rebuild
-    # — the same reason the reference schedules sync_global_ip_rib
-    # as its own cron, 2_aggregations.sql:280-353), not a
-    # performance lever.
-    @staticmethod
-    def churn_census(per_bucket_rows: list, n_buckets: int,
-                     rib_rows: int) -> dict:
-        """Churn-locality census for one consolidation cycle:
-        ``per_bucket_rows`` is the collected (bucket, rows) aggregate
-        over the materialized watermark slice — the bucket-pruning
-        job the incremental merge needs anyway, grouped instead of
-        distinct, so the shape data is free. The churn/rib row
-        counts and bucket coverage land in the commit metadata
-        (``global_rib_sink_shape``); see the class comment for why
-        the cost-optimal pick is the incremental merge at every
-        measured batch shape."""
-        churn_rows = sum(r["rows"] for r in per_bucket_rows)
-        touched = sorted(r["b"] for r in per_bucket_rows)
-        return {"churn_rows": churn_rows, "rib_rows": rib_rows,
-                "touched_buckets": touched, "n_buckets": n_buckets,
-                "bucket_fraction": round(len(touched) / n_buckets, 4),
-                "full_sync": False}
-
+    # full_sync is the explicit semantic resync, not a performance
+    # lever: direct measurement (2M and 20M rib, churn from 0.5% to
+    # 100% of the key space, BENCH_churn_auto.json) found no churn
+    # shape where the full rebuild is cheaper than the incremental
+    # merge. The slice-only aggregate drifts per-prefix counts until a
+    # rebuild; the reference schedules sync_global_ip_rib as its own
+    # cron (2_aggregations.sql:280-353).
     def run_global_rib(self, now: dt.datetime | None = None,
                        max_interval: dt.timedelta = dt.timedelta(hours=2),
                        buckets: int | str | None = None,
-                       full_sync: bool | str = False) -> None:
+                       full_sync: bool = False) -> None:
         """update_global_ip_rib equivalent with persisted watermark
         (2_aggregations.sql:181-275).
 
@@ -140,11 +105,7 @@ class JobRunner:
         semantic resync (slice-only aggregates drift per-prefix
         counts until a rebuild; the reference schedules
         sync_global_ip_rib as its own cron for the same reason).
-        False (default) takes the incremental path. ``"auto"`` takes
-        the incremental path too — direct arm measurement found no
-        churn shape where the rebuild is cheaper (class comment) —
-        and additionally records the churn-locality census in the
-        commit metadata (``global_rib_sink_shape``)."""
+        False (default) takes the incremental path."""
         now = now or dt.datetime.utcnow()
         spec = self.store.bucket_spec("global_ip_rib")
         if isinstance(buckets, str) and buckets != "auto":
@@ -168,16 +129,11 @@ class JobRunner:
                            max(self.store.table_rows("global_ip_rib"),
                                self.store.table_rows("ip_rib"))))
         n = buckets or (spec[1] if spec else None)
-        if full_sync == "auto" and n is None:
-            # no bucketed layout to arbitrate: the monolithic
-            # incremental path consolidates only the watermark slice
-            # and is never costlier than the full rebuild — take it
-            full_sync = False
-        # any truthy value except the "auto" sentinel forces the
-        # rebuild (callers pass 1 / numpy bools; `is True` would
-        # silently demote them to the incremental path and the
-        # documented drift-reset would never run)
-        if full_sync and full_sync != "auto":
+        # any truthy value forces the rebuild (callers pass 1 / numpy
+        # bools; `is True` would silently demote them to the
+        # incremental path and the documented drift-reset would never
+        # run)
+        if full_sync:
             # sync_global_ip_rib (2_aggregations.sql:280-353): rebuild
             # from the whole RIB, ignoring the watermark; layout kept
             out = G.update_global_ip_rib(
@@ -234,15 +190,10 @@ class JobRunner:
         # and the enrichment passes
         fresh = G.consolidate(self.store.read("ip_rib"), start) \
             .localCheckpoint()
-        # churn census = the bucket-pruning aggregate the merge needs
-        # anyway, grouped instead of distinct so it also yields the
-        # churn row count — one job, no extra scan
+        # bucket pruning: the state buckets the slice's keys touch
         per_bucket = fresh.groupBy(
             bucket_of(self.GLOBAL_KEY, n).alias("b")) \
             .agg(F.count(F.lit(1)).alias("rows")).collect()
-        if full_sync == "auto":
-            census = self.churn_census(
-                per_bucket, n, self.store.table_rows("ip_rib"))
         touched = [r["b"] for r in per_bucket]
         cur = self.store.read_buckets("global_ip_rib", touched)
         out = G.merge_global(cur, fresh)
@@ -252,13 +203,6 @@ class JobRunner:
             txn.merge_buckets("global_ip_rib", out, self.GLOBAL_KEY,
                               n, touched)
             txn.set_meta("watermark_global_ip_rib", now.isoformat())
-            if full_sync == "auto":
-                txn.set_meta(
-                    "global_rib_sink_shape",
-                    f"incremental:churn={census['churn_rows']}"
-                    f"/rib={census['rib_rows']}"
-                    f"/buckets={len(census['touched_buckets'])}"
-                    f"of{census['n_buckets']}")
 
     def run_peer_rib_counts(self, now: dt.datetime | None = None) -> None:
         """update_peer_rib_counts (15-min snapshot, A7)."""

@@ -4,9 +4,9 @@ update_global_ip_rib 2_aggregations.sql:181-275, sync variant
 
 Scale: the consolidation is a groupBy(prefix, origin_as, peer) then
 groupBy(prefix, origin_as) over the incremental slice of ip_rib
-(timestamp-pruned), with exact distinct-peer counts and no Expand;
-for extreme peer cardinality swap in ``approx_count_distinct`` with
-documented tolerance (SURVEY §7).
+(timestamp-pruned), with exact distinct-peer counts and no Expand
+(``q_approx_distinct_gate`` measures HyperLogLog++ counts for extreme
+peer cardinality against the exact ones, SURVEY §7).
 IRR is an equi-join (broadcast — info_route is small); RPKI is the
 bucketed containment join from operators.lpm with the ROA table
 broadcast.
@@ -23,8 +23,8 @@ from .lpm import containment_join128
 from .rollup import floor_ts
 
 
-def consolidate(ip_rib: DataFrame, start_time: dt.datetime | None,
-                approx_distinct: bool = False) -> DataFrame:
+def consolidate(ip_rib: DataFrame,
+                start_time: dt.datetime | None) -> DataFrame:
     """A5 (2_aggregations.sql:210-233): GROUP BY (prefix, origin_as)
     over rows changed since start_time, excluding AS_TRANS.
 
@@ -34,13 +34,7 @@ def consolidate(ip_rib: DataFrame, start_time: dt.datetime | None,
     peer), keeping the min/max of ``is_withdrawn``, then per (prefix,
     origin), where a peer advertises iff its min is 0 and withdraws
     iff its max is 1. Null peers and null ``is_withdrawn`` drop out of
-    the counts exactly as they do under ``countDistinct``.
-
-    ``approx_distinct`` swaps the exact counts for HyperLogLog++
-    (default rsd 5%) over the raw rows in one aggregation — SURVEY §7
-    known-hard #4: fixed memory per key at extreme peer cardinality.
-    Keep exact for the oracle gate; flip on with the deviation
-    documented."""
+    the counts exactly as they do under ``countDistinct``."""
     rib = ip_rib.filter(F.col("origin_as") != 23456)  # P2
     if start_time is not None:
         rib = rib.filter((F.col("timestamp") >= F.lit(start_time))
@@ -48,17 +42,11 @@ def consolidate(ip_rib: DataFrame, start_time: dt.datetime | None,
     withdrawn = F.col("is_withdrawn").cast("int")
     maxed = ["prefix_len", "timestamp", "prefix_start", "prefix_end",
              "prefix_base_hi", "prefix_base_lo"]
-    if approx_distinct:
-        count = F.approx_count_distinct
-        rows = rib.withColumn("__w_min", withdrawn) \
-            .withColumn("__w_max", withdrawn)
-    else:
-        count = F.count
-        rows = rib.groupBy("prefix", "origin_as", "peer_hash_id").agg(
-            *(F.max(c).alias(c) for c in maxed),
-            F.min("first_added_timestamp").alias("first_added_timestamp"),
-            F.min(withdrawn).alias("__w_min"),
-            F.max(withdrawn).alias("__w_max"))
+    rows = rib.groupBy("prefix", "origin_as", "peer_hash_id").agg(
+        *(F.max(c).alias(c) for c in maxed),
+        F.min("first_added_timestamp").alias("first_added_timestamp"),
+        F.min(withdrawn).alias("__w_min"),
+        F.max(withdrawn).alias("__w_max"))
     peer = F.col("peer_hash_id")
     return (
         rows.groupBy("prefix", F.col("origin_as").alias("recv_origin_as"))
@@ -67,10 +55,10 @@ def consolidate(ip_rib: DataFrame, start_time: dt.datetime | None,
             F.min("__w_min").cast("boolean").alias("is_withdrawn"),  # bool_and
             F.max("timestamp").alias("timestamp"),
             F.min("first_added_timestamp").alias("first_added_timestamp"),
-            count(peer).alias("num_peers"),
-            count(F.when(F.col("__w_min") == 0, peer))
+            F.count(peer).alias("num_peers"),
+            F.count(F.when(F.col("__w_min") == 0, peer))
              .alias("advertising_peers"),
-            count(F.when(F.col("__w_max") == 1, peer))
+            F.count(F.when(F.col("__w_max") == 1, peer))
              .alias("withdrawn_peers"),
             F.max("prefix_start").alias("prefix_start"),
             F.max("prefix_end").alias("prefix_end"),

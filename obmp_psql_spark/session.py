@@ -97,6 +97,26 @@ def get_spark(app_name: str = _APP, extra_conf: dict | None = None) -> SparkSess
 # dead session is detected by the conf probe below and its entry
 # rebuilt under the new session's id.
 _TABLE_CACHE: dict = {}
+# (path, mtime_ns, size) -> the file's schema as Spark reads it. Process
+# wide, unlike the plan memo: a schema handed to the reader skips the
+# footer-inference job that each session (a sized clone and its caller)
+# would otherwise run for the same file, as store reads do with their
+# recorded schemas.
+_SCHEMAS: dict = {}
+
+
+def _read_parquet(spark: SparkSession, path: str):
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)  # Spark's own missing-path error
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
@@ -124,7 +144,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
         df = cached.get(name)
         if df is None:
             path = f"{sf_dir}/{name}.parquet"
-            df = normalize_ts(spark.read.parquet(path))
+            df = normalize_ts(_read_parquet(spark, path))
             df.createOrReplaceTempView(name)
             cached[name] = df
         out[name] = df

@@ -283,7 +283,7 @@ class BmpStreamingIngest:
         writeStream with sources.kafka.read_stream instead.
         ``trigger_interval`` sets the micro-batch cadence for the
         continuous (``available_now=False``) mode — the freshness
-        knob measured by tools/bench_latency.py."""
+        knob measured by the ``latency`` family of tools/probe.py."""
         handler = self.HANDLERS[msg_type].__get__(self)
         reader = (
             self.spark.readStream.schema(MESSAGE_SCHEMAS[msg_type])

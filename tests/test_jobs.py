@@ -130,13 +130,12 @@ def test_global_rib_bucketed_incremental_matches_monolithic(spark, tmp_path):
         (["prefix", "recv_origin_as"], 8)
 
 
-def test_global_rib_auto_sink_shape_census(spark, tmp_path):
-    """``full_sync="auto"``: the incremental merge runs at EVERY
-    batch shape (direct arm measurement found no churn shape where
-    the full rebuild is cheaper — BENCH_churn_auto.json falsified
-    the r12 crossover extrapolation; see JobRunner class comment),
-    and the churn-locality census is recorded in commit metadata.
-    full_sync=True stays the explicit semantic resync."""
+def test_global_rib_incremental_churn_keeps_layout(spark, tmp_path):
+    """The default incremental merge takes concentrated and uniform
+    churn on a bucketed table and keeps its layout (direct arm
+    measurement found no churn shape where the full rebuild is
+    cheaper, BENCH_churn_auto.json); full_sync stays the explicit
+    semantic resync."""
     store = ParquetStateStore(spark, str(tmp_path / "auto"))
     rib, _ = apply_unicast_prefix(empty(spark, "ip_rib"), msgs(
         spark, "unicast_prefix",
@@ -153,29 +152,17 @@ def test_global_rib_auto_sink_shape_census(spark, tmp_path):
         spark, "unicast_prefix",
         [upx("add", "h1", "p1", "aC", ts(20), prefix="10.1.0.0")]))
     store.overwrite("ip_rib", upd)
-    jr.run_global_rib(now=ts(25), full_sync="auto")
-    shape = store.get_meta("global_rib_sink_shape")
-    assert shape.startswith("incremental:churn=1/"), shape
+    jr.run_global_rib(now=ts(25))
 
-    # uniform replay-shaped churn: every key updates — STILL the
-    # incremental merge (the measured cost law), census recorded
+    # uniform replay-shaped churn: every key updates
     upd, _ = apply_unicast_prefix(store.read("ip_rib"), msgs(
         spark, "unicast_prefix",
         [upx("add", f"h{i}", f"p{i % 2}", f"aU{i}", ts(30, i),
              prefix=f"10.{i}.0.0") for i in range(40)]))
     store.overwrite("ip_rib", upd)
-    jr.run_global_rib(now=ts(35), full_sync="auto")
-    shape = store.get_meta("global_rib_sink_shape")
-    assert shape.startswith("incremental:churn=40/"), shape
+    jr.run_global_rib(now=ts(35))
     assert store.bucket_spec("global_ip_rib") == \
         (["prefix", "recv_origin_as"], 8)
-
-    # census shape data: one aggregate yields rows + touched buckets
-    rows = lambda pairs: [{"b": b, "rows": r} for b, r in pairs]  # noqa: E731
-    c = JobRunner.churn_census(rows([(0, 5), (3, 15)]), 8, 1000)
-    assert c["churn_rows"] == 20 and c["touched_buckets"] == [0, 3]
-    assert c["bucket_fraction"] == 0.25 and c["rib_rows"] == 1000
-    assert c["full_sync"] is False  # measured: no cost crossover
 
     # the explicit resync override still rebuilds and keeps layout;
     # truthy non-bool values force the rebuild too (pre-r13 contract)
@@ -369,21 +356,10 @@ def test_jdbc_upsert_statement(spark):
     assert "hash_id=excluded.hash_id" not in sql  # keys not in SET
 
 
-def test_approx_consolidation_and_compaction(spark, tmp_path):
+def test_log_compaction(spark, tmp_path):
     import glob
 
-    from obmp_psql_spark.operators.global_rib import consolidate
-
     store = _seed_store(spark, tmp_path)
-    exact = {(r.prefix, r.recv_origin_as): r.num_peers
-             for r in consolidate(store.read("ip_rib"), None).collect()}
-    approx = {(r.prefix, r.recv_origin_as): r.num_peers
-              for r in consolidate(store.read("ip_rib"), None,
-                                   approx_distinct=True).collect()}
-    assert set(exact) == set(approx)
-    for k in exact:  # HLL++ at rsd 5% is exact for tiny cardinalities
-        assert abs(approx[k] - exact[k]) <= max(1, int(0.1 * exact[k]))
-
     # compaction: fragment the log with several small appends, then
     # compact to a bounded file count without losing rows
     log = store.read("ip_rib_log")

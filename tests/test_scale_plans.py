@@ -1102,6 +1102,33 @@ def test_stream_partitions_derive_from_volume(spark, tmp_path):
     assert sized_session(small, fake(1 << 20)) is small
 
 
+def test_sized_clone_loads_tables_without_footer_job(spark, tmp_path):
+    """The parquet schema is memoized per file, process-wide, so a
+    sized clone loading a table its caller already loaded runs no
+    footer-inference job (one job per session without the memo). A
+    fresh copy of the file starts both memos cold."""
+    import shutil
+
+    from obmp_psql_spark.session import load_tables, sized_session
+
+    from .conftest import SF_SMALL
+
+    shutil.copy(f"{SF_SMALL}/events.parquet", tmp_path / "events.parquet")
+    sf = str(tmp_path)
+    load_tables(spark, sf, ("events",))
+    clone = sized_session(spark, sf)
+    assert clone is not spark
+    sc = spark.sparkContext
+    group = "clone-load-tables"
+    sc.setJobGroup(group, "footer-inference pin")
+    try:
+        ev = load_tables(clone, sf, ("events",))["events"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert ev.count() == load_tables(spark, sf, ("events",))["events"].count()
+
+
 def test_gates_never_set_the_shared_session_partitions(spark, monkeypatch):
     """No gate sets ``spark.sql.shuffle.partitions`` on the session it
     is handed: a conf change there re-plans any query planning on the

@@ -1,4 +1,5 @@
-"""Generate PLANS.md: a physical-plan audit of every registered query.
+"""Physical plans of the registered queries: the PLANS.md audit of
+every query, or the formatted plans of named ones.
 
 For each query we count the scale-relevant plan features straight out
 of `df.explain("formatted")` output:
@@ -15,13 +16,20 @@ of `df.explain("formatted")` output:
 Full formatted plans are embedded for the flagship queries so a
 reviewer can check join strategies and scan pruning line by line.
 
-Run: `python tools/dump_plans.py` (writes PLANS.md at the repo root;
-uses $SPARK_GRAFT_SF_DIR, default sf0.01 — plan SHAPE is sf-invariant
-modulo AQE thresholds, which are disabled for the dump).
+Run:
+
+    python tools/dump_plans.py [--sf dir]
+        writes PLANS.md at the repo root;
+    python tools/dump_plans.py --out plans/<dir> [--suffix s] q1 q2 ...
+        writes plans/<dir>/<query>_<s>.txt, one formatted plan each.
+
+Both use the sf0.01 test data by default (plan shape is sf-invariant
+modulo AQE thresholds, and AQE is off for the dump).
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import re
@@ -71,7 +79,18 @@ def audit(plan: str) -> dict:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    ap = argparse.ArgumentParser(description="Dump physical plans.")
+    ap.add_argument("queries", nargs="*",
+                    help="queries to dump (none: regenerate PLANS.md)")
+    ap.add_argument("--out", help="directory for the named queries' plans")
+    ap.add_argument("--suffix", default="",
+                    help="file name suffix: <query>_<suffix>.txt")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01",
+                    help="test data directory")
+    args = ap.parse_args()
+    if args.queries and not args.out:
+        ap.error("--out is required with named queries")
+    sf_dir = args.sf
     from obmp_psql_spark.registry import all_specs
     from obmp_psql_spark.session import get_spark
 
@@ -85,6 +104,15 @@ def main() -> None:
     import obmp_psql_spark.queries_bmp as _qb
     _qb.PLAN_AUDIT = True
     specs = all_specs()
+    if args.queries:
+        os.makedirs(args.out, exist_ok=True)
+        for name in args.queries:
+            path = os.path.join(args.out, name + (
+                f"_{args.suffix}" if args.suffix else "") + ".txt")
+            with open(path, "w") as fh:
+                fh.write(formatted_plan(specs[name].fn(spark, sf_dir)))
+            print("wrote", path)
+        return
 
     rows = []
     full: dict[str, str] = {}

@@ -1,5 +1,5 @@
 """Generate a larger synthetic scale factor from sf0.1 for the
-linear-scaling probe (tools/bench_scale.py).
+decade probes (tools/probe.py).
 
 /root/testdata is read-only and tops out at sf0.1, but the O(churn)
 claims (bucketed merge, band join, incremental consolidation) need at
