@@ -1,13 +1,34 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line with per-query wall seconds.
+"""Benchmark harness: one pass over the registered queries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS]; prints ONE JSON line with per-query wall
+seconds.
 
-Each query is forced to full materialization via a cheap count-style
-action (write to noop would also work; count keeps it deterministic).
+    python bench.py
+    BENCH_QUERIES=q_bmp_chg_stats,q_bmp_rib_merge python bench.py
 
-Artifact naming: the full per-query timings go to BENCH_LOCAL_r{NN}.json
-where NN = $BENCH_ROUND, else max(CORRECTNESS round)+1. The driver runs
-this script AFTER writing CORRECTNESS_r{N}.json, so its end-of-round-N
+Each query is forced to full materialization through the noop sink,
+inside its own root span of the process's one tracer (``tracer`` in
+tools/probe.py, over ``perfbench.trace.Tracer``). After the pass the
+status store is read once and each query's Spark counter profile goes
+to ``query_meta[name]["profile"]``: wall seconds, jobs, stages, tasks,
+executor run, CPU and GC seconds, shuffle read and write bytes, spill
+bytes, input bytes and driver-only seconds. ``value`` is the pass's
+wall. The three ingest headlines run first, on a cold pipeline build,
+and twice more cold after the pass (``cold_run``): their published
+time is the min of the three draws, the first is kept in
+``timings_cold``, and every draw's profile in ``headlines``.
+
+The ``regressions`` block compares this pass with the previous round's
+record (BENCH_LOCAL_r{N-1}.json or one of its ``.prev`` archives) taken
+at the same (cpus, sf) and carrying profiles. A query is "real" when
+its jobs, tasks or input bytes grew more than 1.3x, or its executor CPU
+did with both sides at 2 s or more; "noise" when only its wall grew
+more than 1.3x. With no such record there is no block and
+``regressions_vs`` is null.
+
+Artifact naming: the full record goes to BENCH_LOCAL_r{NN}.json where
+NN = $BENCH_ROUND, else max(CORRECTNESS round)+1. The driver runs this
+script AFTER writing CORRECTNESS_r{N}.json, so its end-of-round-N
 record lands at r{N+1} — the same file the next round's first manual run
 would target. Guard: every artifact stamps `git_head`; overwriting a
 file recorded at a DIFFERENT head first preserves it to `<name>.prev`
@@ -17,90 +38,17 @@ BENCH_DRIVER_r08.json).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.append(os.path.join(ROOT, "tools"))
 
-
-# Ambient load above this 1-min average marks a headline draw as
-# noise-suspect: four same-code draws in round 10 spanned 26k-56k msg/s
-# steady purely with ambient load (BENCH_r10 drew at 11.5, r9 at 3.4),
-# making the round-over-round delta unreadable. Draws are stamped with
-# the AMBIENT load of their draw block — sampled after a bounded
-# idle-wait while this process tree is quiet, never mid-burst: loadavg
-# right after our own 32-thread work reads the bench itself (a 2-s
-# full-tilt draw adds ~1 to the 1-min average; the 154-query pass adds
-# ~5), which is measured work, not host noise. The judged min-of-N
-# keeps only ambient-qualified draws when any exist.
-HEADLINE_LOAD_GATE = 2.0
-# Bounded idle waits: never block the round for more than this many
-# seconds even on a permanently busy host.
-IDLE_WAIT_MAX_S = 240
-# shorter bound for the mid-run wait before the judged cold-draw block
-# (the wait only needs to let OUR one-minute contribution decay)
-REDRAW_WAIT_MAX_S = 150
-IDLE_POLL_S = 15
-
-
-def _wait_ambient(max_wait_s: int) -> tuple[float, int]:
-    """Sleep (bounded) until the 1-min load drops under the gate,
-    then return (ambient_load, seconds_waited). Call ONLY while this
-    process tree is idle — that is what makes the reading ambient."""
-    waited = 0
-    while (os.getloadavg()[0] > HEADLINE_LOAD_GATE
-           and waited < max_wait_s
-           and not os.environ.get("BENCH_NO_IDLE_WAIT")):
-        time.sleep(IDLE_POLL_S)
-        waited += IDLE_POLL_S
-    return round(os.getloadavg()[0], 2), waited
-
-
-# cgroup CPU counter (r13 verdict #4): the container's cgroup keeps
-# ONE monotonic usage counter maintained by the kernel scheduler —
-# reaped children are accounted exactly once at the instant they run,
-# so the /proc tree walk's double-count race (a worker counted both
-# directly and via its reaper's cutime in one non-atomic scan —
-# SURVEY finding 43) cannot happen and deltas are never negative.
-# Probe order: pure cgroup-v2 root, hybrid-layout unified mount, then
-# v1 cpuacct. Scope trade-off, recorded via `cpu_source` in the
-# artifact: the counter covers the WHOLE container (bench + any
-# sibling process), not just this process tree — acceptable because
-# the bench is the only significant consumer during a pass and every
-# timing already carries a load stamp.
-_CGROUP_CANDIDATES = (
-    ("/sys/fs/cgroup/cpu.stat", "usage_usec"),
-    ("/sys/fs/cgroup/unified/cpu.stat", "usage_usec"),
-    ("/sys/fs/cgroup/cpuacct/cpuacct.usage", None),  # ns, bare value
-)
-
-
-def _find_cgroup_counter() -> tuple[str, str | None] | None:
-    for path, key in _CGROUP_CANDIDATES:
-        try:
-            if _read_cgroup_usec(path, key) > 0:
-                return path, key
-        except (OSError, ValueError):
-            continue
-    return None
-
-
-def _read_cgroup_usec(path: str, key: str | None) -> float:
-    with open(path) as fh:
-        data = fh.read()
-    if key is None:  # cpuacct.usage: one nanosecond total
-        return int(data) / 1e3
-    for line in data.splitlines():
-        k, _, v = line.partition(" ")
-        if k == key:
-            return int(v)
-    raise ValueError(f"{key} not in {path}")
-
-
-_CGROUP_COUNTER = _find_cgroup_counter()
-
+import probe  # noqa: E402  one module per process: it holds the tracer
 
 # The driver archives only the LAST ~2000 chars of stdout, so the whole
 # compact line must stay under this budget (round-6 lesson: the full
@@ -110,21 +58,24 @@ COMPACT_BUDGET = 1700
 # Keys that stay file-only: either rebuilt for the compact line
 # (queries), or bulky draw provenance that starved the line of its
 # per-query contract in round 14 (the 1700-char budget went NEGATIVE
-# once `headlines`/`heavy_idle` draws were inlined, so the driver got
+# once the headline draws were inlined, so the driver got
 # `"queries":{}` and PERF_r14 had no per-query or scaling data).
 _FILE_ONLY_KEYS = frozenset((
-    "queries", "query_meta", "regressions",
-    # draw provenance (full dicts of draws): file-only
-    "headlines", "heavy_idle",
+    "queries", "query_meta", "regressions", "headlines",
     # secondary scalars reconstructible from the full record; dropped
-    # from the line so the budget buys ~15 more per-query timings
-    "load_before", "load_after", "headline_load_reruns",
-    "idle_waited_s", "redraw_waited_s", "stream_redraw_foreign_load",
-    "timings_cold", "headline_cpu_s_per_kmsg",
-    "min_of_n_queries", "min_of_n",
-    "pass_cpu_drift_vs_prev", "pass_cpu_drift_alert",
-    "total_raw", "regressions_vs",
+    # from the line so the budget buys more per-query timings
+    "timings_cold", "regressions_vs", "profile_read_s",
 ))
+
+# Counters of a query's work: growth in any of them is a "real"
+# regression. Shuffle bytes are not among them: q_ann_lsh wrote 10,224
+# vs 3,000 shuffle records in two fresh processes on the same code.
+WORK_COUNTERS = ("jobs", "tasks", "input_bytes")
+GROWTH = 1.3
+# executor CPU decides only at this many seconds on both sides: below
+# it, same-code processes moved more than 1.3x on 15 queries
+CPU_FLOOR_S = 2.0
+HEADLINES = ("q_bmp_rib_merge", "q_bmp_txn_store", "q_bmp_txn_bucketed")
 
 
 def build_compact(out: dict, budget: int = COMPACT_BUDGET) -> dict:
@@ -161,58 +112,6 @@ def build_compact(out: dict, budget: int = COMPACT_BUDGET) -> dict:
         compact["queries"][name] = timings[name]
         left -= entry
     return compact
-
-
-def _tree_cpu_seconds() -> float:
-    """CPU seconds spent by the container since boot (cgroup counter;
-    monotonic, reaped children included exactly once), falling back to
-    a /proc/<pid>/stat tree walk over this process's live descendants
-    when no cgroup counter is readable. The JVM and its Python/Arrow
-    workers are covered either way; CPU-seconds per message is far
-    less sensitive to ambient host load than wall (round-10 verdict
-    stretch item)."""
-    if _CGROUP_COUNTER:
-        return _read_cgroup_usec(*_CGROUP_COUNTER) / 1e6
-    import glob as _glob
-    tick = os.sysconf("SC_CLK_TCK")
-    me = os.getpid()
-    procs: dict[int, tuple[int, float]] = {}  # pid -> (ppid, cpu_ticks)
-    for stat in _glob.glob("/proc/[0-9]*/stat"):
-        try:
-            with open(stat) as fh:
-                data = fh.read()
-            # comm may contain spaces/parens: fields start after ") "
-            rest = data[data.rindex(")") + 2:].split()
-            # rest[0]=state rest[1]=ppid rest[11]=utime rest[12]=stime
-            # rest[13]=cutime rest[14]=cstime — the reaped-children
-            # counters keep a descendant's CPU visible after it exits
-            # (Python/Arrow workers the JVM reaps between two samples
-            # would otherwise make the delta undercount or go negative)
-            procs[int(stat.split("/")[2])] = (
-                int(rest[1]), int(rest[11]) + int(rest[12])
-                + int(rest[13]) + int(rest[14]))
-        except (OSError, ValueError, IndexError):
-            continue  # process exited mid-scan
-    children: dict[int, list[int]] = {}
-    for pid, (ppid, _) in procs.items():
-        children.setdefault(ppid, []).append(pid)
-    total, stack = 0, [me]
-    while stack:
-        pid = stack.pop()
-        if pid in procs:
-            total += procs[pid][1]
-            stack.extend(children.get(pid, ()))
-    return total / tick
-
-
-def _cpu_delta(cpu0: float) -> float | None:
-    """CPU spent since ``cpu0``. With the cgroup counter the delta is
-    exact and never negative. On the /proc fallback the scan is not
-    atomic, so a worker reaped mid-scan can be counted both directly
-    and via its reaper's cutime in ONE sample — observed as a negative
-    delta on short queries (SURVEY finding 43). None beats a lie."""
-    d = _tree_cpu_seconds() - cpu0
-    return round(d, 3) if d >= 0 else None
 
 
 def preserve_displaced(local_path: str, git_head: str, cpus: int,
@@ -252,42 +151,156 @@ def preserve_displaced(local_path: str, git_head: str, cpus: int,
     os.replace(local_path, dest)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from obmp_psql_spark.registry import all_specs
-    from obmp_psql_spark.session import get_spark
+# -- the timed pass -----------------------------------------------------
 
-    # Stamp host load so the artifact is self-explaining: the host
-    # shows phantom load (Firecracker hypervisor noise, ±25% wall on
-    # identical commits — SURVEY finding #16), and a cold-ingest number
-    # recorded under load > 2 is not comparable round-over-round.
-    # Idle gate (round-10 verdict #1): wait — bounded — for the 1-min
-    # average to drop under the gate before ANY timed work starts, so
-    # the judged headline draws start from a quiet host when possible.
-    ambient0, idle_waited = _wait_ambient(IDLE_WAIT_MAX_S)
-    load_before = [round(x, 2) for x in os.getloadavg()]
+def _draw(spark, tr, spec, sf_dir) -> tuple[dict, float]:
+    """One materialized run of ``spec`` in its own root span: (span,
+    wall seconds)."""
+    from obmp_psql_spark.operators.cache import release_build_artifacts
 
-    spark = get_spark("bench")
-    specs = all_specs()
+    t0 = time.perf_counter()
+    with tr.span(spec.name, "bench", root=True) as span:
+        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        # free build-once artifacts (band/posting/fingerprint tables)
+        # so the pass doesn't accumulate storage-memory blocks; the
+        # release is timed as part of the query that created them
+        release_build_artifacts()
+    return span, round(time.perf_counter() - t0, 3)
 
-    # headline set: the shuffle/join/window-heavy operators that
-    # dominate 100 TB cost; cheap filters ride along for coverage.
-    names = os.environ.get("BENCH_QUERIES")
-    selected = names.split(",") if names else sorted(specs)
-    # the ingest-rate headlines must time a COLD pipeline build, and
-    # the other gate queries legitimately share it once built — so run
-    # the headline queries first instead of clearing the memo cache
-    # mid-run (which made later gate queries rebuild rib + dims twice)
-    head = [q for q in ("q_bmp_rib_merge", "q_bmp_txn_store",
-                        "q_bmp_txn_bucketed") if q in selected]
-    selected = head + [q for q in selected if q not in head]
 
-    # warm the JVM once so the first query doesn't absorb ~5s of
-    # session startup in its own number: scan path, then one tiny job
-    # through the shuffle/window/join/codegen machinery the gate
-    # pipelines lean on
+def cold_run(spark, tr, spec, sf_dir) -> tuple[dict, float]:
+    """A draw with the pipeline memo and build artifacts cleared
+    first, so nothing an earlier query built is reused."""
+    from obmp_psql_spark.operators.cache import release_build_artifacts
+    from obmp_psql_spark.queries_bmp import _PIPELINE_CACHE
+
+    _PIPELINE_CACHE.clear()
+    release_build_artifacts()
+    return _draw(spark, tr, spec, sf_dir)
+
+
+def run_pass(spark, specs, names, sf_dir, cold=()) -> tuple:
+    """Run ``names`` once each, in order, then two ``cold_run`` draws
+    of each name in ``cold``. Returns (name -> profiles of its draws,
+    the pass's wall seconds, the seconds the status-store read took);
+    the store is read once, after every draw."""
+    tr = probe.tracer(spark)
+    drawn = {}
+    t0 = time.perf_counter()
+    for name in names:
+        drawn[name] = [_draw(spark, tr, specs[name], sf_dir)]
+    total = round(time.perf_counter() - t0, 3)
+    for name in cold:
+        drawn[name] += [cold_run(spark, tr, specs[name], sf_dir)
+                        for _ in range(2)]
+    t1 = time.perf_counter()
+    report = tr.report(t1 - t0)
+    read_s = round(time.perf_counter() - t1, 3)
+    draws = {name: [probe.profile(report, span, wall)
+                    for span, wall in ds] for name, ds in drawn.items()}
+    return draws, total, read_s
+
+
+# -- regressions --------------------------------------------------------
+
+def grown(cur: dict, prev: dict) -> dict:
+    """The work counters of profile ``cur`` that grew more than
+    GROWTH-fold over ``prev``, as name -> [prev, cur]."""
+    out = {k: [prev.get(k, 0), cur.get(k, 0)] for k in WORK_COUNTERS
+           if cur.get(k, 0) > GROWTH * prev.get(k, 0)}
+    c, p = cur.get("executor_cpu_s", 0), prev.get("executor_cpu_s", 0)
+    if c > GROWTH * p and min(c, p) >= CPU_FLOOR_S:
+        out["executor_cpu_s"] = [p, c]
+    return out
+
+
+def regressions(cur: dict, prev: dict) -> list[dict]:
+    """Per query profiled in both records: "real" when a work counter
+    grew (``grown``), else "noise" when the wall grew more than
+    GROWTH-fold; real ones first, then by wall ratio."""
+    rows = []
+    for name, wall in cur["queries"].items():
+        cp = cur["query_meta"].get(name, {}).get("profile")
+        pp = prev.get("query_meta", {}).get(name, {}).get("profile")
+        pw = prev.get("queries", {}).get(name)
+        if not (cp and pp and pw):
+            continue
+        moved = grown(cp, pp)
+        if not moved and wall <= GROWTH * pw:
+            continue
+        rows.append({"query": name, "verdict": "real" if moved else "noise",
+                     "prev_wall_s": pw, "wall_s": wall,
+                     "wall_ratio": round(wall / pw, 2), "grown": moved})
+    return sorted(rows, key=lambda r: (r["verdict"] != "real",
+                                       -r["wall_ratio"]))
+
+
+def previous_records(root: str, round_n: int):
+    """(file name, record) of the previous round's full record, then
+    of its ``.prev`` archives; unreadable files are skipped."""
+    base = os.path.join(root, f"BENCH_LOCAL_r{round_n - 1:02d}.json")
+    for path in [base] + sorted(glob.glob(glob.escape(base) + ".*.prev")):
+        try:
+            with open(path) as fh:
+                rec = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        yield os.path.basename(path), rec
+
+
+def compare(cur: dict, previous) -> dict:
+    """``regressions_vs`` and ``regressions`` against the first of
+    ``previous`` taken at ``cur``'s (cpus, sf) that carries profiles;
+    ``regressions_vs`` None and no block when there is none."""
+    for name, rec in previous:
+        if ((rec.get("cpus"), rec.get("sf")) == (cur["cpus"], cur["sf"])
+                and any("profile" in m
+                        for m in rec.get("query_meta", {}).values())):
+            return {"regressions_vs": name,
+                    "regressions": regressions(cur, rec)}
+    return {"regressions_vs": None}
+
+
+# -- the record ---------------------------------------------------------
+
+def infer_round(root: str) -> int:
+    """$BENCH_ROUND, else the round being benched by CORRECTNESS files
+    (module docstring)."""
+    if os.environ.get("BENCH_ROUND") is not None:
+        return int(os.environ["BENCH_ROUND"])
+    import re
+    import subprocess
+    done = [int(m.group(1)) for f in glob.glob(
+        os.path.join(root, "CORRECTNESS_r*.json"))
+        if (m := re.search(r"_r(\d+)\.json$", f))]
+    if not done:
+        return 0
+    # Key the record by the round actually being benched. The driver's
+    # end-of-round run happens right after it writes CORRECTNESS_r{N}.json
+    # and BEFORE the round-boundary commit, so that newest file is still
+    # untracked — the bench belongs to round N. Mid-round runs see the
+    # newest CORRECTNESS file already committed — the bench belongs to
+    # round N+1. (Round 11's record landed one past its own round
+    # because the inference always added one.)
+    newest = f"CORRECTNESS_r{max(done):02d}.json"
+    tracked = subprocess.run(
+        ["git", "-C", root, "ls-files", "--error-unmatch", newest],
+        capture_output=True).returncode == 0
+    return max(done) + (1 if tracked else 0)
+
+
+def _warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM once so the first query doesn't absorb ~5 s of
+    session startup in its own number: scan path, then one tiny job
+    through the shuffle/window/join/codegen machinery the gate
+    pipelines lean on, then the Arrow/Python-worker path (the ingest
+    pipeline's v6 parse is a pandas UDF, and worker startup must not
+    land inside the first headline ingest number)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
+
+    from obmp_psql_spark.functions import net
+
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").limit(1000)
     w = Window.partitionBy("user_id").orderBy("event_id")
     warm = (ev.withColumn("rn", F.row_number().over(w))
@@ -296,234 +309,43 @@ def main() -> None:
         .write.format("noop").mode("overwrite").save()
     spark.createDataFrame([(1, "a")], "id int, s string") \
         .write.format("noop").mode("overwrite").save()
-    # warm the Arrow/Python-worker path too: the ingest pipeline's v6
-    # parse is a pandas UDF, and worker startup (~1-2s) must not land
-    # inside the first headline ingest number
-    from obmp_psql_spark.functions import net
     spark.createDataFrame([("::1",)], "ip string") \
         .select(net.ipv6_to_longs(F.col("ip"))) \
         .write.format("noop").mode("overwrite").save()
 
-    from obmp_psql_spark.operators.cache import release_build_artifacts
 
-    timings: dict[str, float] = {}
-    # every headline draw is stamped with the AMBIENT 1-min load of
-    # its draw block and the CPU-seconds the whole process tree spent
-    # on it: draws whose ambient > HEADLINE_LOAD_GATE are
-    # noise-suspect and excluded from the judged min-of-N when
-    # qualified draws exist
-    draws: dict[str, list[dict]] = {n: [] for n in head}
-    # EVERY query timing carries (1-min load at draw start, process-
-    # tree CPU-seconds): a cross-round wall delta on untouched code is
-    # only interpretable with a load stamp, and cpu_s separates "the
-    # query did more work" from "the host was busy" (round-11's
-    # q_stream_session_window 2.77x was unexplainable without these)
-    query_meta: dict[str, dict] = {}
-    t_all = time.perf_counter()
-    for name in selected:
-        spec = specs[name]
-        load0 = round(os.getloadavg()[0], 2)
-        cpu0 = _tree_cpu_seconds()
-        t0 = time.perf_counter()
-        df = spec.fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        # free build-once artifacts (band/posting/fingerprint tables)
-        # so 68 queries don't accumulate storage-memory blocks; the
-        # release is timed as part of the query that created them
-        release_build_artifacts()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        query_meta[name] = {
-            "load_at_draw": load0,
-            "cpu_s": _cpu_delta(cpu0),
-        }
-        if name in draws:
-            draws[name].append({
-                "wall_s": timings[name],
-                "cpu_s": query_meta[name]["cpu_s"],
-                "load_at_draw": ambient0,
-            })
-    # total = one pass over every query (the cross-round comparison
-    # metric); the headline re-runs below are excluded by design
-    total = round(time.perf_counter() - t_all, 3)
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from obmp_psql_spark.registry import all_specs
+    from obmp_psql_spark.session import get_spark
 
-    # The ingest headlines are judged numbers; on a shared host a
-    # single cold run can absorb multi-second hypervisor noise
-    # (measured: same commit, idle-box 5.4s vs loaded-box 6.7s for
-    # q_bmp_rib_merge). Standard mitigation: a second cold build
-    # (pipeline memo cleared, so nothing is reused) and min-of-2 —
-    # min approximates the noise-free time without changing what is
-    # measured. Costs ~15s of bench wall, only for the three gates.
-    # round inference hoisted above the redraw block: both the
-    # streaming redraw trigger and the regressions block need the
-    # PREVIOUS round's record
-    round_n = os.environ.get("BENCH_ROUND")
-    if round_n is None:
-        import glob
-        import re
-        import subprocess
-        here = os.path.dirname(os.path.abspath(__file__))
-        done = [int(m.group(1)) for f in glob.glob(
-            os.path.join(here, "CORRECTNESS_r*.json"))
-            if (m := re.search(r"_r(\d+)\.json$", f))]
-        if done:
-            # Key the record by the round actually being benched. The
-            # driver's end-of-round run happens right after it writes
-            # CORRECTNESS_r{N}.json and BEFORE the round-boundary
-            # commit, so that newest file is still untracked — the
-            # bench belongs to round N. Mid-round runs see the newest
-            # CORRECTNESS file already committed — the bench belongs
-            # to round N+1. (Round 11's record landed one past its own
-            # round because the inference always added one.)
-            newest = f"CORRECTNESS_r{max(done):02d}.json"
-            tracked = subprocess.run(
-                ["git", "-C", here, "ls-files", "--error-unmatch", newest],
-                capture_output=True).returncode == 0
-            round_n = max(done) + (1 if tracked else 0)
-        else:
-            round_n = 0
-    prev: dict = {}
-    if not names:
-        prev_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            f"BENCH_LOCAL_r{int(round_n) - 1:02d}.json")
-        if os.path.exists(prev_path):
-            try:
-                with open(prev_path) as fh:
-                    prev = json.load(fh)
-            except Exception:
-                prev = {}
-    prev_q = prev.get("queries", {})
-    prev_meta = prev.get("query_meta", {})
+    # PROBE_CONF keeps every job and stage of the pass in the status
+    # store until the one read after it
+    spark = get_spark("bench", probe.PROBE_CONF)
+    specs = all_specs()
+    names = os.environ.get("BENCH_QUERIES")
+    selected = names.split(",") if names else sorted(specs)
+    # the ingest-rate headlines must time a COLD pipeline build, and
+    # the other gate queries legitimately share it once built — so run
+    # the headline queries first instead of clearing the memo cache
+    # mid-run (which made later gate queries rebuild rib + dims twice)
+    head = [q for q in HEADLINES if q in selected]
+    selected = head + [q for q in selected if q not in head]
+    _warm_up(spark, sf_dir)
 
-    cold: dict[str, float] = {}
-    headline_reruns = 0
-    redraw_waited = 0
-    headline_meta: dict[str, dict] = {}
-    heavy_meta: dict[str, dict] = {}
-    foreign_load = None
-    if not names:
-        from obmp_psql_spark.queries_bmp import _PIPELINE_CACHE
-
-        def cold_run(name: str, ambient: float) -> dict:
-            _PIPELINE_CACHE.clear()
-            release_build_artifacts()
-            cpu0 = _tree_cpu_seconds()
-            t0 = time.perf_counter()
-            specs[name].fn(spark, sf_dir) \
-                .write.format("noop").mode("overwrite").save()
-            release_build_artifacts()
-            return {"wall_s": round(time.perf_counter() - t0, 3),
-                    "cpu_s": _cpu_delta(cpu0),
-                    "load_at_draw": ambient}
-
-        # the judged cold-draw block runs AFTER the full 154-query
-        # pass, whose own 32-thread work dominates the 1-min average
-        # for minutes — wait (bounded, tree idle) so the stamp reads
-        # AMBIENT noise, not the bench itself (the first record under
-        # per-draw instantaneous stamping judged the slow cold-JIT
-        # draw as the only "qualified" one for exactly this reason)
-        ambient_blk, redraw_waited = _wait_ambient(REDRAW_WAIT_MAX_S)
-        # streaming-tier redraw: q_stream_* walls are fixed-trigger /
-        # state-store-commit dominated, so host noise shows up 1:1 in
-        # their single draw. The per-query load stamps can't gate this
-        # — during the 150+-query pass the 1-min average is dominated
-        # by the bench's OWN work, so stamp > gate matches nearly
-        # every streaming query and redraws them all (round-12
-        # ADVICE: extra wall for nothing on a foreign-quiet host).
-        # Gate instead on evidence of FOREIGN load: the pre-pass
-        # ambient (idle-waited, so residual > gate means a busy host)
-        # or the post-pass quiet-block ambient (our tree is idle, so
-        # anything above the gate is foreign). Self-load decays by
-        # the quiet block; foreign load persists.
-        foreign_load = (ambient0 > HEADLINE_LOAD_GATE
-                        or ambient_blk > HEADLINE_LOAD_GATE)
-        # two triggers: host-level foreign-load evidence, or a >1.3x
-        # move vs the previous round's wall for this query (transient
-        # foreign load DURING the pass decays before the quiet block
-        # and would otherwise go undetected — the regression trigger
-        # catches exactly the draws it inflated; min-taking means a
-        # redraw can only improve the committed number)
-        for name in [n for n in selected if n.startswith("q_stream_")
-                     and ((foreign_load and
-                           query_meta[n]["load_at_draw"]
-                           > HEADLINE_LOAD_GATE)
-                          or (prev_q.get(n)
-                              and timings[n] > 1.3 * prev_q[n]))]:
-            # cold redraw (cold_run clears the shared pipeline memo —
-            # a cached query would otherwise "redraw" as a ~0.1 s
-            # materialized-read and corrupt its timing)
-            rd = cold_run(name, ambient_blk)
-            meta = query_meta[name]
-            meta["redraw"] = rd
-            if rd["wall_s"] < timings[name]:
-                meta["first_draw_wall_s"] = timings[name]
-                timings[name] = rd["wall_s"]
-                meta["cpu_s"] = rd["cpu_s"]
-                meta["load_at_draw"] = ambient_blk
-        for name in head:
-            cold[name] = timings[name]  # first cold build, kept for the JSON
-            # min-of-3: across-process JIT variance on the cold build
-            # is the dominant noise on the judged headline (measured
-            # 36.7-48.5k msg/s across idle same-code runs); two extra
-            # ~2.5 s cold builds tighten it substantially
-            draws[name] += [cold_run(name, ambient_blk),
-                            cold_run(name, ambient_blk)]
-        # if the block's ambient was above the gate, wait again (self-
-        # load decays; foreign load persists) and take up to two more
-        # passes so the qualified sample isn't starved
-        while ambient_blk > HEADLINE_LOAD_GATE and headline_reruns < 2:
-            headline_reruns += 1
-            ambient_blk, w = _wait_ambient(REDRAW_WAIT_MAX_S)
-            redraw_waited += w
-            for name in head:
-                draws[name].append(cold_run(name, ambient_blk))
-        # judged number = min wall over load-qualified draws when any
-        # exist (else min over all, flagged via qualified=False)
-        for name in head:
-            ok = [d for d in draws[name]
-                  if d["load_at_draw"] <= HEADLINE_LOAD_GATE]
-            pool = ok or draws[name]
-            best = min(pool, key=lambda d: d["wall_s"])
-            timings[name] = best["wall_s"]
-            headline_meta[name] = {
-                **best, "qualified": bool(ok), "draws": draws[name]}
-
-        # idle-gated draws for the most expensive registry queries
-        # (r13 verdict #2): the heavy gates (q_bmp_l3vpn_view,
-        # q_semantic_dedup_banded, ...) had only ever been timed
-        # mid-pass at load 7-10 — every number rode the bench's own
-        # 32-thread load and generated a watch item every round.
-        # Min-of-2 cold draws from a fresh quiet block for the top-5
-        # non-headline walls; the committed number becomes the
-        # idle-qualified min (first-pass draw preserved, same policy
-        # as the streaming redraw, so the total still reconciles as
-        # first-pass-only).
-        heavy = sorted((n for n in timings if n not in head),
-                       key=lambda n: -timings[n])[:5]
-        ambient_hv, w = _wait_ambient(REDRAW_WAIT_MAX_S)
-        redraw_waited += w
-        for name in heavy:
-            rds = [cold_run(name, ambient_hv) for _ in range(2)]
-            best = min(rds, key=lambda d: d["wall_s"])
-            meta = query_meta[name]
-            meta["redraw"] = best  # marker the regressions
-            # comparator reads to classify cross-round asymmetry
-            heavy_meta[name] = {
-                **best,
-                "qualified": ambient_hv <= HEADLINE_LOAD_GATE,
-                "draws": rds}
-            if best["wall_s"] < timings[name]:
-                meta.setdefault("first_draw_wall_s", timings[name])
-                timings[name] = best["wall_s"]
-                meta["cpu_s"] = best["cpu_s"]
-                meta["load_at_draw"] = best["load_at_draw"]
+    # the ingest headlines are judged numbers: a single cold build
+    # carries across-process JIT variance (measured 36.7-48.5k msg/s
+    # across idle same-code runs), so a full run takes two more cold
+    # builds and publishes the min of three
+    cold = () if names else head
+    draws, total, read_s = run_pass(spark, specs, selected, sf_dir, cold)
+    timings = {n: min(d["wall_s"] for d in ds) for n, ds in draws.items()}
 
     import subprocess
     try:
         git_head = subprocess.run(
             ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            timeout=10).stdout.strip()
+            cwd=ROOT, timeout=10).stdout.strip()
     except Exception:
         git_head = "unknown"
 
@@ -536,71 +358,25 @@ def main() -> None:
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "metric": "bench_total_wall",
         "value": total,
-        # `value` is the FIRST full pass over every query; redrawn
-        # q_stream_* / min-of-N headline entries in `queries` may be
-        # lower than their first-pass draw (kept in query_meta
-        # first_draw_wall_s / headlines.draws), so sum(queries) does
+        # `value` is the FIRST pass over every query; the min-of-3
+        # headline entries in `queries` may be lower than their
+        # first-pass draw (kept in timings_cold), so sum(queries) does
         # not reconcile with `value` by design (round-12 ADVICE)
         "total_is_first_pass_only": True,
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "load_before": load_before,
-        "load_after": [round(x, 2) for x in os.getloadavg()],
-        "headline_load_reruns": headline_reruns,
-        "idle_waited_s": idle_waited,
-        "redraw_waited_s": redraw_waited,
+        "query_meta": {n: {"profile": ds[0]} for n, ds in draws.items()},
+        "profile_read_s": read_s,
     }
-    if foreign_load is not None:
-        # False => streaming redraws were skipped: no foreign-load
-        # evidence pre-pass or in the quiet block, so first draws
-        # stand (self-load stamps alone don't justify the extra wall)
-        out["stream_redraw_foreign_load"] = foreign_load
-    # per-headline provenance: the chosen draw's wall/cpu/load plus
-    # every draw taken, so a cross-round delta is readable at a glance
-    # (qualified=False marks a headline that never saw a quiet host)
-    if headline_meta:
-        out["headlines"] = headline_meta
-    # idle-gated provenance for the top-5 heaviest registry queries
-    # (r13 verdict #2): min-of-2 cold draws from a quiet block, so
-    # the recurring "is q_bmp_l3vpn_view slow or was the host busy"
-    # ambiguity is answered inside the artifact itself
-    if heavy_meta:
-        out["heavy_idle"] = heavy_meta
-    # which CPU counter produced every cpu_s in this record: "cgroup"
-    # deltas are exact and never null; "proc-tree" is the racy
-    # fallback whose negative samples are clamped to null
-    out["cpu_source"] = ("cgroup:" + _CGROUP_COUNTER[0]
-                         if _CGROUP_COUNTER else "proc-tree")
-    # per-query provenance (full record only — too big for the compact
-    # line): load at draw + cpu_s for every timing, redraw details for
-    # any load-requalified streaming query
-    out["query_meta"] = query_meta
-    # methodology is self-documenting: every query in `queries` is a
-    # single run EXCEPT the names in min_of_n_queries, whose first
-    # (cold-JIT) run is preserved in timings_cold — cross-round
-    # comparisons can use either series apples-to-apples. min_of_n
-    # records the ACTUAL pass count (3 base + 1 per load-gated rerun).
-    n_msgs = spark.read.parquet(f"{sf_dir}/events.parquet").count() \
-        if (cold or "q_bmp_rib_merge" in timings) else 0
     if cold:
-        out["min_of_n_queries"] = head
-        out["min_of_n"] = 3 + headline_reruns
-        out["timings_cold"] = cold
-        # noise-resistant companion metric: CPU-seconds per message for
-        # the judged draw of each ingest headline (wall inflates with
-        # ambient load; tree CPU barely moves)
-        # max(n_msgs, 1) guards the empty-events edge: crashing here
-        # would lose the whole record after all timed work completed
-        out["headline_cpu_s_per_kmsg"] = {
-            n: round(1000.0 * headline_meta[n]["cpu_s"] / max(n_msgs, 1), 3)
-            for n in head
-            if headline_meta.get(n)
-            and headline_meta[n].get("cpu_s") is not None}
+        out["timings_cold"] = {n: draws[n][0]["wall_s"] for n in cold}
+        out["headlines"] = {n: draws[n] for n in cold}
     # headline vs BASELINE.md: the reference sustains ~2.8k msg/s into
     # ip_rib; q_bmp_rib_merge pushes one synthesized message per
     # events-row through the real two-batch merge pipeline
-    if "q_bmp_rib_merge" in timings and timings["q_bmp_rib_merge"] > 0:
+    if timings.get("q_bmp_rib_merge", 0) > 0:
+        n_msgs = spark.read.parquet(f"{sf_dir}/events.parquet").count()
         out["ingest_rate_msgs_per_sec"] = round(
             n_msgs / timings["q_bmp_rib_merge"])
         # durable variant: same messages through the transactional
@@ -609,9 +385,17 @@ def main() -> None:
         if timings.get("q_bmp_txn_store", 0) > 0:
             out["ingest_rate_durable_msgs_per_sec"] = round(
                 n_msgs / timings["q_bmp_txn_store"])
-        if cold.get("q_bmp_rib_merge", 0) > 0:
+        if out.get("timings_cold", {}).get("q_bmp_rib_merge", 0) > 0:
             out["ingest_rate_cold_msgs_per_sec"] = round(
-                n_msgs / cold["q_bmp_rib_merge"])
+                n_msgs / out["timings_cold"]["q_bmp_rib_merge"])
+
+    round_n = infer_round(ROOT)
+    # a BENCH_QUERIES subset is a scratch run: it neither compares nor
+    # clobbers the committed full-registry artifact for the round
+    if names:
+        out["regressions_vs"] = None
+    else:
+        out.update(compare(out, previous_records(ROOT, round_n)))
 
     # The driver archives only the LAST ~2000 chars of stdout; the full
     # 97-query JSON line overflowed that window in round 6 and the
@@ -619,119 +403,8 @@ def main() -> None:
     # the COMPLETE result to a committed per-round file, and print a
     # compact final line (headline rates + slowest queries, capped well
     # under the window) that always parses.
-    # (round_n and the previous round's record were loaded before the
-    # redraw block — the redraw trigger needs them too)
-    # cross-round regression surfacing (round-12 verdict #7): compare
-    # this pass's per-query walls against the previous round's record
-    # and emit a `regressions` block for any >1.3x slower move, with
-    # both rounds' (load_at_draw, cpu_s) provenance and a noise/real
-    # verdict — wall inflates with ambient load, tree-CPU barely
-    # moves, so cpu_ratio also >1.3 reads "the query did more work"
-    # (real) while wall-only moves read "the host was busy" (noise).
-    if not names:
-        regressions = []
-        if prev:
-            # pass-level CPU drift: host state (cache pressure,
-            # frequency, steal) shifts a WHOLE pass's tree-CPU by a
-            # common factor — the first r13 record labeled 11
-            # unrelated sub-3s queries "real" on a uniform 1.3-1.6x
-            # cpu inflation. Normalize per-query cpu ratios by the
-            # median ratio across all comparable queries so "real"
-            # means "moved relative to its own pass".
-            drifts = sorted(
-                query_meta[n]["cpu_s"] / prev_meta[n]["cpu_s"]
-                for n in timings
-                if query_meta.get(n, {}).get("cpu_s")
-                and prev_meta.get(n, {}).get("cpu_s")
-                and min(query_meta[n]["cpu_s"],
-                        prev_meta[n]["cpu_s"]) >= 2.0)
-            # a median over a handful of queries can BE the regressed
-            # query (degenerate self-normalization); and a drift far
-            # from 1.0 is itself a pass-wide move the normalization
-            # would otherwise silently absorb — surface it as an
-            # alert so a genuine everything-got-slower change cannot
-            # hide behind its own median (code-review finding, r13)
-            pass_cpu_drift = (drifts[len(drifts) // 2]
-                              if len(drifts) >= 5 else 1.0)
-            out["pass_cpu_drift_vs_prev"] = round(pass_cpu_drift, 3)
-            out["pass_cpu_drift_alert"] = bool(
-                pass_cpu_drift > 1.3 or pass_cpu_drift < 1 / 1.3)
-            # drift-normalized full-pass total (r13 verdict #5): the
-            # raw total is first-pass-only at ambient load, so
-            # cross-round totals were load-confounded (r12's 304.8 s
-            # was a globally lucky pass; r13's 350.9 read as +15% on
-            # adjudicated noise). Normalize by the MEDIAN per-query
-            # first-pass wall ratio — host state moves a whole pass
-            # by a common factor; dividing it out leaves only
-            # relative moves. Compare totals across rounds on
-            # total_drift_normalized, never total_raw.
-            def _first_wall(meta: dict, walls: dict, n: str) -> float:
-                return meta.get(n, {}).get("first_draw_wall_s") \
-                    or walls.get(n) or 0.0
-            wall_drifts = sorted(
-                _first_wall(query_meta, timings, n)
-                / _first_wall(prev_meta, prev_q, n)
-                for n in timings
-                if _first_wall(prev_meta, prev_q, n) >= 0.5
-                and _first_wall(query_meta, timings, n) > 0)
-            pass_wall_drift = (wall_drifts[len(wall_drifts) // 2]
-                               if len(wall_drifts) >= 5 else 1.0)
-            out["pass_wall_drift_vs_prev"] = round(pass_wall_drift, 3)
-            out["total_raw"] = total
-            out["total_drift_normalized"] = round(
-                total / pass_wall_drift, 3)
-            for name, cur_wall in timings.items():
-                pv = prev_q.get(name)
-                if not pv or cur_wall <= 1.3 * pv:
-                    continue
-                pm = prev_meta.get(name, {})
-                cm = query_meta.get(name, {})
-                cpu_ratio = (round(cm["cpu_s"] / pm["cpu_s"], 2)
-                             if cm.get("cpu_s") and pm.get("cpu_s")
-                             and pm["cpu_s"] > 0 else None)
-                # below 2 cpu-seconds a ratio is not actionable, for
-                # a reason that changed with the cgroup counter: the
-                # old /proc sampler was untrustworthy there (tick
-                # granularity + reap race — "small-cpu",
-                # unmeasurable); the cgroup counter is exact, but
-                # BENCH_regprobe draws measured ~3x cpu_s swings on
-                # sub-2s queries purely from JVM warm state (JIT,
-                # worker reuse, pass position), so the 1.3x threshold
-                # drowns in jitter — "sub-jitter", measured-but-noisy
-                cpu_small = (cpu_ratio is None
-                             or min(cm["cpu_s"], pm["cpu_s"]) < 2.0)
-                small_class = ("sub-jitter" if _CGROUP_COUNTER
-                               else "small-cpu")
-                # redraw-policy asymmetry: a prev value that was a
-                # redraw-qualified min compared against a single
-                # self-loaded first draw is methodology, not a move
-                redraw_asym = ("redraw" in pm
-                               and "redraw" not in cm)
-                regressions.append({
-                    "query": name,
-                    "prev_wall_s": pv, "wall_s": cur_wall,
-                    "wall_ratio": round(cur_wall / pv, 2),
-                    "prev_load_at_draw": pm.get("load_at_draw"),
-                    "load_at_draw": cm.get("load_at_draw"),
-                    "prev_cpu_s": pm.get("cpu_s"),
-                    "cpu_s": cm.get("cpu_s"),
-                    "cpu_ratio": cpu_ratio,
-                    "verdict": ("redraw-policy" if redraw_asym
-                                else small_class if cpu_small
-                                else "real"
-                                if cpu_ratio / pass_cpu_drift > 1.3
-                                else "noise"),
-                })
-            out["regressions_vs"] = f"BENCH_LOCAL_r{int(round_n)-1:02d}.json"
-            out["regressions"] = sorted(
-                regressions, key=lambda r: -r["wall_ratio"])
-
-    # a BENCH_QUERIES subset is a scratch run — never let it clobber
-    # the committed full-registry artifact for the round
     stem = "BENCH_SUBSET" if names else "BENCH_LOCAL"
-    local_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"{stem}_r{int(round_n):02d}.json")
+    local_path = os.path.join(ROOT, f"{stem}_r{round_n:02d}.json")
     preserve_displaced(local_path, git_head, out["cpus"], out["sf"])
     out["full_timings"] = os.path.basename(local_path)
     with open(local_path, "w") as fh:

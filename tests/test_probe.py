@@ -17,7 +17,10 @@ PROBE = os.path.join(ROOT, "tools", "probe.py")
 
 @functools.cache
 def _probe():
-    # one module per process: it holds the process's one tracer
+    # one module per process: it holds the process's one tracer, which
+    # bench.py (importing it as ``probe``) shares
+    if "probe" in sys.modules:
+        return sys.modules["probe"]
     spec = importlib.util.spec_from_file_location("probe", PROBE)
     mod = sys.modules["probe"] = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -131,10 +131,13 @@ def _resolve(arg, data: str):
     return arg, []
 
 
-def profile(tr, span: dict, wall: float) -> dict:
+def profile(report: dict, span: dict, wall: float) -> dict:
+    """``span``'s wall seconds and Spark counters, from a ``report``
+    already read with ``Tracer.report``: one read can serve every span
+    that ended before it."""
     from perfbench.trace import SPARK_COUNTERS
 
-    [rec] = [s for s in tr.report(wall)["spans"] if s["id"] == span["id"]]
+    [rec] = [s for s in report["spans"] if s["id"] == span["id"]]
     return {"wall_s": round(wall, 3),
             **{k: round(rec["spark"].get(k, 0), 3) for k in SPARK_COUNTERS}}
 
@@ -160,7 +163,8 @@ def run_family(spark, fam: Family, tags=None, out: str | None = None,
             t0 = time.perf_counter()
             with tr.span(f"{fam.name}:{tag}", "probe", root=True) as span:
                 row = fam.run(spark, arg)
-            row["profile"] = profile(tr, span, time.perf_counter() - t0)
+            wall = time.perf_counter() - t0
+            row["profile"] = profile(tr.report(wall), span, wall)
             rows[tag] = row
             print(tag, json.dumps(row, default=str), flush=True)
     finally:
