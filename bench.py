@@ -155,7 +155,7 @@ def preserve_displaced(local_path: str, git_head: str, cpus: int,
 
 def _draw(spark, tr, spec, sf_dir) -> tuple[dict, float]:
     """One materialized run of ``spec`` in its own root span: (span,
-    wall seconds)."""
+    wall seconds), unrounded: ``probe.profile`` rounds it once."""
     from obmp_psql_spark.operators.cache import release_build_artifacts
 
     t0 = time.perf_counter()
@@ -165,7 +165,7 @@ def _draw(spark, tr, spec, sf_dir) -> tuple[dict, float]:
         # so the pass doesn't accumulate storage-memory blocks; the
         # release is timed as part of the query that created them
         release_build_artifacts()
-    return span, round(time.perf_counter() - t0, 3)
+    return span, time.perf_counter() - t0
 
 
 def cold_run(spark, tr, spec, sf_dir) -> tuple[dict, float]:

@@ -41,16 +41,6 @@ def ipv4_to_long(ip: Column) -> Column:
     )
 
 
-def long_to_ipv4(n: Column) -> Column:
-    return F.concat_ws(
-        ".",
-        (n / 16777216).cast("long") % 256,
-        (n / 65536).cast("long") % 256,
-        (n / 256).cast("long") % 256,
-        n.cast("long") % 256,
-    )
-
-
 def host(prefix: Column) -> Column:
     """Strip the mask: '10.1.0.0/16' -> '10.1.0.0' (ref F2:
     8_views.sql:11,76 host())."""

@@ -10,21 +10,21 @@ Training-data use: exact and near-duplicate document removal at
 the dedup key, map-side partial aggregation applies, and no Python
 UDF sits in the hot path (MinHash/SimHash are built from md5/xxhash64
 column expressions, evaluated JVM-side inside whole-stage codegen).
-The one driver-side step is ``connected_components`` on an edge list
-under its measured bound. Wide projections are parsed SQL strings:
-built as Column algebra, every expression node costs the driver
-several py4j round trips.
+The only driver-side step is ``connected_components``' rounds under
+``graph.CC_DRIVER_MAX_EDGES``, in the numpy graph kernel that label
+propagation and PageRank share (``graph.py``). Wide projections are
+parsed SQL strings: built as Column algebra, every expression node
+costs the driver several py4j round trips.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
-from ..session import tiny_df
 from ..state import stage_concurrently
+from . import graph
 from .cache import owned_persist
 
 
@@ -45,15 +45,6 @@ def dedup_latest(df: DataFrame, keys: list[str], order_by: list[Column]) -> Data
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def dedup_exact(df: DataFrame, on: list[str], keep_order: list[Column] | None = None) -> DataFrame:
-    """Exact dedup on column values. With ``keep_order`` the survivor
-    is deterministic; otherwise this is a plain ``dropDuplicates``
-    (hash aggregate, cheapest plan)."""
-    if keep_order is None:
-        return df.dropDuplicates(on)
-    return dedup_latest(df, keys=on, order_by=keep_order)
 
 
 # ---------------------------------------------------------------------------
@@ -616,11 +607,6 @@ def ngram_jaccard_pairs(
     )
 
 
-# connected_components runs its rounds on the driver at or under this
-# many input pairs (the measured crossover, see its docstring).
-CC_DRIVER_MAX_PAIRS = 50_000
-
-
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
                          max_iter: int = 25) -> DataFrame:
@@ -643,22 +629,23 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     a wrong answer.
 
     The symmetric edge list is ``localCheckpoint``ed once (it feeds
-    every round), and that checkpoint also observes its row count.
-    The count picks where the rounds run:
+    every round), and that checkpoint also observes its row count
+    (``graph.checkpoint``). The count picks where the rounds run:
 
-    - at or under ``CC_DRIVER_MAX_PAIRS`` pairs (twice as many
-      symmetric rows), the checkpoint is collected once as Arrow and
-      the same synchronous rounds run in Python (``_cc_rounds``, the
-      ``lpa_rounds`` pattern): a round costs microseconds instead of
-      a Spark job and two shuffles. Why the bound: on star graphs
-      (4 cores, warm session) the driver path won from 10^2 to
-      5*10^4 pairs (0.28-0.81 s vs 0.62-1.06 s) and lost at 10^5
-      (1.20 vs 0.95 s): its Arrow-to-Python conversion and Python
-      rounds grow linearly while the distributed rounds stay near
-      their fixed cost per job; the bound sits below that ~7*10^4
-      crossover (table in CHANGES.md). Driver memory at the bound,
-      measured: a 20 MB Python peak (the edge list and label dicts)
-      plus 1.6 MB of Arrow buffers;
+    - at or under ``graph.CC_DRIVER_MAX_EDGES`` symmetric rows (10^5
+      pairs), the checkpoint is collected once as Arrow and the rounds
+      run in numpy (``graph.components``): a round costs milliseconds
+      instead of a Spark job and two shuffles. Why the bound: on star
+      graphs (4 leaves per centre, 4 cores, warm session, output
+      consumed by one aggregate, median of 3) the driver path won
+      from 10^4 to 1.5*10^5 pairs (0.73-1.63 s vs 1.39-2.05 s), tied
+      at 2*10^5 (1.70 vs 1.74 s) and lost from 3*10^5 on (2.27 vs
+      1.94 s; 6.5 vs 4.3 s at 10^6). Its rounds take 0.03 s at 10^6
+      pairs; the Arrow edges in, the labels out and their
+      one-partition frame grow linearly while the distributed rounds
+      stay near their fixed cost per job. Driver memory at the bound
+      is about 26 MB, at the kernel's measured 131 bytes per edge
+      (``graph.DRIVER_MAX_EDGES``);
     - above it the distributed rounds run: per round the labels join
       the edge list and are min-aggregated (2 shuffles per round,
       both hash-partitioned on node id), each round's result is
@@ -673,13 +660,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     """
     e = (pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
          .filter("a IS NOT NULL AND b IS NOT NULL"))
-    sym = e.unionByName(e.select(F.col("b").alias("a"),
-                                 F.col("a").alias("b")))
     # edges feed every round: materialize once, counting them
-    n_obs = Observation()
-    sym = sym.observe(n_obs, F.expr("count(1) AS n")).localCheckpoint()
-    if n_obs.get["n"] <= 2 * CC_DRIVER_MAX_PAIRS:
-        return _cc_rounds(sym, max_iter)
+    sym, n = graph.checkpoint(
+        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))))
+    if n <= graph.CC_DRIVER_MAX_EDGES:
+        return graph.components(sym, n, max_iter)
     # initial labels stay lazy: round 1's checkpoint computes them
     labels = (sym.groupBy("a")
               .agg(F.least(F.min("b"), F.first("a")).alias("lab"))
@@ -706,38 +691,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         labels = new_labels.select("id", "lab")
         if changed == 0:
             return labels.select(F.col("id"), F.col("lab").alias("component"))
-    raise _cc_no_fixpoint(max_iter)
-
-
-def _cc_rounds(sym: DataFrame, max_iter: int) -> DataFrame:
-    """``connected_components``' rounds on the driver, over a collected
-    symmetric (a, b) edge list: the same initial labels, synchronous
-    min-label rounds, fixpoint test and ``max_iter`` raise as the
-    distributed rounds. The labels go back through ``tiny_df``."""
-    tab = sym.toArrow()
-    edges = list(zip(tab.column("a").to_pylist(), tab.column("b").to_pylist()))
-    labels: dict = {}
-    for a, b in edges:
-        labels[a] = min(labels.get(a, a), b)
-    for _ in range(max_iter):
-        new = dict(labels)
-        for a, b in edges:
-            if labels[a] < new[b]:
-                new[b] = labels[a]
-        changed = new != labels
-        labels = new
-        if not changed:
-            t = sym.schema["a"].dataType
-            return tiny_df(sym.sparkSession, list(labels.items()),
-                           T.StructType([T.StructField("id", t),
-                                         T.StructField("component", t)]))
-    raise _cc_no_fixpoint(max_iter)
-
-
-def _cc_no_fixpoint(max_iter: int) -> RuntimeError:
-    return RuntimeError(
-        f"connected_components: no fixpoint after {max_iter} rounds "
-        f"(graph diameter exceeds cap; use alternating-star)")
+    raise graph.no_fixpoint(max_iter)
 
 
 def simhash_neardup_pairs(

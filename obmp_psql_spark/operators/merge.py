@@ -46,64 +46,3 @@ def upsert_latest(
     order = [F.col(ts_col).desc(), F.col("__src").desc()] + list(tiebreak or [])
     return dedup_latest(s.unionByName(b), keys, order).drop("__src")
 
-
-def merge_upsert(
-    state: DataFrame,
-    batch: DataFrame,
-    keys: list[str],
-    set_exprs: dict[str, Column] | None = None,
-    insert_filter: Column | None = None,
-) -> DataFrame:
-    """General MERGE emulation with per-column conditional SET.
-
-    ``set_exprs`` maps column name -> expression over ``src.<col>`` /
-    ``tgt.<col>`` aliases, replicating ON CONFLICT CASE logic, e.g.
-    the withdraw-keeps-last-attrs rule (UnicastPrefixQuery.java:35-40):
-
-        {"base_attr_hash_id": F.when(F.col("src.is_withdrawn"),
-                                     F.col("tgt.base_attr_hash_id"))
-                               .otherwise(F.col("src.base_attr_hash_id"))}
-
-    Columns not in ``set_exprs`` take the source (batch) value when
-    matched. ``insert_filter`` optionally gates NOT-MATCHED inserts
-    (e.g. drop pure withdraws for rows never seen).
-
-    The batch MUST be pre-compressed to one row per key
-    (``dedup_latest``) — same contract as Delta MERGE, which raises
-    on duplicate source keys.
-    """
-    cols = state.columns
-    src = batch.alias("src")
-    tgt = state.alias("tgt")
-    join_cond = None
-    for k in keys:
-        c = F.col(f"src.{k}") == F.col(f"tgt.{k}")
-        join_cond = c if join_cond is None else (join_cond & c)
-
-    joined = src.join(tgt, join_cond, "full_outer")
-    matched = F.col(f"tgt.{keys[0]}").isNotNull() & F.col(f"src.{keys[0]}").isNotNull()
-    src_only = F.col(f"tgt.{keys[0]}").isNull()
-
-    out_cols = []
-    set_exprs = set_exprs or {}
-    for c in cols:
-        upd = set_exprs.get(c, F.col(f"src.{c}"))
-        expr = (
-            F.when(matched, upd)
-            .when(src_only, F.col(f"src.{c}"))
-            .otherwise(F.col(f"tgt.{c}"))
-        )
-        out_cols.append(expr.alias(c))
-    out = joined.select(*out_cols) if insert_filter is None else (
-        joined.filter(~src_only | insert_filter).select(*out_cols)
-    )
-    return out
-
-
-def insert_if_absent(state: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
-    """ON CONFLICT DO NOTHING (BaseAttributeQuery.java:33): existing
-    rows win; only never-seen keys are inserted. Idempotent, so the
-    streaming attr-dedup cache (ConsumerRunnable.java:485-501) is
-    unnecessary in Spark — this is the replacement."""
-    fresh = batch.join(state.select(*keys), keys, "left_anti")
-    return state.unionByName(fresh.dropDuplicates(keys))

@@ -66,20 +66,6 @@ def _unrolled_dot(a: str, b: str, dims: int) -> Column:
     return acc
 
 
-def _unrolled_d2(a: str, b: str, dims: int) -> Column:
-    """Squared L2 distance, unrolled like ``_unrolled_dot`` (the fold
-    zip_with((x-y)*(x-y)) then left-sum, reproduced term by term)."""
-    if dims > _UNROLL_MAX_DIMS:
-        return F.aggregate(F.zip_with(F.col(a), F.col(b),
-                                      lambda x, y: (x - y) * (x - y)),
-                           F.lit(0.0), lambda acc, x: acc + x)
-    acc = F.lit(0.0)
-    for i in range(1, dims + 1):
-        d = F.element_at(F.col(a), i) - F.element_at(F.col(b), i)
-        acc = acc + d * d
-    return acc
-
-
 # cosine_topk scores each item batch in chunks of at most this many
 # query x item cells (8 MB per float64 matrix), so a task's working
 # set is a few such matrices whatever the batch and query-set sizes.

@@ -1643,7 +1643,8 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("router_name", F.upper("router_name"))
         cols = ["router_id", "router_name", "nation_key"]
         for batch in (base, upd):  # batch 2 live-updates on conflict
-            write_rows_upsert(iter(batch.collect()), cols, "routers",
+            # one partition on the driver at a time, not the batch
+            write_rows_upsert(batch.toLocalIterator(), cols, "routers",
                               ["router_id"],
                               lambda: duckdb.connect(db))
         got = read_rows_partitioned(

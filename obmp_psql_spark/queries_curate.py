@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import graph
 from .registry import register
 from .session import fan_out, load_tables, normalize_ts, sized_session, tiny_df
 
@@ -654,35 +655,21 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     universe (<= nodes^2 rows, independent of corpus size), so after
     Spark's one corpus-scale pass (project to node ids + distinct),
     the graph is model-sized state: ONE bounded collect and the
-    iterations run driver-side (r14, guide §8 decide with small
-    rows — same shape as lpa_rounds). Ranks are integer ppm with
-    floor division at every step, so the arithmetic is bit-identical
-    to the former unrolled join+agg rounds (sum of longs is
-    order-free): contrib = sum(rank div out_deg) into each dst,
-    rank' = BASE + DAMP*contrib div 1e6, dangling nodes keep
-    coalesce(contrib, 0)."""
-    ev = fan_out(load_tables(spark, sf_dir, ("events",))["events"], spark)
+    iterations run driver-side in numpy (``graph.pagerank``; over
+    ``graph.DRIVER_MAX_EDGES`` edges it raises ``ValueError``). Ranks
+    are integer ppm with floor division at every step, so the
+    arithmetic is bit-identical to the former unrolled join+agg rounds
+    (sum of longs is order-free): contrib = sum(rank div out_deg) into
+    each dst, rank' = BASE + DAMP*contrib div 1e6, dangling nodes keep
+    coalesce(contrib, 0). The per-row work is two modulos, too cheap
+    for a ``fan_out`` exchange to pay for itself."""
+    ev = load_tables(spark, sf_dir, ("events",))["events"]
     src = (F.col("user_id") % _PR_NODES).cast("long")
     dst = ((F.col("user_id") + F.col("event_id")) % _PR_NODES).cast("long")
-    edges_df = (ev.select(src.alias("src"), dst.alias("dst"))
-                .filter(F.col("src") != F.col("dst"))
-                .distinct())
-    edges = [(r["src"], r["dst"]) for r in edges_df.collect()]
-    deg: dict = {}
-    nodes = set()
-    for s, d in edges:
-        deg[s] = deg.get(s, 0) + 1
-        nodes.add(s)
-        nodes.add(d)
-    ranks = {n: 1_000_000 for n in nodes}
-    for _ in range(_PR_ITERS):
-        contrib = {}
-        for s, d in edges:
-            contrib[d] = contrib.get(d, 0) + ranks[s] // deg[s]
-        ranks = {n: _PR_BASE + (_PR_DAMP * contrib.get(n, 0)) // 1_000_000
-                 for n in nodes}
-    return tiny_df(spark, sorted(ranks.items()),
-                   "node long, rank_ppm long")
+    edges = (ev.select(src.alias("src"), dst.alias("dst"))
+             .filter(F.col("src") != F.col("dst"))
+             .distinct())
+    return graph.pagerank(edges, _PR_ITERS, _PR_BASE, _PR_DAMP)
 
 
 # ---------------------------------------------------------------------------
@@ -788,14 +775,14 @@ def _label_prop_oracle() -> str:
         "deterministic, no RNG, hash-stable per round",
 )
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous LPA as DataFrame rounds: per round one hash join of
-    the (static, src-partitioned) symmetric edge list with the O(nodes)
-    label vector, one (node, label) count aggregate, one per-node
-    window top-1. The classic LPA pitfall — RANDOM tie-breaking, which
-    makes runs non-reproducible — is replaced by the deterministic
-    (count DESC, label ASC) order, so every round is hash-gated on
-    both engines. Same scale shape as q_pagerank: edges stay put,
-    only the narrow label vector re-shuffles per round.
+    """Synchronous LPA: Spark builds the symmetric, neighbor-capped
+    edge list and ``lpa_rounds`` runs the vote rounds driver-side over
+    one bounded collect (the oracle spells each round as a join, a
+    (node, label) count and a per-node window top-1). The classic LPA
+    pitfall — RANDOM tie-breaking, which makes runs non-reproducible —
+    is replaced by the deterministic (count DESC, label ASC) order, so
+    every round is hash-gated on both engines. Same scale shape as
+    q_pagerank: the edge list is bounded by the fixed node universe.
 
     The derived graph PLANTS community structure (the raw event graph
     at gate scale is near-complete — LPA on it collapses to one label
@@ -804,24 +791,22 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE connected component — a min-label CC pass would merge
     everything — while the mode vote keeps dense blocks apart
     (3 communities over 194 active nodes at the sf0.01 gate):
-    exactly the CC-vs-LPA distinction the survey row claims."""
-    from pyspark.sql import Window as W
-
-    ev = fan_out(load_tables(spark, sf_dir, ("events",))["events"], spark)
+    exactly the CC-vs-LPA distinction the survey row claims. As in
+    q_pagerank the per-row work is modulos, so no ``fan_out``."""
+    ev = load_tables(spark, sf_dir, ("events",))["events"]
     src = (F.col("user_id") % _PR_NODES).cast("long")
     blk = F.expr(f"cast(user_id % {_PR_NODES} as bigint) "
                  f"div {_LP_BLOCK}")
     intra_dst = (blk * _LP_BLOCK
                  + (src + F.col("event_id")) % _LP_BLOCK).cast("long")
     intra = (ev.select(src.alias("src"), intra_dst.alias("dst"))
-             .filter(F.col("src") != F.col("dst"))
-             .distinct())
+             .filter(F.col("src") != F.col("dst")))
     bridge = (ev.filter(F.col("event_id") % _LP_BRIDGE_MOD == 0)
               .select(src.alias("src"),
                       ((src + _LP_BLOCK) % _PR_NODES).cast("long")
-                      .alias("dst"))
-              .distinct())
-    raw = intra.union(bridge).distinct()
+                      .alias("dst")))
+    # one distinct, over the symmetric union, makes the edge set
+    raw = intra.union(bridge)
     sym = raw.union(raw.select(F.col("dst").alias("src"),
                                F.col("src").alias("dst"))).distinct()
     return lpa_rounds(sym, _LP_ITERS, cap=_LP_CAP)
@@ -835,33 +820,18 @@ def lpa_rounds(sym: DataFrame, iters: int,
     the ``cap_in_edges`` supernode guard by cap x nodes rows — so the
     graph is model-sized state, not corpus-scale data: Spark computes
     the (distinct, capped) edges, then ONE bounded collect runs the
-    synchronous rounds driver-side in exact integer arithmetic (r14,
-    guide §8 decide with small rows; same shape as the MG-sketch
-    merge). Each round reproduces the previous in-plan algebra
-    bit-for-bit: votes = per (dst, label-of-src) edge counts over
-    srcs that still carry a label, winner = (count DESC, label ASC)
-    — the min_by struct order it replaces — and nodes receiving no
-    votes drop out exactly as the join+aggregate dropped them.
-    Returns (node, community)."""
+    synchronous rounds driver-side in numpy (``graph.label_propagation``;
+    over ``graph.DRIVER_MAX_EDGES`` edges it raises ``ValueError``).
+    Each round reproduces the previous in-plan algebra bit-for-bit:
+    votes = per (dst, label-of-src) edge counts over srcs that still
+    carry a label, winner = (count DESC, label ASC) — the min_by struct
+    order it replaces — and nodes receiving no votes drop out exactly
+    as the join+aggregate dropped them. Returns (node, community)."""
     if cap is not None:
         # supernode skew guard: every round's vote fan-in bounded by
         # the deterministic in-neighbor cap (see cap_in_edges)
         sym = cap_in_edges(sym, cap)
-    edges = [(r["src"], r["dst"]) for r in sym.collect()]
-    labels = {s: s for s, _ in edges}
-    for _ in range(iters):
-        votes: dict = {}
-        for s, d in edges:
-            lab = labels.get(s)
-            if lab is None:
-                continue
-            cnt = votes.setdefault(d, {})
-            cnt[lab] = cnt.get(lab, 0) + 1
-        labels = {node: min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-                  for node, cnt in votes.items()}
-    spark = sym.sparkSession
-    return tiny_df(spark, sorted(labels.items()),
-                   "node long, community long")
+    return graph.label_propagation(sym, iters)
 
 
 # ---------------------------------------------------------------------------

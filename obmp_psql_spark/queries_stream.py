@@ -20,7 +20,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .session import normalize_ts, sized_session
+from .session import _read_parquet, normalize_ts, sized_session
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events.parquet`` as a file stream. The file source needs a
+    directory, so a glob filter picks the file from the shared sf dir.
+    The stream schema is the batch footer's, so ts-type drift (ns-long
+    vs NTZ vs TIMESTAMP across driver testdata versions) can't mis-read
+    values."""
+    schema = _read_parquet(spark, f"{sf_dir}/events.parquet").schema
+    return normalize_ts(spark.readStream.schema(schema)
+                        .option("pathGlobFilter", "events.parquet")
+                        .parquet(sf_dir))
+
+
+def _drain(spark: SparkSession,
+           *sinks: tuple[DataFrame, str]) -> list[DataFrame]:
+    """Run each (streaming frame, output mode) to completion into its
+    own memory sink, availableNow, and return the sinks as tables. All
+    start before any is awaited, so independent queries run
+    concurrently instead of each paying a full micro-batch floor."""
+    names = [f"stream_{uuid.uuid4().hex[:8]}" for _ in sinks]
+    queries = [df.writeStream.outputMode(mode).format("memory")
+               .queryName(name).trigger(availableNow=True).start()
+               for (df, mode), name in zip(sinks, names)]
+    for q in queries:
+        q.awaitTermination()
+    return [spark.table(name) for name in names]
 
 
 @register(
@@ -40,15 +67,7 @@ from .session import normalize_ts, sized_session
 def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = sized_session(spark, sf_dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    # the file source needs a directory; select just events.parquet
-    # from the shared sf dir via a glob filter. The stream schema is
-    # taken from the batch footer so ts-type drift (ns-long vs NTZ vs
-    # TIMESTAMP across driver testdata versions) can't mis-read values.
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (spark.readStream.schema(batch_schema)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    ev = normalize_ts(src)
+    ev = _events(spark, sf_dir)
     agg = (
         ev.groupBy(F.window("ts", "5 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"),
@@ -57,14 +76,7 @@ def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("window.start").alias("window_start"),
                 "event_type", "n_events", "sum_value")
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(spark, (agg, "complete"))[0]
 
 
 @register(
@@ -81,24 +93,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic regardless of which physical row wins the race
     inside a partition."""
     spark = sized_session(spark, sf_dir)
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (spark.readStream.schema(batch_schema)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    ev = normalize_ts(src)
+    ev = _events(spark, sf_dir)
     dedup = (
         ev.withWatermark("ts", "1 hour")
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    q = (
-        dedup.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(spark, (dedup, "append"))[0]
 
 
 @register(
@@ -125,11 +126,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = sized_session(spark, sf_dir)
-    name = f"stream_append_{uuid.uuid4().hex[:8]}"
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (spark.readStream.schema(batch_schema)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    ev = normalize_ts(src)
+    ev = _events(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes"), "event_type")
@@ -137,14 +134,7 @@ def q_stream_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("window.start").alias("window_start"),
                 "event_type", "n_events")
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(spark, (agg, "append"))[0]
 
 
 @register(
@@ -167,30 +157,18 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.stateful import peer_activity_counter
 
     spark = sized_session(spark, sf_dir)
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (spark.readStream.schema(batch_schema)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    ev = normalize_ts(src)
+    ev = _events(spark, sf_dir)
     msgs = ev.select(
         F.concat(F.lit("p"), (F.col("user_id") % 10).cast("string"))
          .alias("peer_hash"),
         (F.col("value") < 5).alias("is_withdrawn"),
         F.col("ts").alias("timestamp"),
     )
-    q = (
-        peer_activity_counter(msgs)
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    (out,) = _drain(spark, (peer_activity_counter(msgs), "update"))
     # update mode appends one row per key per micro-batch; the
     # counters are monotone, so the final cumulative state is the max
     return (
-        spark.table(name)
-        .groupBy("peer_hash_id")
+        out.groupBy("peer_hash_id")
         .agg(F.max("updates").alias("updates"),
              F.max("withdraws").alias("withdraws"),
              F.max("last_ts").alias("last_ts"))
@@ -216,11 +194,7 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = sized_session(spark, sf_dir)
-    name = f"stream_dim_{uuid.uuid4().hex[:8]}"
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (spark.readStream.schema(batch_schema)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    ev = normalize_ts(src)
+    ev = _events(spark, sf_dir)
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
     dims = (cust.join(nat, cust["c_nationkey"] == nat["n_nationkey"])
@@ -229,31 +203,19 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         dims, ev["user_id"] % 1500 + 1 == dims["c_custkey"], "inner")
     agg = (joined.groupBy(F.col("n_name").alias("nation"))
            .agg(F.count(F.lit(1)).alias("n_events")))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
     # exact count-distinct is unsupported inside a streaming agg:
     # two-level form — streaming dedup of (ck, user) pairs, then count.
     # The two streaming queries are independent (separate memory sinks,
-    # separate checkpoints), so START both and await both: the engine
-    # runs them concurrently and the second hides inside the first's
-    # micro-batch latency instead of paying a second full floor.
+    # separate checkpoints), so ``_drain`` runs them concurrently and
+    # the second hides inside the first's micro-batch latency.
     users = (ev.select((F.col("user_id") % 1500 + 1).alias("ck"), "user_id")
              .dropDuplicates(["ck", "user_id"]))
-    uname = f"{name}_u"
-    qu = (users.join(dims, users["ck"] == dims["c_custkey"])
-          .groupBy(F.col("n_name").alias("nation"))
-          .agg(F.count(F.lit(1)).alias("n_users"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(uname)
-          .trigger(availableNow=True).start())
-    q.awaitTermination()
-    qu.awaitTermination()
-    return (spark.table(name).select("nation", "n_events")
-            .join(spark.table(uname), "nation"))
+    n_users = (users.join(dims, users["ck"] == dims["c_custkey"])
+               .groupBy(F.col("n_name").alias("nation"))
+               .agg(F.count(F.lit(1)).alias("n_users")))
+    events, users_out = _drain(spark, (agg, "complete"),
+                               (n_users, "complete"))
+    return events.select("nation", "n_events").join(users_out, "nation")
 
 
 @register(
@@ -285,19 +247,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join emits each match exactly once regardless of watermark lag,
     which is why the availableNow run equals the batch oracle."""
     spark = sized_session(spark, sf_dir)
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def src():
-        s = (spark.readStream.schema(batch_schema)
-             .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-        return normalize_ts(s)
-
-    clicks = (src().filter(F.col("event_type") == "click")
+    clicks = (_events(spark, sf_dir).filter(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"), "user_id",
                       F.col("ts").alias("click_ts"))
               .withWatermark("click_ts", "1 hour"))
-    purchases = (src().filter(F.col("event_type") == "purchase")
+    purchases = (_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
                  .select(F.col("event_id").alias("purchase_id"),
                          F.col("user_id").alias("p_user_id"),
                          F.col("ts").alias("purchase_ts"))
@@ -310,11 +264,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            <= F.col("click_ts") + F.expr("INTERVAL 10 MINUTES")),
         "inner",
     ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    q = (joined.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(spark, (joined, "append"))[0]
 
 
 @register(
@@ -358,22 +308,14 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates per batch — semantics no batch window can emulate
     incrementally without rescanning the key's history."""
     spark = sized_session(spark, sf_dir)
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (spark.readStream.schema(batch_schema)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    ev = normalize_ts(src)
+    ev = _events(spark, sf_dir)
     agg = (ev.withWatermark("ts", "10 minutes")
            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
            .agg(F.count(F.lit(1)).alias("n_events"))
            .select(F.col("session_window.start").alias("session_start"),
                    F.col("session_window.end").alias("session_end"),
                    "user_id", "n_events"))
-    q = (agg.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(spark, (agg, "append"))[0]
 
 
 @register(
@@ -418,19 +360,11 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's finalization cut (click_ts + 10 min <= max_ts - delay)
     is exactly that eviction condition."""
     spark = sized_session(spark, sf_dir)
-    name = f"stream_sslj_{uuid.uuid4().hex[:8]}"
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def src():
-        s = (spark.readStream.schema(batch_schema)
-             .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-        return normalize_ts(s)
-
-    clicks = (src().filter(F.col("event_type") == "click")
+    clicks = (_events(spark, sf_dir).filter(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"), "user_id",
                       F.col("ts").alias("click_ts"))
               .withWatermark("click_ts", "10 minutes"))
-    purchases = (src().filter(F.col("event_type") == "purchase")
+    purchases = (_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
                  .select(F.col("event_id").alias("purchase_id"),
                          F.col("user_id").alias("p_user_id"),
                          F.col("ts").alias("purchase_ts"))
@@ -443,11 +377,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            <= F.col("click_ts") + F.expr("INTERVAL 10 MINUTES")),
         "left_outer",
     ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    q = (joined.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(spark, (joined, "append"))[0]
 
 
 @register(
@@ -490,19 +420,11 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = sized_session(spark, sf_dir)
-    name = f"stream_ssfj_{uuid.uuid4().hex[:8]}"
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def src():
-        s = (spark.readStream.schema(batch_schema)
-             .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-        return normalize_ts(s)
-
-    clicks = (src().filter(F.col("event_type") == "click")
+    clicks = (_events(spark, sf_dir).filter(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"), "user_id",
                       F.col("ts").alias("click_ts"))
               .withWatermark("click_ts", "10 minutes"))
-    purchases = (src().filter(F.col("event_type") == "purchase")
+    purchases = (_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
                  .select(F.col("event_id").alias("purchase_id"),
                          F.col("user_id").alias("p_user_id"),
                          F.col("ts").alias("purchase_ts"))
@@ -517,8 +439,4 @@ def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("click_id", "purchase_id",
              F.coalesce("user_id", "p_user_id").alias("any_user_id"),
              "click_ts", "purchase_ts")
-    q = (joined.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(spark, (joined, "append"))[0]

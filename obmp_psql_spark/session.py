@@ -169,7 +169,8 @@ def tiny_df(spark: SparkSession, rows, schema):
     rows cost every action one more job with a Python-worker task (an
     aggregate over 2 rows, 4 cores: 2 jobs, 0.29-0.44 s; here 1 job,
     0.11-0.14 s). One partition keeps a stored dim one file. ``schema``
-    is a ``StructType`` or DDL; rows are tuples in its field order."""
+    is a ``StructType`` or DDL; rows are tuples in its field order, or a
+    ``pyarrow.Table`` with its columns in that order."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
@@ -177,12 +178,13 @@ def tiny_df(spark: SparkSession, rows, schema):
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    return spark.createDataFrame(
-        pa.Table.from_arrays(
-            [pa.array(c, f.type) for c, f in zip(cols, arrow)],
-            schema=arrow),
-        schema).coalesce(1)
+    if isinstance(rows, pa.Table):
+        table = rows.rename_columns(arrow.names).cast(arrow)
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 # Post-shuffle partitions follow the INPUT VOLUME: ~32 MB of source

@@ -98,15 +98,3 @@ def read_stream(
     )
     return decode_kafka_records(raw, msg_type)
 
-
-def read_stream_all(
-    spark: SparkSession, bootstrap_servers: str, **kw
-) -> DataFrame:
-    """Pattern-subscribe variant (S1 regex subscribe); downstream
-    must dispatch on the ``topic`` column."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribePattern", f"{TOPIC_PREFIX}.*")
-        .load()
-    )

@@ -101,13 +101,6 @@ def to_tsv(df: DataFrame, msg_type: str) -> DataFrame:
     return df.select(F.concat_ws("\t", *cols).alias("value"))
 
 
-def normalize_hash(c: Column) -> Column:
-    """UUID normalization (F15): strip dashes, lowercase — the
-    reference accepts both forms and canonicalizes with
-    replaceAll("-","") (ConsumerRunnable.java:604,622)."""
-    return F.lower(F.regexp_replace(c, "-", ""))
-
-
 def ingest_with_dead_letter(store, raw: DataFrame,
                             schema: "str | T.StructType",
                             required: tuple[str, ...], *,

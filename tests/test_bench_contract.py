@@ -271,6 +271,9 @@ def test_pass_profiles_every_query_without_host_probes(spark, monkeypatch):
         for prof in draws[n]:
             assert prof["jobs"] >= 1 and prof["tasks"] >= 1, (n, prof)
             assert prof["wall_s"] > 0
-    assert total >= sum(draws[n][0]["wall_s"] for n in names)
+    # the pass wall covers its draws; each draw's wall and the total are
+    # rounded to the millisecond, so each may read up to 0.5 ms off
+    assert total >= (sum(draws[n][0]["wall_s"] for n in names)
+                     - 0.0005 * (len(names) + 1))
     assert read_s >= 0
     assert set(glob.glob(os.path.join(ROOT, "BENCH_*"))) == before

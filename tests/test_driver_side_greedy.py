@@ -110,6 +110,175 @@ def test_pagerank_matches_integer_reference(spark):
     assert out == ranks
 
 
+# -- the numpy graph kernels against the dict loops they replaced -------
+
+def _cc_ref(edges, max_iter):
+    """Min-label rounds over a symmetric (a, b) list, as dicts."""
+    labels = {}
+    for a, b in edges:
+        labels[a] = min(labels.get(a, a), b)
+    for _ in range(max_iter):
+        new = dict(labels)
+        for a, b in edges:
+            if labels[a] < new[b]:
+                new[b] = labels[a]
+        if new == labels:
+            return labels
+        labels = new
+    raise RuntimeError("no fixpoint")
+
+
+def _lpa_ref(edges, iters):
+    """Mode-vote rounds over a (src, dst) list, as dicts."""
+    labels = {s: s for s, _ in edges}
+    for _ in range(iters):
+        votes = {}
+        for s, d in edges:
+            lab = labels.get(s)
+            if lab is None:
+                continue
+            cnt = votes.setdefault(d, {})
+            cnt[lab] = cnt.get(lab, 0) + 1
+        labels = {node: min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+                  for node, cnt in votes.items()}
+    return labels
+
+
+def _pr_ref(edges, iters, base, damp):
+    """Integer-ppm PageRank over a directed (src, dst) list, as dicts."""
+    deg, nodes = {}, set()
+    for s, d in edges:
+        deg[s] = deg.get(s, 0) + 1
+        nodes.update((s, d))
+    ranks = {n: 1_000_000 for n in nodes}
+    for _ in range(iters):
+        contrib = {}
+        for s, d in edges:
+            contrib[d] = contrib.get(d, 0) + ranks[s] // deg[s]
+        ranks = {n: base + (damp * contrib.get(n, 0)) // 1_000_000
+                 for n in nodes}
+    return ranks
+
+
+def _random_graph(seed):
+    """Seeded graph of 5-500 nodes and up to 2,000 distinct edges with
+    no self loop, over sparse ids, plus one pendant pair."""
+    import random
+
+    rnd = random.Random(seed)
+    ids = rnd.sample(range(10**6), rnd.randint(5, 500))
+    n_edges = rnd.randint(0, min(2000, len(ids) * 4))
+    edges = {(rnd.choice(ids), rnd.choice(ids)) for _ in range(n_edges)}
+    edges.add((10**6 + seed, 10**6 + seed + 1))
+    return sorted((a, b) for a, b in edges if a != b)
+
+
+def _kernel(fn, edges, *args):
+    """Run a numpy kernel over an id edge list: (ids, result)."""
+    import numpy as np
+
+    from obmp_psql_spark.operators import graph
+
+    a = np.array([e[0] for e in edges])
+    b = np.array([e[1] for e in edges])
+    ids, src, dst = graph.dense(a, b)
+    return ids, fn(src, dst, len(ids), *args)
+
+
+def _symmetric(edges):
+    return sorted(set(edges) | {(b, a) for a, b in edges})
+
+
+def test_graph_kernels_match_dict_loops_on_random_graphs():
+    from obmp_psql_spark.operators import graph
+    from obmp_psql_spark.queries_curate import _PR_BASE, _PR_DAMP
+
+    for seed in range(30):
+        edges = _random_graph(seed)
+        sym = _symmetric(edges)
+        ids, lab = _kernel(graph.min_label, sym, 500)
+        assert dict(zip(ids.tolist(), ids[lab].tolist())) == \
+            _cc_ref(sym, 500), seed
+        for g in (sym, edges):  # directed: nodes left without votes
+            ids, lab = _kernel(graph.mode_vote, g, 4)
+            voted = lab >= 0
+            assert dict(zip(ids[voted].tolist(),
+                            ids[lab[voted]].tolist())) == _lpa_ref(g, 4), seed
+        ids, rank = _kernel(graph.ppm_rank, edges, 5, _PR_BASE, _PR_DAMP)
+        assert dict(zip(ids.tolist(), rank.tolist())) == \
+            _pr_ref(edges, 5, _PR_BASE, _PR_DAMP), seed
+
+
+def test_graph_kernels_corner_cases():
+    import pytest
+
+    from obmp_psql_spark.operators import graph
+
+    # a tie: node 2 hears labels 1 and 3 once each and takes 1; the
+    # pendant pair 7-8 swaps labels every round
+    sym = _symmetric([(1, 2), (2, 3), (7, 8)])
+    for iters in (1, 2, 3):
+        ids, lab = _kernel(graph.mode_vote, sym, iters)
+        got = dict(zip(ids.tolist(), ids[lab].tolist()))
+        assert got == _lpa_ref(sym, iters)
+        assert got[2] == (1 if iters % 2 else 2)
+        assert (got[7], got[8]) == ((8, 7) if iters % 2 else (7, 8))
+    # no votes: 0 and 2 only send, so round 1 drops them and round 2
+    # drops 1, whose senders no longer carry a label
+    ids, lab = _kernel(graph.mode_vote, [(0, 1), (2, 1)], 1)
+    assert (lab >= 0).tolist() == [False, True, False]
+    ids, lab = _kernel(graph.mode_vote, [(0, 1), (2, 1)], 2)
+    assert (lab < 0).all() and _lpa_ref([(0, 1), (2, 1)], 2) == {}
+    # string ids: labels are the smallest id in sort order
+    sym = _symmetric([("b", "c"), ("c", "aa"), ("x", "y")])
+    ids, lab = _kernel(graph.min_label, sym, 5)
+    assert dict(zip(ids.tolist(), ids[lab].tolist())) == _cc_ref(sym, 5) \
+        == {"aa": "aa", "b": "aa", "c": "aa", "x": "x", "y": "x"}
+    # a path needs its diameter in rounds, else both raise
+    path = _symmetric([(i, i + 1) for i in range(8)])
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        _kernel(graph.min_label, path, 3)
+    with pytest.raises(RuntimeError):
+        _cc_ref(path, 3)
+    # 0 edges: empty results, no raise
+    for fn, args in ((graph.min_label, (3,)), (graph.mode_vote, (3,)),
+                     (graph.ppm_rank, (3, 150_000, 850_000))):
+        ids, out = _kernel(fn, [], *args)
+        assert len(ids) == 0 and len(out) == 0
+
+
+def test_connected_components_string_ids(spark):
+    """The driver path keeps the id type: string ids in, string
+    components out, each the smallest id of its component."""
+    from obmp_psql_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [("b", "c"), ("c", "aa"), ("x", "y"), ("y", None)],
+        "id_a string, id_b string")
+    out = connected_components(pairs)
+    assert out.schema.simpleString() == "struct<id:string,component:string>"
+    assert {(r.id, r.component) for r in out.collect()} == {
+        ("aa", "aa"), ("b", "aa"), ("c", "aa"), ("x", "x"), ("y", "x")}
+
+
+def test_lpa_rounds_over_the_bound_raise(spark, monkeypatch):
+    """Over ``graph.DRIVER_MAX_EDGES`` edge rows the collect is refused
+    with a ``ValueError`` that names the bound; at it the rounds run."""
+    import pytest
+
+    from obmp_psql_spark.operators import graph
+    from obmp_psql_spark.queries_curate import lpa_rounds
+    from obmp_psql_spark.session import tiny_df
+
+    df = tiny_df(spark, _symmetric([(0, 1), (1, 2), (3, 4)]),
+                 "src long, dst long")
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 6)
+    assert lpa_rounds(df, iters=1).count() == 5
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 5)
+    with pytest.raises(ValueError, match="DRIVER_MAX_EDGES"):
+        lpa_rounds(df, iters=1)
+
+
 def test_mmr_greedy_matches_reference_chain(spark):
     """Recompute MMR from the query's own published pool algebra: the
     driver-side greedy must equal the (score desc, cand_id asc)

@@ -70,7 +70,9 @@ def test_connected_components_empty_edges_distributed_rounds(
     """The ``cc`` case above runs the driver-side rounds (0 pairs is
     under the bound); with the bound at -1 it runs the distributed
     rounds."""
-    monkeypatch.setattr(D, "CC_DRIVER_MAX_PAIRS", -1)
+    from obmp_psql_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_DRIVER_MAX_EDGES", -1)
     test_operator_empty_input_returns_empty(
         spark, lambda s: D.connected_components(_pairs(s)))
 

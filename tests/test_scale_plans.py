@@ -350,31 +350,32 @@ def test_dedup_queries_py4j_round_trip_ceiling(spark, monkeypatch):
     test_connected_components_iteration_cap,
 ], ids=["path_graph", "star_vs_pairs", "iteration_cap"])
 def test_connected_components_distributed_rounds(spark, monkeypatch, case):
-    """The cases above have graphs under ``CC_DRIVER_MAX_PAIRS`` and so
-    run the driver-side rounds; here the same cases run the
+    """The cases above have graphs under ``graph.CC_DRIVER_MAX_EDGES`` and
+    so run the driver-side rounds; here the same cases run the
     distributed rounds. The bound is -1, not 0, so that an empty edge
-    list (0 pairs, at the bound 0) leaves the driver path too."""
-    from obmp_psql_spark.operators import dedup
+    list (0 edges, at the bound 0) leaves the driver path too."""
+    from obmp_psql_spark.operators import graph
 
-    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_PAIRS", -1)
+    monkeypatch.setattr(graph, "CC_DRIVER_MAX_EDGES", -1)
     case(spark)
 
 
 def test_connected_components_path_follows_observed_edge_count(
         spark, monkeypatch):
     """At the bound the rounds run on the driver; one pair over it they
-    run distributed, with the same components."""
-    from obmp_psql_spark.operators import dedup
+    run distributed, with the same components. The bound counts
+    symmetric edge rows, two per pair."""
+    from obmp_psql_spark.operators import dedup, graph
 
     driver_runs = []
-    rounds = dedup._cc_rounds
+    rounds = graph.components
 
-    def counted_rounds(sym, max_iter):
+    def counted_rounds(sym, n, max_iter):
         driver_runs.append(sym)
-        return rounds(sym, max_iter)
+        return rounds(sym, n, max_iter)
 
-    monkeypatch.setattr(dedup, "_cc_rounds", counted_rounds)
-    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_PAIRS", 3)
+    monkeypatch.setattr(graph, "components", counted_rounds)
+    monkeypatch.setattr(graph, "CC_DRIVER_MAX_EDGES", 6)
 
     def comps(n):
         pairs = spark.createDataFrame([(i, i + 1) for i in range(n)],

@@ -1172,24 +1172,21 @@ LPA_BLOCK, LPA_DRAWS, LPA_CAP, LPA_HUBS, LPA_ITERS = 50, 12, 32, 64, 4
 
 
 @family("lpa", "BENCH_lpa.json",
-        [("20k", (20_000, 32)), ("200k", (200_000, 32)),
-         ("2M", (2_000_000, 200))],
+        [("20k", 20_000), ("200k", 200_000)],
         "capped LPA rounds stay linear in edges while hub in-degree grows "
         "with N",
         params={"block": LPA_BLOCK, "cap": LPA_CAP, "iters": LPA_ITERS},
-        alpha=("wall_s",), size="edges_sym",
-        conf={"spark.driver.memory": "24g"})
-def _lpa(spark, arg):
+        alpha=("wall_s",), size="edges_sym")
+def _lpa(spark, n_nodes):
     """Planted 50-node blocks with sparse bridges and 64 hub supernodes,
     the same shape at every N. Block degree (about 2 x 12 symmetric)
-    stays below the cap; hub in-degree grows as N/64 uncapped."""
+    stays below the cap; hub in-degree grows as N/64 uncapped. A 2M
+    tier (30M edges) is over ``graph.DRIVER_MAX_EDGES``: its rounds
+    raise instead of collecting."""
     from obmp_psql_spark.queries_curate import lpa_rounds
 
-    n_nodes, partitions = arg
-    # the shuffle follows the edge volume: at 2M, 32 partitions of the
-    # distinct aggregate run out of memory
     s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    s.conf.set("spark.sql.shuffle.partitions", "32")
     r = s.range(n_nodes * LPA_DRAWS).select(
         F.expr(f"id div {LPA_DRAWS}").cast("long").alias("s"),
         (F.col("id") % LPA_DRAWS).cast("long").alias("j"))
