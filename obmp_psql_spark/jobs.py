@@ -21,11 +21,11 @@ from pyspark.sql import functions as F
 from .operators import global_rib as G
 from .session import empty_df
 from .operators import rollup as R
-from .state import ParquetStateStore, stage_concurrently
+from .state import TxnStateStore, stage_concurrently
 
 
 class JobRunner:
-    def __init__(self, store: ParquetStateStore):
+    def __init__(self, store: TxnStateStore):
         self.store = store
 
     # -- watermark bookkeeping (O2 / SURVEY §7 known-hard #4) ----------

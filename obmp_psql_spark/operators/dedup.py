@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..state import stage_concurrently
+from ..state import index_step
 from . import graph
 from .cache import owned_persist
 
@@ -124,72 +124,11 @@ def minhash_bands(
         .selectExpr("__id", "bb.band", "bb.bucket")
 
 
-# Auto OPTIMIZE cadence threshold: compact an incremental index's band
-# table when its live parquet-file count exceeds this multiple of the
-# session's shuffle partitions. Derived from the measured law (SURVEY
-# finding 32): per-batch wall grows ~18 ms per accumulated append FILE,
-# and compaction at ~100 files (≈3 batches of 32-partition appends)
-# held the streaming decade probe flat at ~1.5x the compacted floor.
-AUTO_OPTIMIZE_FILE_MULT = 3
-
-
-def _maybe_optimize(store, table: str, batch_id: int,
-                    optimize_every: int | str | None) -> None:
-    """Apply the post-commit compaction cadence shared by the
-    incremental indexes. ``optimize_every`` is an int K (compact after
-    every K-th committed batch), ``"auto"`` (compact when the table's
-    live file count exceeds AUTO_OPTIMIZE_FILE_MULT x shuffle
-    partitions — a commit-log + listing check, no data scan), or
-    None/0 (off). Compaction is its own atomic commit AFTER the batch
-    txn, so replay semantics are untouched either way."""
-    if not optimize_every:
-        return
-    if optimize_every == "auto":
-        parts = _resolve_auto_partitions(store)
-        if store.live_file_count(table) > AUTO_OPTIMIZE_FILE_MULT * parts:
-            store.optimize(table)
-    elif (batch_id + 1) % int(optimize_every) == 0:
-        store.optimize(table)
-
-
-def _resolve_auto_partitions(store) -> int:
-    """The 'auto' cadence needs an integer shuffle-partition count;
-    vendor distros / AQE configs can set the conf to a non-integer
-    string (e.g. "auto"), which must fail at validation time, never
-    post-commit inside _maybe_optimize."""
-    raw = store.spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        return int(raw)
-    except (TypeError, ValueError):
-        raise ValueError(
-            "optimize_every='auto' requires an integer "
-            f"spark.sql.shuffle.partitions; session has {raw!r}") from None
-
-
-def _validate_cadence(optimize_every, store=None) -> None:
-    """Reject a malformed cadence BEFORE any batch work: this runs
-    post-commit inside _maybe_optimize, where a TypeError would abort
-    the micro-batch after its txn already committed. With a store,
-    'auto' also resolves the shuffle-partition conf now so a
-    non-integer session value fails here, not after the commit."""
-    if optimize_every is None or optimize_every == "auto":
-        if optimize_every == "auto" and store is not None:
-            _resolve_auto_partitions(store)
-        return
-    # bool is an int subclass and floats truncate silently — both are
-    # caller typos (optimize_every=2.5 must not become cadence 2)
-    if isinstance(optimize_every, bool) or not isinstance(optimize_every, int):
-        raise ValueError(
-            f"optimize_every must be an int, 'auto', or None; "
-            f"got {optimize_every!r}")
-
-
 def incremental_minhash_pairs(
     store, new_docs: DataFrame, id_col: str, text_col: str, *,
     batch_id: int, bands_table: str = "doc_bands",
     pairs_table: str = "doc_pairs",
     num_hashes: int = 16, bands: int = 4, shingle_n: int = 3,
-    optimize_every: int | str | None = "auto",
 ) -> None:
     """Streaming near-duplicate detection: maintain the MinHash band
     index incrementally as documents arrive.
@@ -210,42 +149,31 @@ def incremental_minhash_pairs(
     Scale: the index table is append-only parquet keyed by
     (band, bucket); the join is a hash equi-join with AQE skew
     handling; nothing rescans old documents, only their (small) band
-    rows. This is the streaming form of ``minhash_lsh_pairs``.
-
-    ``optimize_every``: post-commit compaction cadence for the bands
-    table — default ``"auto"`` compacts when the live file count
-    exceeds AUTO_OPTIMIZE_FILE_MULT x shuffle partitions; see
-    ``incremental_fingerprint_pairs`` for the measured law.
+    rows. This is the streaming form of ``minhash_lsh_pairs``. The
+    bands table compacts under ``state.index_step``'s file-count law.
     """
     # one replay-version counter per index: two indexes sharing a store
     # must not skip each other's batches as replays
-    _validate_cadence(optimize_every, store)
     app = f"minhash_index:{bands_table}:{pairs_table}"
-    last = store.last_txn_version(app)
-    if last < 0 and (bands_table, pairs_table) == ("doc_bands", "doc_pairs"):
+    if (bands_table, pairs_table) == ("doc_bands", "doc_pairs") \
+            and store.last_txn_version(app) < 0 \
+            and store.last_txn_version("minhash_index") >= batch_id:
         # one-time migration: stores written before the per-index app key
         # committed every batch under the shared legacy name. That counter
         # semantically belongs to the default index (other table names
-        # never had correct replay isolation under it), so seed the
-        # default index's replay check from it — otherwise the first
-        # delivered batch after an upgrade would reprocess the whole
-        # history and append duplicate band/pair rows.
-        last = store.last_txn_version("minhash_index")
-    if last >= batch_id:
-        return  # replayed batch: skip before doing the banding work
-    # persist (not localCheckpoint): the band table feeds both the index
-    # append and the pair join, but the handle must not outlive the
-    # micro-batch — a long-running stream would otherwise accumulate
-    # unreleasable checkpointed blocks. Consumption completes inside
-    # this call (the txn writes are actions), so the operator owns the
-    # lifetime and frees it in the finally.
-    nb = minhash_bands(new_docs, id_col, text_col, num_hashes=num_hashes,
-                       bands=bands, shingle_n=shingle_n).persist()
-    try:
-        old = store.read(bands_table, nb.schema)
-        full = old.unionByName(nb)
+        # never had correct replay isolation under it), so it seeds the
+        # default index's replay check — otherwise the first delivered
+        # batch after an upgrade would reprocess the whole history and
+        # append duplicate band/pair rows.
+        return
+
+    def build(keep):
+        # the band table feeds both the index append and the pair join
+        nb = keep(minhash_bands(new_docs, id_col, text_col,
+                                num_hashes=num_hashes, bands=bands,
+                                shingle_n=shingle_n))
         a = nb.alias("a")
-        b = full.alias("b")
+        b = store.read(bands_table, nb.schema).unionByName(nb).alias("b")
         pairs = (
             a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.bucket") == F.col("b.bucket"))
@@ -254,21 +182,9 @@ def incremental_minhash_pairs(
                     F.greatest("a.__id", "b.__id").alias("id_b"))
             .dropDuplicates()
         )
-        # fill nb's persisted cache with ONE job, then overlap the two
-        # appends (different tables, both staged before the commit
-        # record links in); racing a cold cache would re-run the
-        # banding scan in both write jobs
-        nb.write.format("noop").mode("overwrite").save()
-        with store.transaction(app, batch_id) as txn:
-            stage_concurrently(
-                lambda: txn.append(bands_table, nb),
-                lambda: txn.append(pairs_table, pairs))
-        # same cadence contract as incremental_fingerprint_pairs
-        # (SURVEY finding 32): compaction is its own atomic commit
-        # after the batch txn; replay semantics untouched
-        _maybe_optimize(store, bands_table, batch_id, optimize_every)
-    finally:
-        nb.unpersist()
+        return [(bands_table, nb), (pairs_table, pairs)]
+
+    index_step(store, app, batch_id, build, compact=bands_table)
 
 
 def incremental_fingerprint_pairs(
@@ -277,7 +193,6 @@ def incremental_fingerprint_pairs(
     max_hamming: int = 3, bands_table: str = "img_bands",
     pairs_table: str = "img_pairs",
     max_bucket_size: int | str | None = "auto",
-    optimize_every: int | str | None = "auto",
 ) -> None:
     """Streaming near-duplicate detection over ANY <=63-bit integer
     fingerprint column (dHash images, SimHash text): maintain the
@@ -304,39 +219,25 @@ def incremental_fingerprint_pairs(
     census (N = full band rows div bands), so the guard tracks index
     growth instead of decaying as the stream runs.
 
-    ``optimize_every`` compacts the bands table as its own atomic
-    commit AFTER the batch txn (SURVEY finding 32: per-batch wall
-    grows ~18 ms per accumulated append FILE — driver listing + task
-    scheduling — not with rows; one compaction of 320 -> 40 files cut
-    the next batch 3.3x). The default ``"auto"`` derives the cadence
-    from the measured law: compact when the live band-file count
-    exceeds AUTO_OPTIMIZE_FILE_MULT x shuffle partitions (a
-    commit-log + listing check, no data scan) — equivalent to K≈3 at
-    32-partition appends, which keeps the join scan within ~1.5x of
-    its compacted floor. An int K compacts after every K-th committed
-    batch; None/0 disables. Replay semantics are untouched either way
-    (the replay counter lives in the commit log, not the file
-    layout); a crash between txn and compaction just defers
-    compaction to the next eligible batch."""
-    _validate_cadence(optimize_every, store)
-    app = f"fingerprint_index:{bands_table}:{pairs_table}"
-    if store.last_txn_version(app) >= batch_id:
-        return  # replayed batch: skip before doing any banding work
+    The bands table compacts as its own atomic commit AFTER the batch
+    txn (SURVEY finding 32: per-batch wall grows ~18 ms per
+    accumulated append FILE — driver listing + task scheduling — not
+    with rows; one compaction of 320 -> 40 files cut the next batch
+    3.3x), under ``state.index_step``'s law: when the live band-file
+    count exceeds AUTO_OPTIMIZE_FILE_MULT x shuffle partitions —
+    equivalent to every ~3rd batch at 32-partition appends, which
+    keeps the join scan within ~1.5x of its compacted floor. A caller
+    may also compact between batches with ``store.optimize``."""
     w = bits // bands
-    nb = (new_fp.select(F.col(id_col).alias("__id"),
-                        F.col(fp_col).alias("__fp"),
-                        F.explode(_band_struct_expr(fp_col, bits, bands))
-                         .alias("bb"))
-          .select("__id", "__fp", F.col("bb.band").alias("band"),
-                  F.col("bb.bv").alias("bv"))
-          .persist())
-    try:
-        old = store.read(bands_table, nb.schema)
-        full = old.unionByName(nb)
-        join_new, join_full = nb, full
-        if max_bucket_size is not None:
-            join_new, join_full = _incremental_cap_sides(
-                nb, full, max_bucket_size, w, bands)
+
+    def build(keep):
+        nb = keep(new_fp.select(
+            F.col(id_col).alias("__id"), F.col(fp_col).alias("__fp"),
+            F.explode(_band_struct_expr(fp_col, bits, bands)).alias("bb"))
+            .select("__id", "__fp", F.col("bb.band").alias("band"),
+                    F.col("bb.bv").alias("bv")))
+        join_new, join_full = _incremental_join_sides(
+            store, bands_table, nb, max_bucket_size, w, bands)
         a, b_ = join_new.alias("a"), join_full.alias("b")
         ham = F.bit_count(F.col("a.__fp").bitwiseXOR(F.col("b.__fp"))) \
             .cast("int")
@@ -350,18 +251,10 @@ def incremental_fingerprint_pairs(
             .filter(F.col("hamming") <= max_hamming)
             .dropDuplicates(["id_a", "id_b"])
         )
-        # fill nb's persisted cache with ONE job, then overlap the two
-        # appends (different tables, both staged before the commit
-        # record links in); racing a cold cache would re-run the
-        # banding scan in both write jobs
-        nb.write.format("noop").mode("overwrite").save()
-        with store.transaction(app, batch_id) as txn:
-            stage_concurrently(
-                lambda: txn.append(bands_table, nb),
-                lambda: txn.append(pairs_table, pairs))
-        _maybe_optimize(store, bands_table, batch_id, optimize_every)
-    finally:
-        nb.unpersist()
+        return [(bands_table, nb), (pairs_table, pairs)]
+
+    index_step(store, f"fingerprint_index:{bands_table}:{pairs_table}",
+               batch_id, build, compact=bands_table)
 
 
 def minhash_lsh_pairs(
@@ -801,18 +694,22 @@ def _window_bucket_cap(bandsdf: DataFrame, fp: DataFrame,
     return out.filter(F.col("__bn") <= max_bucket_size).drop("__bn")
 
 
-def _incremental_cap_sides(nb: DataFrame, full: DataFrame,
-                           max_bucket_size, w: int,
-                           bands: int) -> tuple[DataFrame, DataFrame]:
-    """Bucket-size gate for the ASYMMETRIC incremental joins
-    (small new batch vs big persisted index): over-cap keys from the
-    FULL index, broadcast-anti-joined against each side — the new
-    side stays exactly this batch's rows (a left-semi back on the id
-    would re-admit OLD index rows sharing an id with a re-delivered
-    id and re-emit committed pairs — round-10 ADVICE), and the index
-    is only SCANNED, never shuffled, for the gate (finding 38: the
-    window form shuffled the whole index every micro-batch).
-    Returns (join_new, join_full)."""
+def _incremental_join_sides(store, bands_table: str, nb: DataFrame,
+                            max_bucket_size, w: int,
+                            bands: int) -> tuple[DataFrame, DataFrame]:
+    """(join_new, join_full) of an ASYMMETRIC incremental band join:
+    this batch's band rows ``nb`` against the stored index UNION
+    themselves. With a ``max_bucket_size``, the bucket-size gate:
+    over-cap keys from the FULL index, broadcast-anti-joined against
+    each side — the new side stays exactly this batch's rows (a
+    left-semi back on the id would re-admit OLD index rows sharing an
+    id with a re-delivered id and re-emit committed pairs — round-10
+    ADVICE), and the index is only SCANNED, never shuffled, for the
+    gate (finding 38: the window form shuffled the whole index every
+    micro-batch)."""
+    full = store.read(bands_table, nb.schema).unionByName(nb)
+    if max_bucket_size is None:
+        return nb, full
     census = full.select(
         F.expr(f"count(1) div {bands}").alias("__nfp")) \
         if max_bucket_size == "auto" else None
@@ -955,7 +852,6 @@ def incremental_frameset_pairs(
     max_hamming: int = 3, bands_table: str = "vid_bands",
     pairs_table: str = "vid_pairs",
     max_bucket_size: int | str | None = "auto",
-    optimize_every: int | str | None = "auto",
 ) -> None:
     """Streaming video near-duplicate detection: maintain the
     per-frame dHash band index incrementally as videos arrive — the
@@ -979,31 +875,20 @@ def incremental_frameset_pairs(
     against the persisted index UNION themselves, Hamming-verify
     frame pairs, aggregate per video pair, commit bands + pairs in
     one txn keyed by ``batch_id`` (replay is a no-op).
-    ``max_bucket_size`` / ``optimize_every`` behave exactly as on
+    ``max_bucket_size`` and compaction behave exactly as on
     ``incremental_fingerprint_pairs`` (auto cap census = FRAME
-    fingerprints in the full index; auto compaction from the live
-    file count)."""
-    _validate_cadence(optimize_every, store)
-    app = f"frameset_index:{bands_table}:{pairs_table}"
-    if store.last_txn_version(app) >= batch_id:
-        return  # replayed batch: skip before doing any banding work
+    fingerprints in the full index)."""
     w = bits // bands
-    nb = (new_fp.select(F.col(set_col).alias("__sid"),
-                        F.col(frame_col).alias("__f"),
-                        F.col(fp_col).alias("__fp"),
-                        F.explode(_band_struct_expr(fp_col, bits, bands))
-                         .alias("bb"))
-          .select("__sid", "__f", "__fp",
-                  F.col("bb.band").alias("band"),
-                  F.col("bb.bv").alias("bv"))
-          .persist())
-    try:
-        old = store.read(bands_table, nb.schema)
-        full = old.unionByName(nb)
-        join_new, join_full = nb, full
-        if max_bucket_size is not None:
-            join_new, join_full = _incremental_cap_sides(
-                nb, full, max_bucket_size, w, bands)
+
+    def build(keep):
+        nb = keep(new_fp.select(
+            F.col(set_col).alias("__sid"), F.col(frame_col).alias("__f"),
+            F.col(fp_col).alias("__fp"),
+            F.explode(_band_struct_expr(fp_col, bits, bands)).alias("bb"))
+            .select("__sid", "__f", "__fp", F.col("bb.band").alias("band"),
+                    F.col("bb.bv").alias("bv")))
+        join_new, join_full = _incremental_join_sides(
+            store, bands_table, nb, max_bucket_size, w, bands)
         a, b_ = join_new.alias("a"), join_full.alias("b")
         ham = F.bit_count(F.col("a.__fp").bitwiseXOR(F.col("b.__fp"))) \
             .cast("int")
@@ -1028,15 +913,7 @@ def incremental_frameset_pairs(
         pairs = (hits.groupBy("id_a", "id_b")
                  .agg(F.min("hamming").cast("int").alias("min_hamming"),
                       F.count(F.lit(1)).alias("n_hit_frames")))
-        # fill nb's persisted cache with ONE job, then overlap the two
-        # appends (different tables, both staged before the commit
-        # record links in); racing a cold cache would re-run the
-        # banding scan in both write jobs
-        nb.write.format("noop").mode("overwrite").save()
-        with store.transaction(app, batch_id) as txn:
-            stage_concurrently(
-                lambda: txn.append(bands_table, nb),
-                lambda: txn.append(pairs_table, pairs))
-        _maybe_optimize(store, bands_table, batch_id, optimize_every)
-    finally:
-        nb.unpersist()
+        return [(bands_table, nb), (pairs_table, pairs)]
+
+    index_step(store, f"frameset_index:{bands_table}:{pairs_table}",
+               batch_id, build, compact=bands_table)

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..state import index_step
+
 
 def gram_partials(df: DataFrame, vec_col: str, dims: int) -> DataFrame:
     """Per-partition second-moment partials, flattened to (pos, val)
@@ -120,14 +122,14 @@ def incremental_gram_update(
     state, and the fitted model is recovered at READ time by summing
     whatever partials exist (``pca_fit_from_store``). A replayed
     ``batch_id`` is skipped before any compute (exactly-once,
-    per-table txn counter), so at-least-once delivery never
+    per-table txn counter; ``state.index_step``), so at-least-once delivery never
     double-counts a batch into the covariance.
 
     Scale: per batch one mapInPandas scan + a (d^2+d+1)-row append —
     old vectors are NEVER rescanned."""
-    with store.transaction(f"pca_gram:{partials_table}", batch_id) as txn:
-        txn.append(partials_table,
-                   gram_partials(new_vecs, vec_col, dims))
+    index_step(store, f"pca_gram:{partials_table}", batch_id,
+               lambda keep: [(partials_table,
+                              gram_partials(new_vecs, vec_col, dims))])
 
 
 def pca_fit_from_store(store, dims: int, n_components: int = 2,

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..state import stage_concurrently
+from ..state import index_step
 from .cache import owned_persist
 from ..session import empty_df, tiny_df
 
@@ -751,6 +751,50 @@ def _pq_topk_impl(spark, df, id_col, vec_col, m, n_codes, k,
                  .filter(F.col("rank") <= k)
 
 
+def _nearest_stored_centroid(store, base: DataFrame, centroids_table: str,
+                             n_centroids: int, carry: tuple = ()):
+    """Assign each ``base`` row (``__id``, ``__v``) to its nearest
+    centroid of the codebook stored in ``centroids_table`` — the
+    codebook step the streaming indexes share. Returns ``(nearest,
+    seed)``: ``nearest`` holds ``__id``, ``cid`` and the ``carry``
+    columns of each row; ``seed`` is None, or, while the store holds
+    no codebook (a footer-only row count, no Spark job), the
+    ``n_centroids`` lowest-id vectors of this batch — the
+    deterministic seeding rule shared by every codebook in this
+    module — which the caller commits with its first batch.
+
+    Distances are rounded to 6dp with a lowest-centroid tie-break so
+    the assignment is bit-reproducible across engines/retries — an
+    arbitrary argmin on raw doubles would make the stored index
+    nondeterministic (same trap the PQ Lloyd tie-break fixes)."""
+    import pyspark.sql.types as T
+
+    schema = T.StructType([
+        T.StructField("cid", T.IntegerType()),
+        T.StructField("cv", T.ArrayType(T.DoubleType())),
+    ])
+    seed = None
+    if store.table_rows(centroids_table):
+        cents = store.read(centroids_table, schema)
+    else:
+        rows = base.orderBy("__id").limit(n_centroids).collect()
+        cents = seed = tiny_df(
+            base.sparkSession,
+            [(i, list(r["__v"])) for i, r in enumerate(rows)], schema)
+    d2 = F.round(F.aggregate(
+        F.zip_with(F.col("__v"), F.col("cv"),
+                   lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0), lambda acc, x: acc + x), 6)
+    nearest = (base.join(F.broadcast(cents))
+               .select("__id", *carry, "cid", d2.alias("__d2"))
+               .groupBy("__id").agg(
+                   F.min_by(F.struct("cid", *carry),
+                            F.struct(F.col("__d2"), F.col("cid")))
+                    .alias("__w"))
+               .select("__id", "__w.*"))
+    return nearest, seed
+
+
 def incremental_ivf_assignments(
     store, new_vecs: DataFrame, id_col: str = "vec_id",
     vec_col: str = "embedding", *, batch_id: int, n_centroids: int = 8,
@@ -769,11 +813,7 @@ def incremental_ivf_assignments(
     bounded broadcast) and do O(batch x n_centroids) distance work —
     never rescanning old vectors. A replayed ``batch_id`` is skipped
     before any compute (exactly-once, per-index txn counter).
-
-    Distances are rounded to 6dp with a lowest-centroid tie-break so
-    the assignment is bit-reproducible across engines/retries — an
-    arbitrary argmin on raw doubles would make the stored index
-    nondeterministic (same trap the PQ Lloyd tie-break fixes).
+    Assignment is bit-reproducible (``_nearest_stored_centroid``).
 
     Scale: per batch one broadcast join (codebook is tiny), one
     map-side min_by aggregate keyed by vector id, one appended
@@ -782,45 +822,19 @@ def incremental_ivf_assignments(
     rebuild. Queries then search ``nprobe`` lists exactly like
     ``ivf_topk``'s probe stage.
     """
-    import pyspark.sql.types as T
+    def build(keep):
+        base = new_vecs.select(F.col(id_col).alias("__id"),
+                               as_double(F.col(vec_col)).alias("__v"))
+        nearest, seed = _nearest_stored_centroid(
+            store, base, centroids_table, n_centroids)
+        assigned = nearest.select(
+            F.col("__id").cast("long").alias("vec_id"),
+            F.col("cid").cast("long").alias("centroid"))
+        return [(assign_table, assigned)] + (
+            [(centroids_table, seed)] if seed is not None else [])
 
-    app = f"ivf_index:{centroids_table}:{assign_table}"
-    if store.last_txn_version(app) >= batch_id:
-        return  # replayed batch: skip before any compute
-
-    spark = new_vecs.sparkSession
-    base = new_vecs.select(F.col(id_col).alias("__id"),
-                           as_double(F.col(vec_col)).alias("__v"))
-    cents_schema = T.StructType([
-        T.StructField("cid", T.IntegerType()),
-        T.StructField("cv", T.ArrayType(T.DoubleType())),
-    ])
-    cur = store.read(centroids_table, cents_schema)
-    seed = None
-    if not cur.limit(1).count():
-        # first batch: n_centroids lowest-id vectors become the codebook
-        rows = base.orderBy("__id").limit(n_centroids).collect()
-        seed = tiny_df(
-            spark, [(i, list(r["__v"])) for i, r in enumerate(rows)], cents_schema)
-        cents = seed
-    else:
-        cents = cur
-
-    d2 = F.round(F.aggregate(
-        F.zip_with(F.col("__v"), F.col("cv"),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x), 6)
-    assigned = (base.join(F.broadcast(cents))
-                .select("__id", "cid", d2.alias("__d2"))
-                .groupBy("__id").agg(
-                    F.min_by("cid", F.struct(F.col("__d2"), F.col("cid")))
-                     .alias("centroid"))
-                .select(F.col("__id").cast("long").alias("vec_id"),
-                        F.col("centroid").cast("long").alias("centroid")))
-    with store.transaction(app, batch_id) as txn:
-        if seed is not None:
-            txn.append(centroids_table, seed)
-        txn.append(assign_table, assigned)
+    index_step(store, f"ivf_index:{centroids_table}:{assign_table}",
+               batch_id, build)
 
 
 def _nearest_centroid_udf(cents: list):
@@ -1194,86 +1208,55 @@ def incremental_semantic_dedup(
     """
     import pyspark.sql.types as T
 
-    app = f"semdedup:{members_table}:{verdict_table}"
-    if store.last_txn_version(app) >= batch_id:
-        return  # replayed batch: skip before any compute
+    def build(keep):
+        base = new_vecs.select(F.col(id_col).alias("__id"),
+                               as_double(F.col(vec_col)).alias("__v"))
+        nearest, seed = _nearest_stored_centroid(
+            store, base, centroids_table, n_centroids, carry=("__v",))
+        # assigned feeds members, verdicts and both sides of the dup join
+        assigned = keep(nearest.select(
+            "__id", F.col("cid").cast("long").alias("cluster_id"), "__v")
+            .withColumn("__n", l2norm(F.col("__v"))))
 
-    spark = new_vecs.sparkSession
-    base = new_vecs.select(F.col(id_col).alias("__id"),
-                           as_double(F.col(vec_col)).alias("__v"))
-    cents_schema = T.StructType([
-        T.StructField("cid", T.IntegerType()),
-        T.StructField("cv", T.ArrayType(T.DoubleType())),
-    ])
-    cur = store.read(centroids_table, cents_schema)
-    seed = None
-    if not cur.limit(1).count():
-        rows = base.orderBy("__id").limit(n_centroids).collect()
-        seed = tiny_df(
-            spark, [(i, list(r["__v"])) for i, r in enumerate(rows)], cents_schema)
-        cents = seed
-    else:
-        cents = cur
+        mem_schema = T.StructType([
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("batch_id", T.LongType()),
+            T.StructField("cluster_id", T.LongType()),
+            T.StructField("vec", T.ArrayType(T.DoubleType())),
+        ])
+        stored = (store.read(members_table, mem_schema)
+                  .withColumn("__sn", l2norm(F.col("vec"))))
+        earlier_same_batch = assigned.select(
+            F.col("__id").alias("vec_id"), F.lit(batch_id).cast("long")
+            .alias("batch_id"), "cluster_id", F.col("__v").alias("vec"),
+            F.col("__n").alias("__sn"))
+        prior = stored.unionByName(earlier_same_batch)
+        dup = (assigned.alias("b")
+               .join(prior.alias("a"),
+                     (F.col("a.cluster_id") == F.col("b.cluster_id"))
+                     & ((F.col("a.batch_id") < F.lit(batch_id))
+                        | (F.col("a.vec_id") < F.col("b.__id"))))
+               .select(F.col("b.__id").alias("__id"),
+                       F.col("a.vec_id").alias("__prev"),
+                       (dot(F.col("a.vec"), F.col("b.__v"))
+                        / (F.col("a.__sn") * F.col("b.__n")))
+                       .alias("__cos"))
+               .filter(F.col("__cos") >= threshold)
+               .groupBy("__id").agg(F.min("__prev").alias("dup_of")))
 
-    d2 = F.round(F.aggregate(
-        F.zip_with(F.col("__v"), F.col("cv"),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x), 6)
-    assigned = owned_persist(
-        base.join(F.broadcast(cents))
-        .select("__id", "__v", "cid", d2.alias("__d2"))
-        .groupBy("__id").agg(
-            F.min_by(F.struct("cid", "__v"),
-                     F.struct(F.col("__d2"), F.col("cid"))).alias("__w"))
-        .select(F.col("__id"),
-                F.col("__w.cid").cast("long").alias("cluster_id"),
-                F.col("__w.__v").alias("__v"))
-        .withColumn("__n", l2norm(F.col("__v"))))
+        verdicts = (assigned.join(dup, "__id", "left")
+                    .select(F.col("__id").cast("long").alias("vec_id"),
+                            F.lit(batch_id).cast("long").alias("batch_id"),
+                            "cluster_id",
+                            F.when(F.col("dup_of").isNull(), 1).otherwise(0)
+                            .cast("int").alias("kept"),
+                            F.col("dup_of").cast("long").alias("dup_of")))
+        members = assigned.select(
+            F.col("__id").cast("long").alias("vec_id"),
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            "cluster_id", F.col("__v").alias("vec"))
+        return [(members_table, members), (verdict_table, verdicts)] + (
+            [(centroids_table, seed)] if seed is not None else [])
 
-    mem_schema = T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("batch_id", T.LongType()),
-        T.StructField("cluster_id", T.LongType()),
-        T.StructField("vec", T.ArrayType(T.DoubleType())),
-    ])
-    stored = (store.read(members_table, mem_schema)
-              .withColumn("__sn", l2norm(F.col("vec"))))
-    earlier_same_batch = assigned.select(
-        F.col("__id").alias("vec_id"), F.lit(batch_id).cast("long")
-        .alias("batch_id"), "cluster_id", F.col("__v").alias("vec"),
-        F.col("__n").alias("__sn"))
-    prior = stored.unionByName(earlier_same_batch)
-    dup = (assigned.alias("b")
-           .join(prior.alias("a"),
-                 (F.col("a.cluster_id") == F.col("b.cluster_id"))
-                 & ((F.col("a.batch_id") < F.lit(batch_id))
-                    | (F.col("a.vec_id") < F.col("b.__id"))))
-           .select(F.col("b.__id").alias("__id"),
-                   F.col("a.vec_id").alias("__prev"),
-                   (dot(F.col("a.vec"), F.col("b.__v"))
-                    / (F.col("a.__sn") * F.col("b.__n"))).alias("__cos"))
-           .filter(F.col("__cos") >= threshold)
-           .groupBy("__id").agg(F.min("__prev").alias("dup_of")))
-
-    verdicts = (assigned.join(dup, "__id", "left")
-                .select(F.col("__id").cast("long").alias("vec_id"),
-                        F.lit(batch_id).cast("long").alias("batch_id"),
-                        "cluster_id",
-                        F.when(F.col("dup_of").isNull(), 1).otherwise(0)
-                        .cast("int").alias("kept"),
-                        F.col("dup_of").cast("long").alias("dup_of")))
-    members = assigned.select(
-        F.col("__id").cast("long").alias("vec_id"),
-        F.lit(batch_id).cast("long").alias("batch_id"),
-        "cluster_id", F.col("__v").alias("vec"))
-    # fill assigned's persisted cache with ONE job, then overlap the
-    # appends (distinct tables, all staged before the commit record
-    # links in); members and verdicts would otherwise each re-run the
-    # assignment stage against a cold cache
-    assigned.write.format("noop").mode("overwrite").save()
-    with store.transaction(app, batch_id) as txn:
-        thunks = [lambda: txn.append(members_table, members),
-                  lambda: txn.append(verdict_table, verdicts)]
-        if seed is not None:
-            thunks.append(lambda: txn.append(centroids_table, seed))
-        stage_concurrently(*thunks)
+    index_step(store, f"semdedup:{members_table}:{verdict_table}",
+               batch_id, build)

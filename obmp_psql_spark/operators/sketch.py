@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..state import index_step
+
 
 def _reduce_counters(counters: dict, k: int) -> dict:
     """Batch Misra-Gries reduction: if more than k keys survive,
@@ -109,13 +111,13 @@ def incremental_mg_update(store, batch_df: DataFrame, col: str, k: int, *,
     result: the summary recovered at read time from ANY accumulation
     of per-batch partials satisfies exact - est <= (N - M)/(k+1). A
     replayed ``batch_id`` is skipped before any compute
-    (exactly-once, per-table txn counter), so at-least-once delivery
+    (exactly-once, per-table txn counter; ``state.index_step``), so at-least-once delivery
     never double-counts a batch.
 
     Scale: per batch one k-counter Arrow pass over the NEW rows plus
     a <= ~k-row append — the history is never rescanned."""
-    with store.transaction(f"mg_sketch:{partials_table}", batch_id) as txn:
-        txn.append(partials_table, misra_gries(batch_df, col, k))
+    index_step(store, f"mg_sketch:{partials_table}", batch_id,
+               lambda keep: [(partials_table, misra_gries(batch_df, col, k))])
 
 
 def mg_from_store(store, k: int,
@@ -237,7 +239,7 @@ def incremental_quantile_update(store, batch_df: DataFrame, col: str,
     irrelevant: per-batch collapse errors sum over DISJOINT masses,
     so the recovered summary keeps the <= 3N/k rank bound no matter
     how ingestion was batched. Replayed batch ids are skipped before
-    any compute (exactly-once)."""
-    with store.transaction(f"quantile_sketch:{partials_table}",
-                           batch_id) as txn:
-        txn.append(partials_table, quantile_summary(batch_df, col, k))
+    any compute (exactly-once; ``state.index_step``)."""
+    index_step(store, f"quantile_sketch:{partials_table}", batch_id,
+               lambda keep: [(partials_table,
+                              quantile_summary(batch_df, col, k))])

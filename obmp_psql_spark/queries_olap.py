@@ -1524,7 +1524,7 @@ def q_stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
                              "peer", F.col("new_e").alias("e"))))
             # different target tables, both staged before the single
             # commit record links in — overlap them (the BMP sink's
-            # _stage_concurrently pattern)
+            # stage_concurrently pattern)
             from .state import stage_concurrently
             with store.transaction("rate_anomaly", b) as txn:
                 stage_concurrently(

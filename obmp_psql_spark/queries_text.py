@@ -3860,17 +3860,16 @@ def q_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = TxnStateStore(spark, tempfile.mkdtemp(prefix="imgidx_"))
         b1 = fpd.filter(F.col("img_id") % 2 == 0)
         b2 = fpd.filter(F.col("img_id") % 2 == 1)
-        # optimize_every exercises the finding-32 cadence INSIDE the
-        # gate (batch 1 triggers a compaction commit): pair output is
-        # unchanged by compaction, so the oracle needs no knowledge of
-        # it — but a compaction that corrupted the index or broke the
-        # replay guard would hash-mismatch here
-        kw = dict(bits=63, bands=7, max_hamming=3, optimize_every=2,
-                  max_bucket_size=None)
+        kw = dict(bits=63, bands=7, max_hamming=3, max_bucket_size=None)
         incremental_fingerprint_pairs(store, b1, "img_id", "dhash",
                                       batch_id=0, **kw)
         incremental_fingerprint_pairs(store, b2, "img_id", "dhash",
                                       batch_id=1, **kw)
+        # a compaction commit INSIDE the gate (finding 32): pair output
+        # is unchanged by compaction, so the oracle needs no knowledge
+        # of it — but a compaction that corrupted the index or broke
+        # the replay guard would hash-mismatch here
+        store.optimize("img_bands")
         incremental_fingerprint_pairs(store, b1, "img_id", "dhash",
                                       batch_id=0, **kw)  # replay: no-op
         return (store.read("img_pairs"),)
@@ -4174,16 +4173,15 @@ def q_stream_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         b1 = fpd.filter(F.col("vid_id") % 2 == 0)
         b2 = fpd.filter(F.col("vid_id") % 2 == 1)
         # gate runs uncapped at minimum pigeonhole banding (finding
-        # 34) = lossless exact parity with the batch operator; the
-        # int cadence exercises a mid-stream compaction commit
-        kw = dict(bits=60, bands=4, max_hamming=3, optimize_every=2,
-                  max_bucket_size=None)
+        # 34) = lossless exact parity with the batch operator
+        kw = dict(bits=60, bands=4, max_hamming=3, max_bucket_size=None)
         incremental_frameset_pairs(
             store, b1, "vid_id", "frame_index", "dhash",
             batch_id=0, **kw)
         incremental_frameset_pairs(
             store, b2, "vid_id", "frame_index", "dhash",
             batch_id=1, **kw)
+        store.optimize("vid_bands")  # a mid-stream compaction commit
         incremental_frameset_pairs(
             store, b1, "vid_id", "frame_index", "dhash",
             batch_id=0, **kw)  # replay: no-op

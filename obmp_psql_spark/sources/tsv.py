@@ -116,26 +116,17 @@ def ingest_with_dead_letter(store, raw: DataFrame,
 
     The txn app name derives from the table names so two wire feeds
     sharing a store keep independent replay counters (same rule as
-    ``incremental_minhash_pairs``). The parse projection is persisted
-    for the two complementary filters and released before return —
-    a long-running stream accumulates no blocks."""
-    app = f"dead_letter:{valid_table}:{dead_table}"
-    if store.last_txn_version(app) >= batch_id:
-        return  # replayed batch: skip before parsing anything
-    parsed = parse_tsv(raw, schema).persist()
-    try:
-        valid, dead = split_dead_letter(parsed, required)
-        # fill the cache with ONE job before the concurrent appends:
-        # two writes racing a cold cache would each re-run the parse
-        parsed.write.format("noop").mode("overwrite").save()
-        # the two appends target different tables and both stage
-        # BEFORE the single commit record links in — overlap them,
-        # same pattern (and same atomicity argument) as the BMP
-        # sink's _stage_concurrently
-        from ..state import stage_concurrently
-        with store.transaction(app, batch_id) as txn:
-            stage_concurrently(
-                lambda: txn.append(valid_table, valid),
-                lambda: txn.append(dead_table, dead))
-    finally:
-        parsed.unpersist()
+    ``incremental_minhash_pairs``). One ``state.index_step``: the
+    parse projection is persisted for the two complementary filters
+    and released before return — a long-running stream accumulates
+    no blocks."""
+    from ..state import index_step
+
+    def build(keep):
+        # the parse feeds both complementary filters
+        valid, dead = split_dead_letter(keep(parse_tsv(raw, schema)),
+                                        required)
+        return [(valid_table, valid), (dead_table, dead)]
+
+    index_step(store, f"dead_letter:{valid_table}:{dead_table}",
+               batch_id, build)

@@ -140,13 +140,87 @@ def stage_concurrently(*thunks) -> None:
     — measured ~10-15% off the durable micro-batch on the BMP sink.
     Inputs shared by the thunks must be materialized (persist fill /
     localCheckpoint) BEFORE the call: two concurrent jobs racing a
-    cold cache would each recompute the shared stage."""
+    cold cache would each recompute the shared stage. A single thunk
+    has nothing to overlap and runs in the caller's thread, keeping
+    its thread-local job group."""
     from concurrent.futures import ThreadPoolExecutor
 
+    if len(thunks) == 1:
+        thunks[0]()
+        return
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
         futures = [ex.submit(t) for t in thunks]
     for f in futures:
         f.result()
+
+
+# The compaction law of the incremental indexes: compact a band table
+# when its live parquet-file count exceeds this multiple of the
+# session's shuffle partitions. Derived from the measured law (SURVEY
+# finding 32): per-batch wall grows ~18 ms per accumulated append FILE,
+# and compaction at ~100 files (≈3 batches of 32-partition appends)
+# held the streaming decade probe flat at ~1.5x the compacted floor.
+AUTO_OPTIMIZE_FILE_MULT = 3
+
+
+def _compaction_limit(spark) -> int:
+    """The law's live-file limit. The law needs an integer shuffle
+    partition count; vendor distros / AQE configs can set the conf to
+    a non-integer string (e.g. "auto"), which must fail before a
+    batch commits, never after."""
+    raw = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    try:
+        return AUTO_OPTIMIZE_FILE_MULT * int(raw)
+    except (TypeError, ValueError):
+        raise ValueError(
+            "the compaction law requires an integer "
+            f"spark.sql.shuffle.partitions; session has {raw!r}") from None
+
+
+def index_step(store: "TxnStateStore", app: str, batch_id: int, build, *,
+               compact: str | None = None) -> None:
+    """One micro-batch of an incremental index — the idempotent
+    ``foreachBatch`` sink every streaming index shares:
+
+    1. a ``batch_id`` already committed under ``app`` returns before
+       any compute (the Delta ``txn`` action; exactly-once under
+       at-least-once delivery);
+    2. ``build(keep)`` returns the batch's appends as ``(table, df)``
+       pairs; an input several appends share goes through ``keep``,
+       which persists it;
+    3. each kept input is filled with ONE ``noop`` job, so the
+       concurrent staging writes never race a cold cache (each would
+       recompute the shared stage);
+    4. the appends are staged concurrently in one transaction keyed by
+       ``(app, batch_id)``;
+    5. after the commit, the ``compact`` table is compacted when its
+       live file count exceeds AUTO_OPTIMIZE_FILE_MULT x shuffle
+       partitions (a commit-log + listing check, no data scan).
+       Compaction is its own atomic commit, so replay semantics are
+       untouched; a crash between the two defers it to the next batch;
+    6. kept inputs are unpersisted whatever happened: a long-running
+       stream must not accumulate one cached block per batch."""
+    if store.last_txn_version(app) >= batch_id:
+        return
+    limit = _compaction_limit(store.spark) if compact else None
+    kept: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        kept.append(df.persist())
+        return kept[-1]
+
+    try:
+        appends = build(keep)
+        for df in kept:
+            df.write.format("noop").mode("overwrite").save()
+        with store.transaction(app, batch_id) as txn:
+            stage_concurrently(*(lambda t=t, df=df: txn.append(t, df)
+                                 for t, df in appends))
+        if compact and store.live_file_count(compact) > limit:
+            store.optimize(compact)
+    finally:
+        for df in kept:
+            df.unpersist()
 
 
 class _Snapshot:
@@ -294,8 +368,8 @@ class Transaction:
         self._part_reservations: dict[str, str] = {}
         # staging methods may run CONCURRENTLY (independent tables of
         # one txn overlap their Spark write jobs — see
-        # streaming.pipeline._stage_concurrently); the lock guards the
-        # action/staged-dir metadata, never the write itself
+        # stage_concurrently); the lock guards the action/staged-dir
+        # metadata, never the write itself
         self._lock = threading.Lock()
 
     def replace(self, table: str, df: DataFrame,
@@ -535,15 +609,7 @@ class TxnStateStore:
         Raises if the version's data files were already GC'd/vacuumed
         (retention window exceeded)."""
         tab = self.snapshot_at(version).tables.get(table)
-        paths = []
-        if tab:
-            if tab["replace"]:
-                paths.append(self._abs(tab["replace"]))
-            paths.extend(
-                os.path.join(self._abs(d), f"_bucket={k}")
-                for k, d in sorted(tab["buckets"].items()))
-            paths.extend(self._abs(p) for p in tab["appends"])
-        missing = [p for p in paths if not os.path.isdir(p)]
+        missing = [p for p in self._paths(tab) if not os.path.isdir(p)]
         if missing:
             raise ValueError(
                 f"{table}@v{version}: data files GC'd (retention "
@@ -652,10 +718,9 @@ class TxnStateStore:
                 "all_partitioned": all(a in tab["append_parts"]
                                        for a in tab["appends"])}
 
-    def current_paths(self, table: str) -> list[str]:
-        """Committed data dirs for ``table`` (replace dir or bucket
-        subdirs, + later appends), absolute. Empty if never written."""
-        tab = self.snapshot().tables.get(table)
+    def _paths(self, tab: dict | None) -> list[str]:
+        """A table entry's data dirs (replace dir or bucket subdirs,
+        + later appends), absolute. Empty if never written."""
         if not tab:
             return []
         out = [self._abs(tab["replace"])] if tab["replace"] else []
@@ -664,12 +729,16 @@ class TxnStateStore:
         out.extend(self._abs(p) for p in tab["appends"])
         return out
 
+    def current_paths(self, table: str) -> list[str]:
+        """Committed data dirs for ``table``, absolute."""
+        return self._paths(self.snapshot().tables.get(table))
+
     def live_file_count(self, table: str) -> int:
         """Number of live parquet data files for ``table`` — commit
         log + directory listing only, no footer reads. The input to
-        the auto OPTIMIZE cadence: per-batch wall on the incremental
-        indexes grows with accumulated FILES (driver listing + task
-        scheduling), not rows (SURVEY finding 32)."""
+        the incremental indexes' compaction law (``index_step``):
+        per-batch wall grows with accumulated FILES (driver listing +
+        task scheduling), not rows (SURVEY finding 32)."""
         n = 0
         for root in self.current_paths(table):
             for _, _, fnames in os.walk(root):
@@ -708,7 +777,7 @@ class TxnStateStore:
         row estimate + total/index/toast bytes out of pg_class). The
         Spark-native equivalent reads parquet FOOTERS + the commit
         log — no data scan, exactly like Postgres serving catalog
-        estimates — and is the input the OPTIMIZE cadence decision
+        estimates — and is the input an OPTIMIZE decision
         needs (BENCH_compaction: a 149x scan tax when appends
         accumulate uncompacted).
 
@@ -1031,8 +1100,3 @@ class _TxnContext:
             return False  # propagate; nothing became visible
         self.store._commit(self.txn)
         return False
-
-
-# Back-compat name: earlier rounds used a versioned-directory-swap
-# store under this name; the API (read/overwrite/append) is unchanged.
-ParquetStateStore = TxnStateStore

@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import ingest, ingest_ls
 from ..schemas import MESSAGE_SCHEMAS
-from ..state import ParquetStateStore
-# staging-write concurrency lives with the txn store (shared by the
-# wire-ingest and incremental-index operators); old private name kept
-# for this module's call sites
-from ..state import stage_concurrently as _stage_concurrently
+from ..state import TxnStateStore, stage_concurrently
 
 
 class BmpStreamingIngest:
@@ -50,7 +46,7 @@ class BmpStreamingIngest:
 
     RIB_KEY = ["peer_hash_id", "hash_id"]
 
-    def __init__(self, spark: SparkSession, store: ParquetStateStore,
+    def __init__(self, spark: SparkSession, store: TxnStateStore,
                  geo_ip: DataFrame | None = None,
                  rib_buckets: int | None = None,
                  family_buckets: int | None = None):
@@ -114,7 +110,7 @@ class BmpStreamingIngest:
                 else:
                     txn.replace("ip_rib", new_state)
 
-            _stage_concurrently(stage_log, stage_state)
+            stage_concurrently(stage_log, stage_state)
 
     def base_attribute_batch(self, batch: DataFrame, batch_id: int) -> None:
         if self._applied("base_attribute", batch_id):
@@ -198,8 +194,8 @@ class BmpStreamingIngest:
                 else:
                     txn.replace(table, state)
 
-            _stage_concurrently(lambda: txn.append(log_table, log),
-                                stage_state)
+            stage_concurrently(lambda: txn.append(log_table, log),
+                               stage_state)
 
     def ls_node_batch(self, batch: DataFrame, batch_id: int) -> None:
         self._rib_family_batch("ls_node", "ls_nodes", "ls_nodes_log",

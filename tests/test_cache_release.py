@@ -216,3 +216,79 @@ def test_incremental_minhash_legacy_counter_migration(spark):
                               bands_table="alt_bands",
                               pairs_table="alt_pairs")
     assert store.read("alt_bands").count() > 0
+
+
+def _fps(spark):
+    base = 0x155555555555555
+    return spark.createDataFrame([(i, base ^ (i % 3)) for i in range(16)],
+                                 "img_id long, dhash long")
+
+
+def _frames(spark):
+    base = 0x4CCCCCCCCCCCCCC
+    return spark.createDataFrame(
+        [(v, f, base ^ (v % 2) ^ (f << 40)) for v in range(6)
+         for f in range(3)], "vid_id long, frame_index int, dhash long")
+
+
+def _incremental_ops():
+    """op -> (its input, one micro-batch of it)."""
+    from obmp_psql_spark.operators.dedup import (
+        incremental_fingerprint_pairs, incremental_frameset_pairs,
+        incremental_minhash_pairs)
+    from obmp_psql_spark.operators.pca import incremental_gram_update
+    from obmp_psql_spark.operators.similarity import (
+        incremental_ivf_assignments, incremental_semantic_dedup)
+    from obmp_psql_spark.operators.sketch import (
+        incremental_mg_update, incremental_quantile_update)
+
+    return {
+        "minhash": (_docs, lambda st, df, b: incremental_minhash_pairs(
+            st, df, "doc_id", "text", batch_id=b, num_hashes=8, bands=2)),
+        "fingerprint": (_fps, lambda st, df, b: incremental_fingerprint_pairs(
+            st, df, "img_id", "dhash", batch_id=b)),
+        "frameset": (_frames, lambda st, df, b: incremental_frameset_pairs(
+            st, df, "vid_id", "frame_index", "dhash", batch_id=b)),
+        "ivf": (_vecs, lambda st, df, b: incremental_ivf_assignments(
+            st, df, batch_id=b, n_centroids=4)),
+        "semdedup": (_vecs, lambda st, df, b: incremental_semantic_dedup(
+            st, df, batch_id=b, n_centroids=4)),
+        "pca": (_vecs, lambda st, df, b: incremental_gram_update(
+            st, df, "embedding", 64, batch_id=b)),
+        "mg": (_docs, lambda st, df, b: incremental_mg_update(
+            st, df.select(F.substring("text", 1, 2).alias("term")),
+            "term", 8, batch_id=b)),
+        "quantile": (_docs, lambda st, df, b: incremental_quantile_update(
+            st, df.select(F.col("doc_id").cast("double").alias("v")),
+            "v", 16, batch_id=b)),
+    }
+
+
+@pytest.mark.parametrize("op", ["minhash", "fingerprint", "frameset", "ivf",
+                                "semdedup", "pca", "mg", "quantile"])
+def test_incremental_replay_runs_no_job_and_leaks_no_rdd(spark, tmp_path,
+                                                         op):
+    """Every streaming-index operator goes through ``state.index_step``:
+    a replayed ``batch_id`` is skipped before any compute — no Spark
+    job, no commit — and no batch, first or replayed, leaves a
+    persisted RDD behind (a long-running stream would accumulate one
+    per batch)."""
+    from obmp_psql_spark.state import TxnStateStore
+
+    make, run = _incremental_ops()[op]
+    df = make(spark)  # outside the group: a parquet read infers its schema
+    store = TxnStateStore(spark, str(tmp_path / op))
+    before = _cached_rdd_ids(spark)
+    run(store, df, 0)
+    version = store.snapshot().version
+    assert version >= 0
+    sc = spark.sparkContext
+    group = f"replay-{op}"
+    sc.setJobGroup(group, "a replayed batch")
+    try:
+        run(store, df, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert store.snapshot().version == version
+    assert not (_cached_rdd_ids(spark) - before)

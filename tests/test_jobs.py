@@ -8,13 +8,13 @@ import datetime as dt
 from obmp_psql_spark.ingest import apply_unicast_prefix
 from obmp_psql_spark.jobs import JobRunner
 from obmp_psql_spark.sources.jdbc import upsert_statement
-from obmp_psql_spark.state import ParquetStateStore
+from obmp_psql_spark.state import TxnStateStore
 
 from .test_bmp_ingest import empty, msgs, ts, upx
 
 
 def _seed_store(spark, root):
-    store = ParquetStateStore(spark, str(root))
+    store = TxnStateStore(spark, str(root))
     rib, log0 = apply_unicast_prefix(empty(spark, "ip_rib"), msgs(
         spark, "unicast_prefix",
         [upx("add", f"h{i}", f"p{i % 2}", f"a{i}", ts(0, i)) for i in range(20)]))
@@ -136,7 +136,7 @@ def test_global_rib_incremental_churn_keeps_layout(spark, tmp_path):
     measurement found no churn shape where the full rebuild is
     cheaper, BENCH_churn_auto.json); full_sync stays the explicit
     semantic resync."""
-    store = ParquetStateStore(spark, str(tmp_path / "auto"))
+    store = TxnStateStore(spark, str(tmp_path / "auto"))
     rib, _ = apply_unicast_prefix(empty(spark, "ip_rib"), msgs(
         spark, "unicast_prefix",
         [upx("add", f"h{i}", f"p{i % 2}", f"a{i}", ts(0, i),
@@ -176,7 +176,7 @@ def test_global_rib_incremental_churn_keeps_layout(spark, tmp_path):
     assert store.bucket_spec("global_ip_rib") == \
         (["prefix", "recv_origin_as"], 8)
     # ...and a fresh table gets the suggest_buckets law (floor here)
-    s2 = ParquetStateStore(spark, str(tmp_path / "auto2"))
+    s2 = TxnStateStore(spark, str(tmp_path / "auto2"))
     s2.overwrite("ip_rib", store.read("ip_rib"))
     s2.overwrite("info_route", empty(spark, "info_route"))
     s2.overwrite("rpki_validator", empty(spark, "rpki_validator"))
@@ -237,7 +237,7 @@ def test_retention_drops_whole_expired_chunks(spark, tmp_path):
     the Timescale drop_chunks semantics (1_base.sql:369)."""
     import pyspark.sql.functions as F
 
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     rib, log0 = apply_unicast_prefix(empty(spark, "ip_rib"), msgs(
         spark, "unicast_prefix",
         [upx("add", f"h{i}", "p0", f"a{i}", ts(0, i)) for i in range(4)]))
@@ -277,7 +277,7 @@ def test_retention_drops_whole_expired_chunks(spark, tmp_path):
 
 
 def test_compaction_preserves_bucketed_layout(spark, tmp_path):
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     rows = spark.createDataFrame(
         [(f"k{i}", f"p{i % 2}", i) for i in range(20)],
         "hash_id string, peer_hash_id string, v long")
@@ -307,7 +307,7 @@ def test_compaction_preserves_bucketed_layout(spark, tmp_path):
 def test_run_vacuum_reclaims_orphans_and_folds_log(spark, tmp_path):
     from obmp_psql_spark.state import Transaction
 
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     for i in range(12):
         store.overwrite("t", spark.createDataFrame([(i,)], "v long"))
     # crash orphan: staged but never committed
@@ -381,7 +381,7 @@ def test_retention_default_policies_cover_all_log_tables(spark, tmp_path):
     10_l3vpn.sql)."""
     import pyspark.sql.functions as F
 
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     now = ts(0) + dt.timedelta(days=365)
     for table, ts_col, _window in JobRunner.RETENTION_POLICIES:
         # one append per micro-batch wave, as the streaming sink writes
@@ -421,7 +421,7 @@ def test_chg_stats_shared_slice_matches_full_log(spark, tmp_path):
              65000 + i % 3, t)
             for i, t in enumerate(edges) for _ in range(1 + i % 2)]
     log = spark.createDataFrame(rows, TABLE_SCHEMAS["ip_rib_log"])
-    store = ParquetStateStore(spark, str(tmp_path))
+    store = TxnStateStore(spark, str(tmp_path))
     store.append("ip_rib_log", log)
     jr = JobRunner(store)
     tables = (

@@ -1120,20 +1120,24 @@ def test_incremental_frameset_pairs_matches_batch(spark, tmp_path):
     assert got_cap <= {p[:2] for p in want}
 
 
-def test_incremental_fingerprint_optimize_cadence(spark, tmp_path):
-    """optimize_every compacts the bands table after every K-th batch
-    as its own commit: pair results identical to the uncompacted run,
-    file count collapses, and a replayed batch stays a no-op after
+def test_incremental_fingerprint_optimize_cadence(spark, tmp_path,
+                                                  monkeypatch):
+    """A compaction between batches (``store.optimize``, its own
+    commit) leaves the pair results identical to the uncompacted run,
+    collapses the file count, and a replayed batch stays a no-op after
     compaction (the replay counter lives in the commit log, not the
     layout)."""
     import glob
 
+    from obmp_psql_spark import state
     from obmp_psql_spark.operators.dedup import (
         fingerprint_neardup_pairs,
         incremental_fingerprint_pairs,
     )
     from obmp_psql_spark.state import TxnStateStore
 
+    # both runs uncompacted by the law: only the explicit optimize differs
+    monkeypatch.setattr(state, "AUTO_OPTIMIZE_FILE_MULT", float("inf"))
     base = 0x155555555555555
     fps = [(i, base ^ (i % 3)) for i in range(64)]
     df = spark.createDataFrame(fps, "img_id long, dhash long")
@@ -1146,12 +1150,14 @@ def test_incremental_fingerprint_optimize_cadence(spark, tmp_path):
     for b in range(4):
         incremental_fingerprint_pairs(
             store, df.filter(f"img_id % 4 = {b}"), "img_id", "dhash",
-            batch_id=b, optimize_every=2, **kw)
+            batch_id=b, **kw)
+        if b % 2:
+            store.optimize("img_bands")
     plain = TxnStateStore(spark, str(tmp_path / "plain"))
     for b in range(4):
         incremental_fingerprint_pairs(
             plain, df.filter(f"img_id % 4 = {b}"), "img_id", "dhash",
-            batch_id=b, optimize_every=None, **kw)
+            batch_id=b, **kw)
     got = {(r.id_a, r.id_b, r.hamming)
            for r in store.read("img_pairs").collect()}
     want = {(r.id_a, r.id_b, r.hamming)
@@ -1164,60 +1170,64 @@ def test_incremental_fingerprint_optimize_cadence(spark, tmp_path):
     before = store.read("img_pairs").count()
     incremental_fingerprint_pairs(
         store, df.filter("img_id % 4 = 1"), "img_id", "dhash",
-        batch_id=1, optimize_every=2, **kw)
+        batch_id=1, **kw)
     assert store.read("img_pairs").count() == before
 
 
-def test_validate_cadence_rejects_bad_values(spark):
-    """Malformed cadences must fail BEFORE any batch work — never
-    post-commit inside _maybe_optimize. Floats and bools are caller
-    typos (2.5 must not silently become cadence 2), and 'auto' with a
-    non-integer spark.sql.shuffle.partitions (vendor/AQE 'auto'
-    strings) must be rejected at validation time."""
+def test_compaction_law_rejects_non_integer_partitions(spark):
+    """The compaction law needs an integer spark.sql.shuffle.partitions;
+    a non-integer conf (vendor/AQE 'auto' strings) must fail BEFORE any
+    batch work or commit — never post-commit. The live session
+    validates this conf on set, so fake the deployment whose runtime
+    hands back a non-integer string."""
     import types
 
     import pytest
 
-    from obmp_psql_spark.operators.dedup import _validate_cadence
+    from obmp_psql_spark.state import (AUTO_OPTIMIZE_FILE_MULT,
+                                       _compaction_limit, index_step)
 
-    for ok in (None, 0, 2, "auto"):
-        _validate_cadence(ok)
-    for bad in (2.5, True, "weekly", [2]):
-        with pytest.raises(ValueError):
-            _validate_cadence(bad)
-    # 'auto' + store: resolve the partitions conf up front. The live
-    # session validates this conf on set, so fake the vendor/AQE
-    # deployment whose runtime hands back a non-integer string.
-    _validate_cadence("auto", types.SimpleNamespace(spark=spark))
-    bad_conf = types.SimpleNamespace(
-        conf=types.SimpleNamespace(get=lambda k, d=None: "auto"))
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _compaction_limit(spark) == AUTO_OPTIMIZE_FILE_MULT * parts
+    built = []
+    bad_store = types.SimpleNamespace(
+        last_txn_version=lambda app: -1,
+        spark=types.SimpleNamespace(conf=types.SimpleNamespace(
+            get=lambda k, d=None: "auto")))
     with pytest.raises(ValueError, match="shuffle.partitions"):
-        _validate_cadence("auto", types.SimpleNamespace(spark=bad_conf))
+        index_step(bad_store, "app", 0, lambda keep: built.append(1),
+                   compact="bands")
+    assert not built
 
 
-def test_incremental_minhash_optimize_cadence(spark, tmp_path):
-    """The MinHash streaming index gets the same cadence knob: results
-    identical to the uncompacted run, fewer band files, replay no-op."""
+def test_incremental_minhash_optimize_cadence(spark, tmp_path, monkeypatch):
+    """The MinHash streaming index under a mid-stream compaction:
+    results identical to the uncompacted run, fewer band files, replay
+    no-op."""
     import glob
 
+    from obmp_psql_spark import state
     from obmp_psql_spark.operators.dedup import incremental_minhash_pairs
     from obmp_psql_spark.state import TxnStateStore
 
+    monkeypatch.setattr(state, "AUTO_OPTIMIZE_FILE_MULT", float("inf"))
     docs = [(i, f"alpha beta gamma delta {'clone' if i % 2 else 'orig'} "
                 f"epsilon zeta eta theta")
             for i in range(24)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
-    def run(root, **extra):
+    def run(root, compact):
         store = TxnStateStore(spark, str(root))
         for b in range(4):
             incremental_minhash_pairs(
                 store, df.filter(f"doc_id % 4 = {b}"), "doc_id", "text",
-                batch_id=b, num_hashes=8, bands=2, **extra)
+                batch_id=b, num_hashes=8, bands=2)
+            if compact and b % 2:
+                store.optimize("doc_bands")
         return store
 
-    opt = run(tmp_path / "opt", optimize_every=2)
-    plain = run(tmp_path / "plain", optimize_every=None)
+    opt = run(tmp_path / "opt", True)
+    plain = run(tmp_path / "plain", False)
     got = {(r.id_a, r.id_b) for r in opt.read("doc_pairs").collect()}
     want = {(r.id_a, r.id_b) for r in plain.read("doc_pairs").collect()}
     assert got == want and got  # non-empty: clones pair up
@@ -1229,23 +1239,24 @@ def test_incremental_minhash_optimize_cadence(spark, tmp_path):
     before = opt.read("doc_pairs").count()
     incremental_minhash_pairs(
         opt, df.filter("doc_id % 4 = 1"), "doc_id", "text",
-        batch_id=1, num_hashes=8, bands=2, optimize_every=2)
+        batch_id=1, num_hashes=8, bands=2)
     assert opt.read("doc_pairs").count() == before
 
 
-def test_auto_optimize_cadence_default_on(spark, tmp_path):
-    """optimize_every defaults to 'auto': the bands table self-compacts
+def test_auto_optimize_cadence_default_on(spark, tmp_path, monkeypatch):
+    """The compaction law is always on: the bands table self-compacts
     once its live file count exceeds AUTO_OPTIMIZE_FILE_MULT x shuffle
-    partitions, with pair results identical to the never-compacted run
-    and replay still a no-op (round-10 verdict #4)."""
+    partitions, with pair results identical to a never-compacted run
+    (the law's constant patched off) and replay still a no-op
+    (round-10 verdict #4)."""
     import glob
 
+    from obmp_psql_spark import state
     from obmp_psql_spark.operators.dedup import (
-        AUTO_OPTIMIZE_FILE_MULT,
         fingerprint_neardup_pairs,
         incremental_fingerprint_pairs,
     )
-    from obmp_psql_spark.state import TxnStateStore
+    from obmp_psql_spark.state import AUTO_OPTIMIZE_FILE_MULT, TxnStateStore
 
     base = 0x155555555555555
     fps = [(i, base ^ (i % 3)) for i in range(64)]
@@ -1263,13 +1274,14 @@ def test_auto_optimize_cadence_default_on(spark, tmp_path):
         never = TxnStateStore(spark, str(tmp_path / "never"))
         for b in range(8):
             batch = df.filter(f"img_id % 8 = {b}")
-            incremental_fingerprint_pairs(  # default optimize_every
-                auto, batch, "img_id", "dhash", batch_id=b, **kw)
             incremental_fingerprint_pairs(
-                never, batch, "img_id", "dhash", batch_id=b,
-                optimize_every=None, **kw)
+                auto, batch, "img_id", "dhash", batch_id=b, **kw)
+            with monkeypatch.context() as m:
+                m.setattr(state, "AUTO_OPTIMIZE_FILE_MULT", float("inf"))
+                incremental_fingerprint_pairs(
+                    never, batch, "img_id", "dhash", batch_id=b, **kw)
         threshold = AUTO_OPTIMIZE_FILE_MULT * 1
-        assert files(tmp_path / "never") > threshold  # cadence engaged
+        assert files(tmp_path / "never") > threshold  # the law engaged
         # live band files stay bounded near the threshold under auto
         assert auto.live_file_count("img_bands") <= threshold + 7
         got = {(r.id_a, r.id_b, r.hamming)

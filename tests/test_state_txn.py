@@ -570,17 +570,17 @@ def test_suggest_buckets_sizing_law():
 def test_concurrent_append_partition_col_conflict(spark, tmp_path):
     """Round-12 ADVICE: the chunk-column guard must hold when two
     appends to the SAME table run concurrently
-    (streaming.pipeline._stage_concurrently) — the column is reserved
+    (state.stage_concurrently) — the column is reserved
     under the lock at CHECK time, not when the action record lands
     after the Spark write, so the second checker fails
     deterministically instead of both sliding through the
     check-then-act window while neither has recorded its action."""
-    from obmp_psql_spark.streaming.pipeline import _stage_concurrently
+    from obmp_psql_spark.state import stage_concurrently
 
     store = TxnStateStore(spark, str(tmp_path / "cc"))
     with pytest.raises(ValueError, match="chunk column"):
         with store.transaction() as txn:
-            _stage_concurrently(
+            stage_concurrently(
                 lambda: txn.append("t", df(spark, [("a", 1)]),
                                    partition_by="k"),
                 lambda: txn.append("t", df(spark, [("b", 2)]),
@@ -843,15 +843,15 @@ def test_snapshot_diff_null_keys(spark):
 
 def test_concurrent_staging_commits_atomically(spark, tmp_path):
     """The log append and state replace of one micro-batch stage from
-    parallel threads (streaming.pipeline._stage_concurrently): both
+    parallel threads (state.stage_concurrently): both
     actions land in ONE commit, results identical to sequential
     staging, and a failing thunk aborts the whole txn with nothing
     visible and no orphaned staged dirs in the snapshot."""
-    from obmp_psql_spark.streaming.pipeline import _stage_concurrently
+    from obmp_psql_spark.state import stage_concurrently
 
     store = TxnStateStore(spark, str(tmp_path))
     with store.transaction("conc", 0) as txn:
-        _stage_concurrently(
+        stage_concurrently(
             lambda: txn.replace("t1", df(spark, [("a", 1), ("b", 2)])),
             lambda: txn.append("t2", df(spark, [("c", 3)])),
         )
@@ -870,7 +870,7 @@ def test_concurrent_staging_commits_atomically(spark, tmp_path):
 
     with pytest.raises(RuntimeError, match="staging failed"):
         with store.transaction("conc", 1) as txn:
-            _stage_concurrently(
+            stage_concurrently(
                 lambda: txn.replace("t1", df(spark, [("x", 9)])),
                 boom,
             )
@@ -879,7 +879,7 @@ def test_concurrent_staging_commits_atomically(spark, tmp_path):
 
     # many small concurrent appends: metadata list stays consistent
     with store.transaction("conc", 2) as txn:
-        _stage_concurrently(*[
+        stage_concurrently(*[
             (lambda i=i: txn.append("t3", df(spark, [(f"k{i}", i)])))
             for i in range(6)])
     assert as_dict(store, "t3") == {f"k{i}": i for i in range(6)}

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from obmp_psql_spark.ingest_ls import apply_l3vpn, apply_ls_link, apply_ls_node
 from obmp_psql_spark.schemas import MESSAGE_SCHEMAS
-from obmp_psql_spark.state import ParquetStateStore
+from obmp_psql_spark.state import TxnStateStore
 from obmp_psql_spark.streaming.pipeline import BmpStreamingIngest
 
 from .test_bmp_ingest import empty, msgs, ts, upx
@@ -28,7 +28,7 @@ def test_file_stream_ingest_and_restart(spark, tmp_path):
     ])
     batch1.coalesce(1).write.mode("append").parquet(src_dir)
 
-    store = ParquetStateStore(spark, store_dir)
+    store = TxnStateStore(spark, store_dir)
     ing = BmpStreamingIngest(spark, store)
     q = ing.start_file_stream("unicast_prefix", src_dir, ckpt)
     q.awaitTermination()
@@ -238,7 +238,7 @@ def test_kafka_shaped_stream_e2e(spark, tmp_path):
         # within-key duplicate: dedup-latest keeps the newest
         upx("add", "r2", "p1", "attrC", ts(2)),
     ]).coalesce(1).write.mode("append").parquet(src_dir)
-    store = ParquetStateStore(spark, store_dir)
+    store = TxnStateStore(spark, store_dir)
     ing = BmpStreamingIngest(spark, store)
     run_wave()
 

@@ -366,12 +366,12 @@ def _churn_store(spark, n: int, root: str):
     """An ip_rib of ``n`` rows plus small IRR and ROA tables, so both
     enrichment joins stay on the path."""
     from obmp_psql_spark.schemas import INFO_ROUTE, RPKI_VALIDATOR
-    from obmp_psql_spark.state import ParquetStateStore
+    from obmp_psql_spark.state import TxnStateStore
 
     def typed(df, schema):
         return df.select(*[F.col(f.name).cast(f.dataType)
                            for f in schema.fields])
-    store = ParquetStateStore(spark, root)
+    store = TxnStateStore(spark, root)
     store.overwrite("ip_rib", synth_rib(
         spark, n, CHURN_T0 - dt.timedelta(hours=1), pfx_mod=n // 4))
     pid = F.col("id")
@@ -690,9 +690,11 @@ def _latency(spark, arg):
         "per-batch wall of the incremental fingerprint index grows with "
         "the bands table's file count; compaction keeps it flat")
 def _stream_index(spark, arg):
+    from unittest import mock
+
+    from obmp_psql_spark import state
     from obmp_psql_spark.operators.dedup import incremental_fingerprint_pairs
     from obmp_psql_spark.queries_text import _image_fingerprints
-    from obmp_psql_spark.state import TxnStateStore
 
     sf_dir, nbatch = arg
     fp = _image_fingerprints(spark, sf_dir).select("img_id", "dhash") \
@@ -703,47 +705,40 @@ def _stream_index(spark, arg):
     for part in batches:
         part.count()
 
-    def feed(store, **cadence) -> list:
-        walls = []
-        for b, part in enumerate(batches):
-            walls.append(round(timed(
-                incremental_fingerprint_pairs, store, part, "img_id",
-                "dhash", batch_id=b, **cadence, **kw)[1], 2))
-        return walls
-
-    # pass 1: compaction off, the uncompacted append pile-up
+    # pass 1: the compaction law patched off, the uncompacted append
+    # pile-up
     root = scratch("streamidx_")
-    store = TxnStateStore(spark, root)
+    store = state.TxnStateStore(spark, root)
     row: dict = {"n_fp": fp.count(), "nbatch": nbatch, "batches": []}
-    for b, part in enumerate(batches):
-        wall = timed(incremental_fingerprint_pairs, store, part, "img_id",
-                     "dhash", batch_id=b, optimize_every=None, **kw)[1]
+    with mock.patch.object(state, "AUTO_OPTIMIZE_FILE_MULT", math.inf):
+        for b, part in enumerate(batches):
+            wall = timed(incremental_fingerprint_pairs, store, part,
+                         "img_id", "dhash", batch_id=b, **kw)[1]
+            nfiles, nbytes = parquet_files(root, "img_bands")
+            row["batches"].append({"batch": b, "wall_s": round(wall, 2),
+                                   "bands_files": nfiles,
+                                   "bands_bytes": nbytes})
+        pairs_all = store.read("img_pairs").count()
+        # then OPTIMIZE and re-deliver the last slice under a new batch id
+        opt_s = timed(store.optimize, "img_bands")[1]
         nfiles, nbytes = parquet_files(root, "img_bands")
-        row["batches"].append({"batch": b, "wall_s": round(wall, 2),
-                               "bands_files": nfiles,
-                               "bands_bytes": nbytes})
-    pairs_all = store.read("img_pairs").count()
-    # then OPTIMIZE and re-deliver the last slice under a new batch id
-    opt_s = timed(store.optimize, "img_bands")[1]
-    nfiles, nbytes = parquet_files(root, "img_bands")
-    post_s = timed(incremental_fingerprint_pairs, store, batches[-1],
-                   "img_id", "dhash", batch_id=nbatch, optimize_every=None,
-                   **kw)[1]
+        post_s = timed(incremental_fingerprint_pairs, store, batches[-1],
+                       "img_id", "dhash", batch_id=nbatch, **kw)[1]
     row["optimize"] = {"optimize_wall_s": round(opt_s, 2),
                        "bands_files_after": nfiles,
                        "bands_bytes_after": nbytes,
                        "postopt_batch_wall_s": round(post_s, 2)}
     row["total_pairs"] = store.read("img_pairs").count()
-    # passes 2 and 3: an explicit cadence, then the default ("auto")
-    for key, cadence in (("cadenced", {"optimize_every": 3}),
-                         ("auto_default", {})):
-        root = scratch("streamidx_")
-        store = TxnStateStore(spark, root)
-        walls = feed(store, **cadence)
-        row[key] = {**cadence, "walls_s": walls,
-                    "bands_files_final": parquet_files(root, "img_bands")[0],
-                    "pairs_equal":
-                        store.read("img_pairs").count() == pairs_all}
+    # pass 2: the compaction law
+    root = scratch("streamidx_")
+    store = state.TxnStateStore(spark, root)
+    walls = [round(timed(incremental_fingerprint_pairs, store, part,
+                         "img_id", "dhash", batch_id=b, **kw)[1], 2)
+             for b, part in enumerate(batches)]
+    row["auto_default"] = {
+        "walls_s": walls,
+        "bands_files_final": parquet_files(root, "img_bands")[0],
+        "pairs_equal": store.read("img_pairs").count() == pairs_all}
     for part in batches:
         part.unpersist()
     fp.unpersist()
