@@ -16,12 +16,13 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from .operators import global_rib as G
 from .session import empty_df
 from .operators import rollup as R
-from .state import TxnStateStore, stage_concurrently
+from .state import TxnStateStore, bucket_of, stage_concurrently, with_bucket
 
 
 class JobRunner:
@@ -168,7 +169,6 @@ class JobRunner:
                 txn.set_meta("watermark_global_ip_rib", now.isoformat())
             return
 
-        from .state import bucket_of
         if self.store.table_layout("global_ip_rib")["replace"] is not None:
             # one-time migration: fold the monolithic snapshot into
             # the bucketed layout with a full (but final) rewrite
@@ -186,19 +186,23 @@ class JobRunner:
         start = G.select_start_time(
             now, self.get_watermark("global_ip_rib"), max_interval)
         # the incremental slice is small (churn since watermark):
-        # materialize it once — it feeds bucket pruning, the merge,
-        # and the enrichment passes
-        fresh = G.consolidate(self.store.read("ip_rib"), start) \
-            .localCheckpoint()
-        # bucket pruning: the state buckets the slice's keys touch
-        per_bucket = fresh.groupBy(
-            bucket_of(self.GLOBAL_KEY, n).alias("b")) \
-            .agg(F.count(F.lit(1)).alias("rows")).collect()
-        touched = [r["b"] for r in per_bucket]
-        cur = self.store.read_buckets("global_ip_rib", touched)
-        out = G.merge_global(cur, fresh)
-        out = G.enrich_irr(out, self.store.read("info_route"), start)
-        out = G.enrich_rpki(out, self.store.read("rpki_validator"), start)
+        # materialize it once — it feeds the merge and the enrichment
+        # passes — and observe, in that same job, the state buckets its
+        # keys touch (at most n of them) for bucket pruning
+        obs = Observation()
+        fresh = G.consolidate(self.store.read("ip_rib"), start).observe(
+            obs, F.collect_set(bucket_of(self.GLOBAL_KEY, n)).alias("b")
+        ).localCheckpoint()
+        touched = sorted(obs.get["b"])
+        out = G.enrich_irr(
+            G.merge_global(
+                self.store.read_buckets("global_ip_rib", touched), fresh),
+            self.store.read("info_route"), start)
+        # one shuffle by bucket: the RPKI aggregate clusters on it and
+        # merge_buckets writes it without another
+        out = G.enrich_rpki(
+            with_bucket(out, self.GLOBAL_KEY, n, max(len(touched), 1)),
+            self.store.read("rpki_validator"), start)
         with self.store.transaction() as txn:
             txn.merge_buckets("global_ip_rib", out, self.GLOBAL_KEY,
                               n, touched)

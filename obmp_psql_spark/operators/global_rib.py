@@ -4,12 +4,17 @@ update_global_ip_rib 2_aggregations.sql:181-275, sync variant
 
 Scale: the consolidation is a groupBy(prefix, origin_as, peer) then
 groupBy(prefix, origin_as) over the incremental slice of ip_rib
-(timestamp-pruned), with exact distinct-peer counts and no Expand
+(timestamp-pruned), both over ONE exchange on (prefix, origin_as),
+with exact distinct-peer counts and no Expand
 (``q_approx_distinct_gate`` measures HyperLogLog++ counts for extreme
 peer cardinality against the exact ones, SURVEY §7).
-IRR is an equi-join (broadcast — info_route is small); RPKI is the
-bucketed containment join from operators.lpm with the ROA table
-broadcast.
+IRR is an equi-join (AQE picks broadcast or shuffle — info_route can
+be large) against one deterministically picked IRR row per prefix.
+RPKI is one left containment join of every row against the broadcast
+ROA band table (operators.lpm) plus one aggregate back to a row each:
+no join back, so the merged subtree runs once, and on a frame already
+hash-partitioned on the bucket column (the bucketed cron path) the
+aggregate adds no exchange.
 """
 
 from __future__ import annotations
@@ -34,7 +39,10 @@ def consolidate(ip_rib: DataFrame,
     peer), keeping the min/max of ``is_withdrawn``, then per (prefix,
     origin), where a peer advertises iff its min is 0 and withdraws
     iff its max is 1. Null peers and null ``is_withdrawn`` drop out of
-    the counts exactly as they do under ``countDistinct``."""
+    the counts exactly as they do under ``countDistinct``. The rows
+    are hash-partitioned on (prefix, origin_as) first, which clusters
+    both aggregations, so they share that one exchange instead of one
+    each."""
     rib = ip_rib.filter(F.col("origin_as") != 23456)  # P2
     if start_time is not None:
         rib = rib.filter((F.col("timestamp") >= F.lit(start_time))
@@ -42,11 +50,12 @@ def consolidate(ip_rib: DataFrame,
     withdrawn = F.col("is_withdrawn").cast("int")
     maxed = ["prefix_len", "timestamp", "prefix_start", "prefix_end",
              "prefix_base_hi", "prefix_base_lo"]
-    rows = rib.groupBy("prefix", "origin_as", "peer_hash_id").agg(
-        *(F.max(c).alias(c) for c in maxed),
-        F.min("first_added_timestamp").alias("first_added_timestamp"),
-        F.min(withdrawn).alias("__w_min"),
-        F.max(withdrawn).alias("__w_max"))
+    rows = rib.repartition("prefix", "origin_as") \
+        .groupBy("prefix", "origin_as", "peer_hash_id").agg(
+            *(F.max(c).alias(c) for c in maxed),
+            F.min("first_added_timestamp").alias("first_added_timestamp"),
+            F.min(withdrawn).alias("__w_min"),
+            F.max(withdrawn).alias("__w_max"))
     peer = F.col("peer_hash_id")
     return (
         rows.groupBy("prefix", F.col("origin_as").alias("recv_origin_as"))
@@ -93,45 +102,57 @@ def enrich_irr(global_rib: DataFrame, info_route: DataFrame,
     """J8 (2_aggregations.sql:242-247): exact-prefix equi-join against
     the IRR table; only rows touched since start_time update.
 
+    A prefix with several IRR rows takes the one with the lowest
+    ``origin_as``, then ``source``, then ``descr`` (nulls first, as
+    Spark orders structs); the reference's UPDATE ... FROM takes an
+    arbitrary one.
+
     No forced broadcast: real IRR dumps run ~3M routes with descr
     text (hundreds of MB serialized) — let AQE pick broadcast vs
     shuffle from the actual size; the key is an exact equi-join, so
     a shuffle hash join with skew handling is the safe fallback."""
-    irr = (
-        info_route.select(
-            F.col("prefix").alias("__p"),
-            F.col("origin_as").alias("__irr_as"),
-            F.col("source").alias("__irr_src"),
-            F.col("descr").alias("__irr_descr"),
-        ).dropDuplicates(["__p"])
-    )
-    eligible = (F.col("timestamp") >= F.lit(start_time)) if start_time is not None else F.lit(True)
-    out = (
+    irr = info_route.groupBy(F.col("prefix").alias("__p")).agg(
+        F.min(F.struct("origin_as", "source", "descr")).alias("__irr"))
+    hit = F.col("__p").isNotNull()
+    if start_time is not None:
+        hit = hit & (F.col("timestamp") >= F.lit(start_time))
+    return (
         global_rib.join(irr, global_rib["prefix"] == F.col("__p"), "left")
         .withColumn("irr_origin_as",
-                    F.when(eligible & F.col("__p").isNotNull(), F.col("__irr_as"))
+                    F.when(hit, F.col("__irr.origin_as"))
                      .otherwise(F.col("irr_origin_as")))
         .withColumn("irr_source",
-                    F.when(eligible & F.col("__p").isNotNull(), F.col("__irr_src"))
+                    F.when(hit, F.col("__irr.source"))
                      .otherwise(F.col("irr_source")))
         .withColumn("irr_descr",
-                    F.when(eligible & F.col("__p").isNotNull(), F.col("__irr_descr"))
+                    F.when(hit, F.col("__irr.descr"))
                      .otherwise(F.col("irr_descr")))
-        .drop("__p", "__irr_as", "__irr_src", "__irr_descr")
+        .drop("__p", "__irr")
     )
-    return out
 
 
 def enrich_rpki(global_rib: DataFrame, rpki: DataFrame,
                 start_time: dt.datetime | None) -> DataFrame:
     """J7 (2_aggregations.sql:260-265): ROA covers prefix AND
-    prefix_len BETWEEN roa.prefix_len AND roa.prefix_len_max.
+    prefix_len BETWEEN roa.prefix_len AND roa.prefix_len_max; only
+    rows touched since start_time update.
     Multiple covering ROAs: the reference's UPDATE takes an arbitrary
     one; here the max origin_as for determinism. Family-blind: v6
     prefixes validate against v6 ROAs (rpki_validator.py:26-73)
-    through the unified two-long containment join."""
-    eligible = global_rib if start_time is None else \
-        global_rib.filter(F.col("timestamp") >= F.lit(start_time))
+    through the unified two-long containment join.
+
+    Every row left-joins the broadcast ROA band table (the only
+    forced broadcast: the ROA dim is bounded, ~500k rows real-world),
+    with eligibility in the join condition, and one aggregate over all
+    of ``global_rib``'s columns folds each row's matches back into the
+    row. The columns include the merge key (prefix, recv_origin_as),
+    so no two rows meet in a group. A broadcast join keeps the probe
+    side's partitioning, so when ``global_rib`` is hash-partitioned on
+    one of its columns (``_bucket`` on the bucketed cron path) the
+    aggregate is clustered already and adds no exchange; otherwise it
+    shuffles ``global_rib`` once. Nothing global-sized is ever
+    broadcast."""
+    cols = global_rib.columns
     roas = rpki.select(
         F.when(F.col("prefix").contains(":"), F.lit(6)).otherwise(F.lit(4))
          .alias("family"),
@@ -140,31 +161,21 @@ def enrich_rpki(global_rib: DataFrame, rpki: DataFrame,
         F.col("prefix_len_max").alias("roa_len_max"),
         F.col("origin_as").alias("__rpki_as"),
     )
-    probes = eligible.select(
-        "prefix", "recv_origin_as", "prefix_len",
-        F.when(F.col("prefix").contains(":"), F.lit(6)).otherwise(F.lit(4))
-         .alias("__fam"),
-        F.col("prefix_base_hi").alias("__hi"),
-        F.col("prefix_base_lo").alias("__lo"),
-    )
+    probes = global_rib.withColumn(
+        "__fam",
+        F.when(F.col("prefix").contains(":"), F.lit(6)).otherwise(F.lit(4)))
+    pred = (F.col("prefix_len") >= F.col("roa_len")) \
+        & (F.col("prefix_len") <= F.col("roa_len_max"))
+    if start_time is not None:
+        pred = pred & (F.col("timestamp") >= F.lit(start_time))
     matched = containment_join128(
-        probes, "__fam", "__hi", "__lo", roas,
-        broadcast=True,  # the ROA dim is bounded (~500k rows real-world)
-        extra_pred=(F.col("prefix_len") >= F.col("roa_len"))
-                   & (F.col("prefix_len") <= F.col("roa_len_max")),
-    ).groupBy("prefix", "recv_origin_as") \
-     .agg(F.max("__rpki_as").alias("__rpki_new"))
-    # NO forced broadcast of `matched`: it is bounded by the ELIGIBLE
-    # RIB SLICE, not by the ROA dim — after a full sync (start_time
-    # None / far past) that is the whole global rib, and a forced
-    # broadcast of a table-sized aggregate is the scale killer the
-    # IRR join already avoids (same AQE size-gate reasoning as
-    # enrich_irr; test_scale_plans.py pins both).
+        probes, "__fam", "prefix_base_hi", "prefix_base_lo", roas,
+        broadcast=True, extra_pred=pred, how="left")
     return (
-        global_rib.join(matched, ["prefix", "recv_origin_as"], "left")
-        .withColumn("rpki_origin_as",
-                    F.coalesce(F.col("__rpki_new"), F.col("rpki_origin_as")))
-        .drop("__rpki_new")
+        matched.groupBy(*cols)
+        .agg(F.max("__rpki_as").alias("__rpki_new"))
+        .select(*(F.coalesce("__rpki_new", c).alias(c)
+                  if c == "rpki_origin_as" else c for c in cols))
     )
 
 

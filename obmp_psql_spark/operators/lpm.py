@@ -103,6 +103,7 @@ def containment_join128(
     bucket_bits: int = 16,
     broadcast: bool = False,
     extra_pred: Column | None = None,
+    how: str = "inner",
 ) -> DataFrame:
     """containment_join for mixed v4/v6 tables: addresses are
     (family, hi, lo) with v4 as (4, 0, addr32); bounds compare
@@ -111,7 +112,10 @@ def containment_join128(
     family so v4 rows don't all collapse into hi=0's bucket. Coarse
     supernets (::/0 and friends) explode across their buckets in the
     same single pass — see containment_join's strategy note for the
-    measurement behind one-scan-with-bounded-explode."""
+    measurement behind one-scan-with-bounded-explode. ``how="left"``
+    keeps every probe row, with null prefix columns where nothing
+    contains it; with ``broadcast`` the probe side keeps its
+    partitioning."""
     p = probes.withColumn(
         "__bucket",
         _bucket128(F.col(probe_family), F.col(probe_hi), F.col(probe_lo), bucket_bits))
@@ -127,7 +131,7 @@ def containment_join128(
     )
     if extra_pred is not None:
         range_pred = range_pred & extra_pred
-    return p.join(x, (p["__bucket"] == x["__bucket"]) & range_pred) \
+    return p.join(x, (p["__bucket"] == x["__bucket"]) & range_pred, how) \
             .drop("__bucket")
 
 

@@ -152,14 +152,26 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
 
 
 def empty_df(spark: SparkSession, schema):
-    """Zero-partition empty DataFrame (state seeds, store-read
-    fallbacks). ``spark.createDataFrame([], schema)`` parallelizes
-    the empty list through Python into ``defaultParallelism`` EMPTY
-    Python partitions, and every downstream action then pays one
-    Python-worker round-trip per partition (measured 0.5 s per
-    action at local[32], +1.6 s on a 100k-row join against the
-    seed); an empty JVM-side RDD plans zero tasks (0.07 s)."""
-    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    """Empty DataFrame of ``schema`` (a ``StructType`` or DDL) for
+    state seeds and store-read fallbacks, built JVM-side as an empty
+    ``LocalRelation``. Catalyst sees that it is empty, so
+    ``PropagateEmptyRelation`` folds away what is planned against it:
+    the anti-join of a merge into a never-written table, an inner join
+    or union branch over an empty bucket set, with the exchanges and
+    jobs above them. An empty RDD scan is opaque to Catalyst, and
+    ``spark.createDataFrame([], schema)`` also parallelizes the empty
+    list through Python into
+    ``defaultParallelism`` empty Python partitions, one worker round
+    trip each per action."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    js = spark._jsparkSession
+    return DataFrame(js.createDataFrame(spark._jvm.java.util.ArrayList(),
+                                        js.parseDataType(schema.json())),
+                     spark)
 
 
 def tiny_df(spark: SparkSession, rows, schema):

@@ -98,6 +98,17 @@ def bucket_of(key_cols: list[str], n_buckets: int):
     return F.pmod(F.hash(*key_cols), F.lit(n_buckets))
 
 
+def with_bucket(df: DataFrame, key_cols: list[str], n_buckets: int,
+                parts: int) -> DataFrame:
+    """``df`` with its ``_bucket`` column, hash-partitioned on it into
+    ``parts`` partitions: the shape a bucketed write stages, one file
+    per bucket instead of (tasks x buckets) small files. A caller that
+    builds this shape early (to cluster an aggregate on it) hands it
+    to ``merge_buckets`` as is, and the write adds no second shuffle."""
+    return df.withColumn("_bucket", bucket_of(key_cols, n_buckets)) \
+        .repartition(parts, "_bucket")
+
+
 # Constant-SIZE buckets, count grows with state — the law every churn
 # probe runs under (BENCH_churn*: 50k-row buckets at probe scale) and
 # the shape real deployments size to (~1 GB of parquet per bucket so a
@@ -467,11 +478,8 @@ class Transaction:
         the bucket prunes to one dir, the bloom prunes row groups
         inside it)."""
         d = self.store._stage_dir(table, "b")
-        # cluster rows by bucket before the partitioned write: one
-        # file per bucket instead of (tasks x buckets) small files
-        # (at real scale, size n_buckets so a bucket is ~1 GB)
-        w = df.withColumn("_bucket", bucket_of(key_cols, n_buckets)) \
-            .repartition(n_buckets, "_bucket") \
+        # at real scale, size n_buckets so a bucket is ~1 GB
+        w = with_bucket(df, key_cols, n_buckets, n_buckets) \
             .write.partitionBy("_bucket").mode("overwrite")
         for k, v in (write_options or {}).items():
             w = w.option(k, v)
@@ -492,7 +500,9 @@ class Transaction:
         other buckets keep their current files. ``df`` must contain
         exclusively rows whose keys hash into ``touched`` (guaranteed
         when it was merged from ``read_buckets(table, touched)`` plus
-        a batch whose keys selected ``touched``)."""
+        a batch whose keys selected ``touched``). A ``df`` that already
+        carries ``_bucket`` (``with_bucket``) is written as it is
+        partitioned."""
         tab = self.store.snapshot().tables.get(table, {})
         cur_n = tab.get("n_buckets")
         if cur_n is not None and cur_n != n_buckets:
@@ -504,9 +514,12 @@ class Transaction:
                 "replace_bucketed before partial merges (a bucket "
                 "overlay on top of it would double-count rows)")
         d = self.store._stage_dir(table, "m")
-        df.withColumn("_bucket", bucket_of(key_cols, n_buckets)) \
-            .repartition(max(len(touched), 1), "_bucket") \
-            .write.partitionBy("_bucket").mode("overwrite").parquet(d)
+        if "_bucket" in df.columns:
+            staged, df = df, df.drop("_bucket")
+        else:
+            staged = with_bucket(df, key_cols, n_buckets,
+                                 max(len(touched), 1))
+        staged.write.partitionBy("_bucket").mode("overwrite").parquet(d)
         with self._lock:
             self._staged_dirs.append(d)
             self.actions.append({
@@ -621,12 +634,14 @@ class TxnStateStore:
         """Read ``paths`` (under the committed ``dirs``) with the
         schema their commit actions recorded — no footer-inference
         job. Several dirs with different recorded schemas (a column
-        added between bucket generations) read as the union of their
-        fields, as parquet schema merging would. A dir committed
-        without a recorded schema (an older log) is inferred."""
+        added between bucket generations or appends) read as the union
+        of their fields, as parquet schema merging would; a file
+        without a field reads it as null. A dir committed without a
+        recorded schema (an older log) is inferred, merging footers."""
         recorded = [tab["schemas"].get(d) for d in dict.fromkeys(dirs)]
         if not all(recorded):
-            return self.spark.read.parquet(*paths)
+            return self.spark.read.option("mergeSchema", "true") \
+                .parquet(*paths)
         fields: dict[str, T.StructField] = {}
         for js in dict.fromkeys(recorded):
             for f in T.StructType.fromJson(json.loads(js)).fields:
@@ -636,34 +651,27 @@ class TxnStateStore:
 
     def _read_tab(self, tab: dict | None,
                   table: str, schema: T.StructType | None) -> DataFrame:
-        """Assemble a snapshot DataFrame from a table's commit entry.
-
-        All live bucket subdirs share one schema and are flat parquet
-        leaves, so they go through ONE multi-root ``read.parquet``
-        call — a per-bucket read + 32-deep ``unionByName`` chain costs
-        a footer-inference round trip per bucket and quadratic plan
-        analysis (measured ~7s to assemble a 32-bucket table at
-        sf0.1, ~0.2s as a single read). Replace dirs (flat) and each
-        hive-partitioned append stay separate roots so Spark's
-        multi-root partition discovery never sees mixed layouts; the
-        partition column resurfaces as a normal column either way."""
-        groups: list[DataFrame] = []
-        if tab:
-            if tab["replace"]:
-                groups.append(self._parquet(
-                    tab, [tab["replace"]], [self._abs(tab["replace"])]))
-            if tab["buckets"]:
-                groups.append(self._read_bucket_dirs(
-                    tab, sorted(tab["buckets"])))
-            groups.extend(self._parquet(tab, [p], [self._abs(p)])
-                          for p in tab["appends"])
-        if groups:
-            out = groups[0]
-            for d in groups[1:]:
-                out = out.unionByName(d, allowMissingColumns=True)
-            return out
-        schema = schema or TABLE_SCHEMAS[table]
-        return empty_df(self.spark, schema)
+        """Assemble a snapshot DataFrame from a table's commit entry:
+        ONE multi-root parquet relation over the replace dir, the live
+        bucket leaves (``<dir>/_bucket=k``) and every append dir, read
+        with the union of their recorded schemas (``_parquet``). Every
+        root is a flat leaf (appends record their chunk column as
+        metadata, not as hive dirs), so multi-root partition discovery
+        finds no partition columns to disagree on. One relation keeps
+        planning flat in the root count (``ip_rib_log`` gains an append
+        dir per micro-batch until compaction); a ``unionByName`` branch
+        per root grew plan analysis with it (a 32-bucket table took ~7 s
+        to assemble at sf0.1, ~0.2 s as one read). A never-written
+        table reads as ``empty_df`` of
+        ``schema`` (default: its ``TABLE_SCHEMAS`` entry), which
+        Catalyst can prune."""
+        paths = self._paths(tab)
+        if paths:
+            dirs = ([tab["replace"]] if tab["replace"] else []) \
+                + [d for _, d in sorted(tab["buckets"].items())] \
+                + tab["appends"]
+            return self._parquet(tab, dirs, paths)
+        return empty_df(self.spark, schema or TABLE_SCHEMAS[table])
 
     def read_buckets(self, table: str, buckets: list[int],
                      schema: T.StructType | None = None) -> DataFrame:
@@ -673,15 +681,11 @@ class TxnStateStore:
         tab = self.snapshot().tables.get(table)
         live = [k for k in buckets if k in tab["buckets"]] if tab else []
         if live:
-            return self._read_bucket_dirs(tab, live)
-        schema = schema or TABLE_SCHEMAS[table]
-        return empty_df(self.spark, schema)
-
-    def _read_bucket_dirs(self, tab: dict, buckets: list[int]) -> DataFrame:
-        dirs = [tab["buckets"][k] for k in buckets]
-        return self._parquet(tab, dirs, [
-            os.path.join(self._abs(d), f"_bucket={k}")
-            for k, d in zip(buckets, dirs)])
+            dirs = [tab["buckets"][k] for k in live]
+            return self._parquet(tab, dirs, [
+                os.path.join(self._abs(d), f"_bucket={k}")
+                for k, d in zip(live, dirs)])
+        return empty_df(self.spark, schema or TABLE_SCHEMAS[table])
 
     def bucket_map(self, table: str) -> dict[int, str]:
         """bucket id -> committed dir (relative); for tests/ops."""

@@ -51,10 +51,15 @@ class BmpStreamingIngest:
                  rib_buckets: int | None = None,
                  family_buckets: int | None = None):
         """``rib_buckets``: hash-bucket the ip_rib state on its merge
-        key so each micro-batch rewrites ONLY the buckets its keys
-        touch (lakehouse matched-file rewrite, O(batch) not O(table)
-        — at 100 TB this is the difference between a merge that works
-        and one that rewrites the world). None = monolithic replace.
+        key so each micro-batch reads and rewrites only the buckets its
+        keys touch (the lakehouse matched-file rewrite). What that saves
+        depends on how many buckets a batch touches: keys hash
+        uniformly, so a batch of k keys touches about
+        n * (1 - (1 - 1/n)**k) of n buckets, and any batch with many
+        more keys than buckets still rewrites the whole table. Every
+        traced perfbench ``rib`` batch touches all of its buckets
+        (``state.bucket_touch_ratio`` 1.0); the merge is O(batch) only
+        when buckets outnumber batch keys. None = monolithic replace.
         ``family_buckets``: same for the LS/L3VPN state tables
         (l3vpn_rib is the other table that reaches RIB scale)."""
         self.spark = spark
@@ -70,6 +75,7 @@ class BmpStreamingIngest:
     def unicast_prefix_batch(self, batch: DataFrame, batch_id: int) -> None:
         if self._applied("unicast_prefix", batch_id):
             return
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         from ..state import bucket_of
@@ -77,16 +83,19 @@ class BmpStreamingIngest:
         # materialize the parsed+deduped batch ONCE; bucket pruning,
         # the log write, and the state write all reuse it instead of
         # re-running the parse stage per job
-        src = ingest.prepare_unicast_prefix(batch).localCheckpoint()
+        src = ingest.prepare_unicast_prefix(batch)
         if self.rib_buckets:
-            # bucket pruning: one cheap distinct over the batch keys
-            # tells us which state buckets the merge can touch (the
-            # lakehouse MERGE file-pruning step)
-            touched = [r[0] for r in src.select(
-                bucket_of(self.RIB_KEY, self.rib_buckets).alias("b"))
-                .distinct().collect()]
+            # bucket pruning (the lakehouse MERGE file-pruning step):
+            # the state buckets the batch keys touch, at most
+            # rib_buckets of them, observed in the materializing job
+            obs = Observation()
+            src = src.observe(obs, F.collect_set(
+                bucket_of(self.RIB_KEY, self.rib_buckets)).alias("b")
+            ).localCheckpoint()
+            touched = sorted(obs.get["b"])
             state = self.store.read_buckets("ip_rib", touched)
         else:
+            src = src.localCheckpoint()
             state = self.store.read("ip_rib")
         # materialize the merge join once: the txn writes BOTH log
         # and state, which would otherwise each re-run the full-outer

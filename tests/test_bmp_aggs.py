@@ -85,6 +85,143 @@ def test_rpki_irr_enrichment(spark):
     assert rows[("10.3.0.0", 65002)].rpki_origin_as == 65001  # /8 covers it
 
 
+def test_enrich_irr_picks_lowest_origin_then_source(spark):
+    """Several IRR rows for one prefix: the lowest origin_as wins, then
+    the lowest source, whatever order the rows arrive in."""
+    glob = G.merge_global(empty(spark, "global_ip_rib"),
+                          G.consolidate(build_rib(spark), None))
+    schema = ("prefix string, prefix_len short, descr string, "
+              "origin_as long, source string, timestamp timestamp")
+    rows = [("10.1.0.0", 16, "b", 65009, "RADB", ts(0)),
+            ("10.1.0.0", 16, "a", 65001, "RIPE", ts(0)),
+            ("10.3.0.0", 16, "c", 65002, "RIPE", ts(0)),
+            ("10.3.0.0", 16, "d", 65002, "ARIN", ts(0))]
+    for order in (rows, rows[::-1]):
+        irr = spark.createDataFrame(order, schema).repartition(3)
+        got = {r.prefix: (r.irr_origin_as, r.irr_source, r.irr_descr)
+               for r in G.enrich_irr(glob, irr, None).collect()}
+        assert got["10.1.0.0"] == (65001, "RIPE", "a")
+        assert got["10.3.0.0"] == (65002, "ARIN", "d")
+
+
+def _enrich_rpki_join_back(global_rib, rpki, start_time):
+    """The previous enrich_rpki, kept as the reference: an inner
+    containment join of the eligible rows, the max origin per key, and
+    a left join of that aggregate back onto every row."""
+    from obmp_psql_spark.operators.lpm import containment_join128
+
+    eligible = global_rib if start_time is None else \
+        global_rib.filter(F.col("timestamp") >= F.lit(start_time))
+    fam = F.when(F.col("prefix").contains(":"), F.lit(6)).otherwise(F.lit(4))
+    roas = rpki.select(
+        fam.alias("family"), "start_hi", "start_lo", "end_hi", "end_lo",
+        F.col("prefix_len").alias("roa_len"),
+        F.col("prefix_len_max").alias("roa_len_max"),
+        F.col("origin_as").alias("__rpki_as"))
+    probes = eligible.select(
+        "prefix", "recv_origin_as", "prefix_len", fam.alias("__fam"),
+        F.col("prefix_base_hi").alias("__hi"),
+        F.col("prefix_base_lo").alias("__lo"))
+    matched = containment_join128(
+        probes, "__fam", "__hi", "__lo", roas, broadcast=True,
+        extra_pred=(F.col("prefix_len") >= F.col("roa_len"))
+                   & (F.col("prefix_len") <= F.col("roa_len_max")),
+    ).groupBy("prefix", "recv_origin_as") \
+     .agg(F.max("__rpki_as").alias("__rpki_new"))
+    return (
+        global_rib.join(matched, ["prefix", "recv_origin_as"], "left")
+        .withColumn("rpki_origin_as",
+                    F.coalesce(F.col("__rpki_new"), F.col("rpki_origin_as")))
+        .drop("__rpki_new"))
+
+
+def test_enrich_rpki_matches_join_back_reference(spark):
+    """The one-pass enrich_rpki (left containment join + one aggregate)
+    against the join-back version on seeded v4 and v6 ROA sets: nested
+    ROAs, prefix lengths outside [roa_len, roa_len_max], rows too old
+    to be eligible, prior rpki values, and start_time=None."""
+    import ipaddress
+    import random
+
+    from obmp_psql_spark.sources.lookups import _with_bounds
+
+    rnd = random.Random(7)
+    roas = [("10.0.0.0/8", 8, 16, 64500), ("10.1.0.0/16", 16, 24, 64501),
+            ("10.1.2.0/24", 24, 24, 64502), ("10.1.0.0/16", 16, 20, 64599),
+            ("2001:db8::/32", 32, 48, 64600),
+            ("2001:db8:1::/48", 48, 64, 64601),
+            ("2001:db8:1:2::/64", 64, 64, 64602)]
+    for _ in range(40):
+        if rnd.random() < 0.5:
+            plen = rnd.randint(8, 24)
+            net = ipaddress.ip_network(
+                (rnd.choice([10 << 24, 172 << 24]) | rnd.getrandbits(24),
+                 plen), strict=False)
+        else:
+            plen = rnd.randint(32, 64)
+            net = ipaddress.ip_network(
+                ((0x20010db8 << 96) | (rnd.getrandbits(32) << 64), plen),
+                strict=False)
+        roas.append((str(net), plen, min(plen + rnd.randint(0, 8),
+                                         128 if net.version == 6 else 32),
+                     64700 + rnd.randint(0, 50)))
+    rpki = _with_bounds(spark.createDataFrame(
+        [r + (ts(0),) for r in roas],
+        "prefix string, prefix_len short, prefix_len_max short, "
+        "origin_as long, timestamp timestamp"), "prefix").drop("masklen")
+
+    rows = []
+    for i in range(300):
+        if rnd.random() < 0.5:
+            plen = rnd.randint(8, 32)
+            net = ipaddress.ip_network(
+                (rnd.choice([10 << 24, 10 << 24 | 1 << 16, 172 << 24])
+                 | rnd.getrandbits(16), plen), strict=False)
+        else:
+            plen = rnd.randint(24, 80)
+            net = ipaddress.ip_network(
+                ((0x20010db8 << 96) | (rnd.choice([1, 2, 77]) << 80)
+                 | (rnd.getrandbits(16) << 64), plen), strict=False)
+        rows.append((str(net), str(net.network_address), plen,
+                     65000 + i % 7, ts(rnd.randint(0, 9)),
+                     rnd.choice([None, None, 1, 64501])))
+    seeds = _with_bounds(spark.createDataFrame(
+        rows, "ip string, addr string, plen short, origin long, "
+              "t timestamp, rpki long"), "ip")
+    glob = seeds.select(
+        F.col("addr").alias("prefix"), F.col("plen").alias("prefix_len"),
+        F.col("origin").alias("recv_origin_as"),
+        F.lit(False).alias("is_withdrawn"), F.col("t").alias("timestamp"),
+        F.col("t").alias("first_added_timestamp"),
+        *(F.lit(1).cast("long").alias(c) for c in
+          ("num_peers", "advertising_peers", "withdrawn_peers")),
+        F.lit(None).cast("long").alias("irr_origin_as"),
+        F.lit(None).cast("string").alias("irr_source"),
+        F.lit(None).cast("string").alias("irr_descr"),
+        F.col("rpki").alias("rpki_origin_as"),
+        "prefix_start", "prefix_end",
+        F.col("start_hi").alias("prefix_base_hi"),
+        F.col("start_lo").alias("prefix_base_lo"),
+    ).dropDuplicates(["prefix", "recv_origin_as"]).cache()
+
+    def by_key(df):
+        return sorted(df.collect(),
+                      key=lambda r: (r.prefix, r.recv_origin_as))
+
+    before = by_key(glob)
+    for start in (None, ts(5)):
+        got = G.enrich_rpki(glob, rpki, start)
+        assert got.columns == glob.columns
+        # the join back put the key columns first
+        got = by_key(got)
+        want = by_key(_enrich_rpki_join_back(glob, rpki, start)
+                      .select(*glob.columns))
+        assert got == want and len(got) == len(before)
+        changed = sum(a.rpki_origin_as != b.rpki_origin_as
+                      for a, b in zip(got, before))
+        assert changed > 20  # the seed exercises the match path
+
+
 def test_chg_stats_match_duckdb_oracle(spark):
     """Scenario 11: buckets across >=3 intervals, DuckDB implements
     the reference SQL (2_aggregations.sql:91-130) as the oracle."""

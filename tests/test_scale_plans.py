@@ -344,6 +344,67 @@ def test_dedup_queries_py4j_round_trip_ceiling(spark, monkeypatch):
         assert trips <= ceiling, f"{name}: {trips} round trips > {ceiling}"
 
 
+def _jobs_recorded(spark) -> int:
+    """Spark jobs the status store has recorded so far: the newest job
+    id plus one. The store keeps only the newest jobs (``retainedJobs``),
+    so the length of its list stops growing in a long session."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() + 1 if jobs.size() else 0
+
+
+def test_cron_cycle_job_ceiling(spark, tmp_path):
+    """Job-count pin for one cold cron cycle (chg stats, the first
+    bucketed global-RIB consolidation with IRR and RPKI enrichment,
+    peer RIB counts, origin stats) on a small streaming-ingested store
+    (host independent). Measured 18 jobs, 7 of them in run_global_rib:
+    empty stats and bucket reads plan as empty LocalRelations Catalyst
+    prunes, each table reads as one relation, the consolidation runs
+    one exchange, the touched buckets are observed in the slice's
+    checkpoint, and the RPKI aggregate clusters on the bucket shuffle
+    the write reuses. The previous plans ran 35 jobs (14 in
+    run_global_rib); the ceilings add 2 and 1."""
+    from obmp_psql_spark.jobs import JobRunner
+    from obmp_psql_spark.schemas import TABLE_SCHEMAS
+    from obmp_psql_spark.state import TxnStateStore
+    from obmp_psql_spark.streaming.pipeline import BmpStreamingIngest
+
+    from .test_bmp_ingest import msgs, ts, upx
+
+    store = TxnStateStore(spark, str(tmp_path / "store"))
+    ing = BmpStreamingIngest(spark, store, rib_buckets=4)
+    ing.unicast_prefix_batch(msgs(spark, "unicast_prefix", [
+        upx("add", f"h{i}", f"p{i % 3}", f"a{i}", ts(0, i),
+            prefix=f"10.{i % 20}.0.0", origin=65000 + i % 4)
+        for i in range(60)]), 0)
+    ing.unicast_prefix_batch(msgs(spark, "unicast_prefix", [
+        upx("del" if i % 2 else "add", f"h{i}", f"p{i % 3}", f"b{i}",
+            ts(2, i), prefix=f"10.{i % 20}.0.0", origin=65000 + i % 4)
+        for i in range(0, 60, 3)]), 1)
+    store.overwrite("info_route", spark.createDataFrame(
+        [(f"10.{i}.0.0", 16, f"net-{i}", 65000 + i % 4, "RADB", ts(0))
+         for i in range(10)], TABLE_SCHEMAS["info_route"]))
+    store.overwrite("rpki_validator", spark.createDataFrame(
+        [("10.0.0.0/8", 8, 24, 65001, ts(0), 167772160, 184549375,
+          0, 167772160, 0, 184549375)], TABLE_SCHEMAS["rpki_validator"]))
+
+    runner, now = JobRunner(store), ts(4)
+    calls = [("chg_stats", lambda: runner.run_chg_stats(now=now)),
+             ("global_rib", lambda: runner.run_global_rib(now=now, buckets=4)),
+             ("peer_rib_counts", lambda: runner.run_peer_rib_counts(now=now)),
+             ("origin_stats", lambda: runner.run_origin_stats(now=now))]
+    jobs = {}
+    for name, call in calls:
+        before = _jobs_recorded(spark)
+        call()
+        jobs[name] = _jobs_recorded(spark) - before
+    assert sum(jobs.values()) <= 20, jobs
+    assert jobs["global_rib"] <= 8, jobs
+    assert store.read("global_ip_rib").count() == 20
+    assert store.read("stats_chg_bypeer").count() > 0
+
+
 @pytest.mark.parametrize("case", [
     test_connected_components_path_graph,
     test_bucket_star_edges_match_pair_components,
@@ -1185,13 +1246,14 @@ def test_gates_never_set_the_shared_session_partitions(spark, monkeypatch):
 
 
 def test_enrich_rpki_matched_join_is_size_gated(spark):
-    """enrich_rpki must not force-broadcast the MATCHED aggregate:
-    it is bounded by the eligible rib slice (the whole global rib
-    after a full sync), not by the ROA dim. The only forced broadcast
-    in the plan is the bounded ROA band table inside the containment
-    join; the final left join must fall back to a shuffle join when
-    the matched side is over threshold."""
+    """enrich_rpki must never force-broadcast a global-sized side. The
+    only broadcast in the plan is the bounded ROA band table, built on
+    the right of the one left containment join (the rows stream); the
+    matches fold back into each row through an aggregate, with no join
+    back of a matched aggregate that could be broadcast. Threshold
+    shrunk to 1KB, so nothing else is small enough to broadcast."""
     import datetime as dt
+    import re
 
     from obmp_psql_spark.operators import global_rib as G
     from obmp_psql_spark.schemas import TABLE_SCHEMAS
@@ -1216,10 +1278,10 @@ def test_enrich_rpki_matched_join_is_size_gated(spark):
         plan = out._jdf.queryExecution().executedPlan().toString()
         # exactly one forced broadcast: the exploded ROA band table
         assert plan.count("BroadcastExchange") == 1
-        # the matched-aggregate left join shuffles instead
-        import re
-        assert re.search(r"(SortMergeJoin|ShuffledHashJoin) .*LeftOuter",
-                         plan)
+        assert re.search(r"BroadcastHashJoin .*LeftOuter, BuildRight", plan)
+        # the band table, not the rows, sits under the broadcast
+        assert "Generate explode" in plan.split("BroadcastExchange")[1]
+        assert len(re.findall(r"Join ", plan)) == 1  # no join back
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold",

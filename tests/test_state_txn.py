@@ -1002,3 +1002,51 @@ def test_bucket_generations_with_added_column_read_as_union(spark, tmp_path):
     fresh = {r["id"] for r in store.read_buckets("b", touched).collect()}
     assert set(got) == set(range(16)) and fresh
     assert all(got[i] == (i * 2.0 if i in fresh else None) for i in got)
+
+
+def test_table_reads_as_one_relation_equal_to_per_dir_union(spark, tmp_path):
+    """A replace dir and several append dirs, one of them with an added
+    column, read as ONE parquet relation (no Union in the plan) with
+    the same rows as a ``unionByName`` of one read per dir."""
+    store = TxnStateStore(spark, str(tmp_path / "s"))
+    store.overwrite("t", spark.createDataFrame(
+        [(1, "a"), (2, "b")], "id long, s string"))
+    store.append("t", spark.createDataFrame([(3, "c")], "id long, s string"))
+    store.append("t", spark.createDataFrame(
+        [(4, "d", 9.5), (5, None, None)], "id long, s string, score double"))
+    store.append("t", spark.createDataFrame([(6, "f")], "id long, s string"))
+    tab = store.snapshot().tables["t"]
+    dirs = [tab["replace"]] + tab["appends"]
+    assert len(dirs) == 4
+    union = None
+    for d in dirs:
+        one = store._parquet(tab, [d], [store._abs(d)])
+        union = one if union is None else \
+            union.unionByName(one, allowMissingColumns=True)
+    got = store.read("t")
+    assert "Union" not in got._jdf.queryExecution().optimizedPlan().toString()
+    assert got.columns == union.columns == ["id", "s", "score"]
+    assert sorted(map(repr, got.collect())) == \
+        sorted(map(repr, union.collect()))
+    assert got.filter("score IS NULL").count() == 5
+
+
+def test_never_written_table_plans_as_empty_local_relation(spark, tmp_path):
+    """A never-written table reads as an empty LocalRelation, so a
+    merge_replace into it plans no join and no union: Catalyst prunes
+    the anti-join against the empty side."""
+    from obmp_psql_spark.operators.rollup import merge_replace
+
+    store = TxnStateStore(spark, str(tmp_path / "s"))
+    cur = store.read("ip_rib")
+    plan = cur._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation <empty>"), plan
+    fresh = spark.range(3).selectExpr(
+        "CAST('2024-01-01' AS TIMESTAMP) AS interval_time",
+        "CAST(id AS STRING) AS peer_hash_id", "id AS v4_prefixes",
+        "id AS v6_prefixes")
+    cur = store.read("t_new", fresh.schema)
+    merged = merge_replace(cur, fresh, ["interval_time", "peer_hash_id"])
+    plan = merged._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan and "Union" not in plan, plan
+    assert merged.count() == 3
